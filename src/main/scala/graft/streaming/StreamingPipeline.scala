@@ -107,9 +107,11 @@ case class FunnelState(machine: FunnelMachine, buf: List[(Long, Long, String)])
   * at-least-once with flush.size record batching
   * (`/root/reference/connectors/s3-sink.json:10-11`); Spark's file sink is
   * exactly-once via the checkpoint + `_spark_metadata` commit log —
-  * strictly stronger. Object sizing is governed per-trigger
-  * (`maxFilesPerTrigger`/`maxOffsetsPerTrigger` + `repartition`) rather
-  * than per-N-records; record-level content is identical.
+  * strictly stronger. [[jsonSinkSizedObjects]] sizes objects like the
+  * Connect sink: one write pass per micro-batch rolls a new object every
+  * N records per Kafka partition, so each partition of a batch becomes a
+  * series of objects of at most N records; record-level content is
+  * identical.
   */
 object StreamingPipeline {
 
@@ -289,13 +291,17 @@ object StreamingPipeline {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
 
-  /** S8 `flush.size` analog: the reference commits one S3 object per N
-    * records (`connectors/s3-sink.json:11`). Spark's file sink commits
-    * per micro-batch; to control object size the same way, foreachBatch
-    * repartitions each batch to ceil(batchRows / recordsPerObject)
-    * files. Object-count parity is approximate (records spread across
-    * partitions), record-level content is identical. Exactly-once is
-    * the [[avroSink]] pattern: each batch OVERWRITES its own
+  /** S8 `flush.size` analog: the reference's S3 sink writes one object
+    * series per topic partition and closes an object every N records
+    * (`connectors/s3-sink.json:11`). Here each micro-batch is ONE write
+    * pass with `maxRecordsPerFile = recordsPerObject`: every write task
+    * (one per Kafka partition of the batch, as long as the upstream plan
+    * does not shuffle) rolls a new object every N records, so a batch
+    * yields `Σ_p ceil(n_p / N)` objects of at most N records, each
+    * holding one partition's records. No count, persist or shuffle runs
+    * per trigger; record-level content is identical. A batch whose rows
+    * are all filtered out leaves at most an empty object. Exactly-once
+    * is the [[avroSink]] pattern: each batch OVERWRITES its own
     * `batch=<id>/` subdirectory, so a micro-batch replayed after a
     * crash-before-checkpoint rewrites its output instead of appending a
     * duplicate copy (a bare `mode("append")` to one directory — the
@@ -305,23 +311,19 @@ object StreamingPipeline {
   def jsonSinkSizedObjects(
       df: DataFrame, outPath: String, checkpoint: String,
       recordsPerObject: Int,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
+      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] = {
+    // 0 would read as "unlimited" under maxRecordsPerFile
+    require(recordsPerObject > 0,
+      s"jsonSinkSizedObjects: recordsPerObject must be > 0, got $recordsPerObject")
     df.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        // persist: count() and write would otherwise each recompute the
-        // micro-batch from the source (double decode per trigger)
-        batch.persist()
-        try {
-          val n = batch.count()
-          if (n > 0) {
-            val files = math.max(1, math.ceil(n.toDouble / recordsPerObject).toInt)
-            batch.repartition(files).write.mode("overwrite")
-              .json(s"$outPath/batch=$batchId")
-          }
-        } finally { batch.unpersist(): Unit }
+        batch.write.mode("overwrite")
+          .option("maxRecordsPerFile", recordsPerObject.toLong)
+          .json(s"$outPath/batch=$batchId")
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
+  }
 
   /** Avro container-file streaming sink: one subdirectory of OCF files
     * per micro-batch (`batch=<id>/part-*.avro`) written through

@@ -529,6 +529,66 @@ class StreamingSpec extends SparkSpec {
     q2.processAllAvailable(); q2.stop()
     assert(spark.read.json(out).count() === 100,
       "a replayed batch must overwrite its own directory, not append")
+
+    // multi-partition case: like Connect's per-topic-partition writer,
+    // each Kafka partition of a batch becomes its own series of objects
+    // of at most N records, never a mix of partitions
+    import graft.sources.KafkaReplay
+    val log = Files.createTempDirectory("graft_sized_log").toString
+    val mOut = Files.createTempDirectory("graft_sized_mp").toString
+    val mCkpt = Files.createTempDirectory("graft_sized_mp_ckpt").toString
+    val perPart = Seq(0 -> 23, 1 -> 50, 2 -> 7, 3 -> 40)
+    val n = 10
+    def append(prefix: String, sizes: Seq[(Int, Int)]): Unit =
+      KafkaReplay.append(log, sizes.flatMap { case (p, k) =>
+        (0 until k).map(i => KafkaReplay.Record(p, s"k$p-$i".getBytes,
+          s"$prefix-$p-$i".getBytes, 1704067200000000L))
+      })
+    def drain(): Unit = {
+      val kept = StreamingPipeline.replayStream(spark, log)
+        .select($"key", $"value".cast("string").as("value"), $"partition", $"offset")
+        .filter($"value".startsWith("keep"))
+      val q = StreamingPipeline.jsonSinkSizedObjects(kept, mOut, mCkpt, n).start()
+      q.processAllAvailable(); q.stop()
+    }
+    append("keep", perPart)
+    drain() // batch 0
+    append("drop", perPart.map { case (p, _) => p -> 5 })
+    drain() // batch 1: every row filtered out
+    val expectedRows = perPart.flatMap { case (p, k) => (0 until k).map(i => (p, i.toLong)) }
+    def checkLayout(): Unit = {
+      val filteredBatch = Option(new java.io.File(mOut, "batch=1").listFiles())
+        .getOrElse(Array.empty).filter(f => f.getName.endsWith(".json") && f.length() > 0)
+      assert(filteredBatch.isEmpty,
+        s"an all-filtered batch must leave no non-empty object: ${filteredBatch.toSeq}")
+      val sunk = spark.read.schema("partition int, offset long").json(mOut)
+      val objects = sunk.groupBy(input_file_name().as("f"))
+        .agg(count(lit(1)).as("rows"), countDistinct($"partition").as("parts"))
+        .as[(String, Long, Long)].collect()
+      assert(objects.forall(_._2 <= n), s"an object holds more than $n records: ${objects.toSeq}")
+      assert(objects.forall(_._3 === 1L), s"an object mixes Kafka partitions: ${objects.toSeq}")
+      assert(objects.length === perPart.map { case (_, k) => (k + n - 1) / n }.sum)
+      val rows = sunk.select($"partition", $"offset").as[(Int, Long)].collect().toSeq
+      assert(rows.sorted === expectedRows.sorted, "every input row exactly once")
+    }
+    checkLayout()
+    // replay batch 0 under its own id, as after a crash before its
+    // commit: drop the commit log and batch 1's offsets, then restart
+    for (f <- Seq("commits/0", "commits/1", "offsets/1")) {
+      assert(new java.io.File(mCkpt, f).delete(), s"no $f in the checkpoint")
+      new java.io.File(mCkpt, f.replaceFirst("/", "/.") + ".crc").delete()
+    }
+    drain()
+    checkLayout()
+  }
+
+  test("flush.size analog rejects a non-positive recordsPerObject") {
+    val stream = MemoryStream[Ev]
+    for (bad <- Seq(0, -1)) {
+      val e = intercept[IllegalArgumentException](StreamingPipeline.jsonSinkSizedObjects(
+        stream.toDF(), "unused", "unused", recordsPerObject = bad))
+      assert(e.getMessage.contains("recordsPerObject"))
+    }
   }
 
   test("checkpointed sink is exactly-once across restarts (ST1)") {
