@@ -1,7 +1,7 @@
 package graft.avro
 
-import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter, FileReader}
-import org.apache.avro.generic.{GenericDatumReader, GenericDatumWriter, GenericRecord}
+import org.apache.avro.file.{CodecFactory, DataFileReader, FileReader}
+import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
 import org.apache.avro.mapred.FsInput
 import org.apache.hadoop.fs.Path
 
@@ -18,12 +18,14 @@ import org.apache.spark.sql.graft.InternalDf
   * the library reads and writes it natively.
   *
   * Scale design:
-  *  - WRITE: one container file per upstream partition, streamed row by
-  *    row through a reused DatumWriter — no driver collect, no shuffle;
-  *    file sizing is controlled by partitioning the input (exactly the
-  *    `flush.size` story, S8). Paths go through the Hadoop FileSystem
-  *    API, so the same call sites write `s3a://` URIs; the session's
-  *    Hadoop conf is broadcast to tasks.
+  *  - WRITE: [[write]] is `df.write.format("graft-avro")` — the one OCF
+  *    writer, [[AvroTable.OcfWriterFactory]]. Each task streams its rows
+  *    into a temp container (no driver collect, no shuffle) and the
+  *    driver commit renames every container into place. The writer's
+  *    `maxRecordsPerFile` option closes a container and opens the next
+  *    every N records per task (the `flush.size` story, S8). Paths go
+  *    through the Hadoop FileSystem API, so the same call sites write
+  *    `s3a://` URIs.
   *  - READ: sync-marker splits, the same contract a built-in FileFormat
   *    gives parquet — each container is planned as `ceil(len /
   *    splitBytes)` byte ranges, a task seeks to the first Avro sync
@@ -48,76 +50,19 @@ object AvroFiles {
     case other => throw new IllegalArgumentException(s"unsupported avro codec: $other")
   }
 
-  /** Write `df` (whose schema must be the columnar layout of
-    * `schemaJson`, i.e. `AvroCodec.sparkStructType(schemaJson)` modulo
-    * nullability) as one `part-NNNNN.avro` container file per non-empty
-    * partition under `outDir` (replaced if present). Returns the row
-    * count written. */
+  /** Write `df` (whose columns must be named and typed as the
+    * columnar layout of `schemaJson`, i.e.
+    * `AvroCodec.sparkStructType(schemaJson)` modulo nullability) as
+    * container files under `outDir`, replacing any `*.avro` already
+    * there: one `part-*.avro` per non-empty partition, through the
+    * `graft-avro` DSv2 writer and its driver-side commit. */
   def write(df: DataFrame, schemaJson: String, outDir: String,
-      codec: String = "deflate", syncIntervalBytes: Int = 64000): Long = {
-    val spark = df.sparkSession
-    val confAccess = InternalDf.hadoopConfAccessor(spark)
-    val dirPath = new Path(outDir)
-    val driverFs = dirPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (driverFs.exists(dirPath)) driverFs.delete(dirPath, true)
-    driverFs.mkdirs(dirPath)
-    val codecName = codec
-    val counts = InternalDf.toInternalRdd(df).mapPartitionsWithIndex { (pid, rows) =>
-      if (!rows.hasNext) Iterator.empty
-      else {
-        val schema = AvroCodec.parsedSchema(schemaJson)
-        // task-commit protocol (r13): stream to an attempt-unique _tmp-
-        // spool and atomically rename on completion — a retried or
-        // speculative duplicate attempt writing the FINAL name directly
-        // would interleave bytes with the original (corrupt container);
-        // with the rename the last finisher wins wholesale, and readers
-        // never see a half-written file (_tmp- is planner-excluded)
-        val attempt = Option(org.apache.spark.TaskContext.get())
-          .map(_.taskAttemptId()).getOrElse(0L)
-        val fs = new Path(outDir).getFileSystem(confAccess())
-        val tmp = new Path(outDir, f"_tmp-part-$pid%05d-$attempt.avro")
-        val fin = new Path(outDir, f"part-$pid%05d.avro")
-        val out = fs.create(tmp, true)
-        val w = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
-        w.setCodec(codecFactory(codecName))
-        w.setSyncInterval(syncIntervalBytes)
-        w.create(schema, out)
-        var n = 0L
-        var ok = false
-        try {
-          while (rows.hasNext) {
-            w.append(AvroCodec.rowToAvro(rows.next(), schema))
-            n += 1
-          }
-          ok = true
-        } finally {
-          w.close()
-          if (ok) {
-            // first-finisher-wins (r14): no pre-delete — deleting then
-            // renaming lets a speculative duplicate B delete A's
-            // COMMITTED file and die before its own rename, silently
-            // losing the partition while Spark records the task done.
-            // Without the delete, a rename onto an existing final file
-            // fails BENIGNLY (a sibling attempt already committed this
-            // partition; our identical _tmp spool is just dropped). A
-            // false return with NO committed file is a real commit
-            // failure and must fail the task, not be ignored — the
-            // classic unchecked-fs.rename Hadoop pitfall.
-            if (!fs.rename(tmp, fin)) {
-              fs.delete(tmp, false)
-              if (!fs.exists(fin))
-                throw new java.io.IOException(
-                  s"avro task commit failed: rename $tmp -> $fin returned " +
-                    "false and no committed file exists")
-            }
-            ()
-          } else { fs.delete(tmp, false); () }
-        }
-        Iterator.single(n)
-      }
-    }.collect()
-    counts.sum
-  }
+      codec: String = "deflate", syncIntervalBytes: Int = 64000): Unit =
+    df.write.format(AvroTable.ShortName).mode("overwrite")
+      .option("avroSchema", schemaJson)
+      .option("codec", codec)
+      .option("syncIntervalBytes", syncIntervalBytes.toLong)
+      .save(outDir)
 
   /** Observable skip accounting for a [[read]] call — the r3 "silent
     * skip" fix. The accumulators fill as the scan executes, surfacing in

@@ -4,6 +4,9 @@ import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.avro.file.{DataFileConstants, DataFileWriter}
+import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -30,8 +33,13 @@ import org.apache.spark.util.SerializableConfiguration
   *  - `permissive` option for the lake-robustness mode (corrupt-header
   *    files skipped, corrupt tails salvaged).
   *
-  * Options: `path` (required), `avroSchema` (reader schema JSON),
-  * `splitBytes`, `permissive`.
+  * Read options: `path` (required), `avroSchema` (reader schema JSON),
+  * `splitBytes`, `permissive`. Write options: `path`, `avroSchema`
+  * (writer schema; derived from the DataFrame when absent), `codec`
+  * (default deflate), `syncIntervalBytes` (default Avro's 64000) and
+  * `maxRecordsPerFile` (records per container per task; default 0,
+  * unlimited). The write side is the library's only OCF writer:
+  * [[AvroFiles.write]] and the streaming `avroSink` both call it.
   */
 object AvroTable {
   val ShortName = "graft-avro"
@@ -125,59 +133,117 @@ object AvroTable {
   // ---------------------------------------------------------------- write
 
   import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
+  import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
-  final case class OcfPartMsg(tmpPath: String, finalName: String, rows: Long)
+  /** Every container one task wrote, as (temp path, final name) pairs. */
+  final case class OcfPartMsg(parts: Seq[(String, String)])
       extends WriterCommitMessage
 
-  /** Task-side part writer: one container per non-empty task, streamed
-    * to a temp name and renamed into place by the driver commit. */
+  /** A numeric write option, or `default` when absent. */
+  private def numOption[T](options: CaseInsensitiveStringMap, name: String,
+      default: T)(parse: String => Option[T]): T =
+    Option(options.get(name)).fold(default)(v => parse(v.trim).getOrElse(
+      throw new IllegalArgumentException(
+        s"$ShortName: option '$name' must be a number, got '$v'")))
+
+  /** Task-side part writer — the library's one OCF container writer.
+    * Rows stream into `_tmp-` containers; the writer closes its
+    * container and opens the next every `maxRecordsPerFile` records
+    * (`<= 0`: one container per non-empty task, Spark's file-source
+    * semantics). The driver commit renames every container the task
+    * reports into place. */
   final case class OcfWriterFactory(path: String, schemaJson: String,
-      codec: String, conf: SerializableConfiguration)
+      codec: String, syncIntervalBytes: Int, maxRecordsPerFile: Long,
+      conf: SerializableConfiguration)
       extends DataWriterFactory {
     override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
+      taskWriter(partitionId, taskId, "_tmp-")
+
+    /** `tmpPrefix` must start with `_tmp-` (planner-excluded). */
+    private[avro] def taskWriter(partitionId: Int, taskId: Long,
+        tmpPrefix: String): DataWriter[InternalRow] =
       new DataWriter[InternalRow] {
-        private val finalName = f"part-$partitionId%05d-$taskId.avro"
-        private val tmp = new org.apache.hadoop.fs.Path(path,
-          s"_tmp-$finalName")
-        private var writer: org.apache.avro.file.DataFileWriter[org.apache.avro.generic.GenericRecord] = _
         private val schema = AvroCodec.parsedSchema(schemaJson)
-        private var n = 0L
-        private def ensureOpen(): Unit = if (writer == null) {
-          val fs = tmp.getFileSystem(conf.value)
-          writer = new org.apache.avro.file.DataFileWriter(
-            new org.apache.avro.generic.GenericDatumWriter[org.apache.avro.generic.GenericRecord](schema))
-          // one codec table (AvroFiles.codecFactory) for every writer:
-          // the inline copy this replaces mapped any unknown name to
-          // deflate, so a typo ("zstd") silently changed the codec
+        private val parts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
+        private var writer: DataFileWriter[GenericRecord] = _
+        private var inFile = 0L
+        private def closeCurrent(): Unit =
+          if (writer != null) { val w = writer; writer = null; w.close() }
+        private def openNext(): Unit = {
+          val name = f"part-$partitionId%05d-$taskId-c${parts.size}%03d.avro"
+          val tmp = new org.apache.hadoop.fs.Path(path, tmpPrefix + name)
+          parts += tmp.toString -> name
+          writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
           writer.setCodec(AvroFiles.codecFactory(codec))
-          writer.create(schema, fs.create(tmp, true))
+          writer.setSyncInterval(syncIntervalBytes)
+          writer.create(schema, tmp.getFileSystem(conf.value).create(tmp, true))
+          inFile = 0L
         }
         override def write(row: InternalRow): Unit = {
-          ensureOpen()
+          if (maxRecordsPerFile > 0 && inFile >= maxRecordsPerFile) closeCurrent()
+          if (writer == null) openNext()
           writer.append(AvroCodec.rowToAvro(row, schema))
-          n += 1
+          inFile += 1
         }
         override def commit(): WriterCommitMessage = {
-          if (writer != null) writer.close()
-          OcfPartMsg(tmp.toString, finalName, n)
+          closeCurrent()
+          OcfPartMsg(parts.toSeq)
         }
-        override def abort(): Unit = {
-          if (writer != null) writer.close()
-          tmp.getFileSystem(conf.value).delete(tmp, false); ()
-        }
-        override def close(): Unit = if (writer != null) writer.close()
+        override def abort(): Unit =
+          try closeCurrent() finally deleteTemps(conf.value, parts.toSeq)
+        override def close(): Unit = closeCurrent()
       }
   }
 
+  /** The streaming face of [[OcfWriterFactory]]. The epoch is in the
+    * temp name (`_tmp-epoch-<e>-part-*`), because a continuous-mode task
+    * keeps one task id across epochs and must not overwrite a temp
+    * container its previous epoch has not committed yet; the epoch
+    * commit maps it back to `batch=<e>/part-*`. */
+  final case class OcfStreamingWriterFactory(factory: OcfWriterFactory)
+      extends StreamingDataWriterFactory {
+    override def createWriter(partitionId: Int, taskId: Long,
+        epochId: Long): DataWriter[InternalRow] =
+      factory.taskWriter(partitionId, taskId, s"_tmp-epoch-$epochId-")
+  }
+
+  /** Every container the tasks' commit messages report. */
+  private def reported(messages: Array[WriterCommitMessage]): Seq[(String, String)] =
+    messages.toSeq.flatMap {
+      case m: OcfPartMsg => m.parts
+      case _ => Nil
+    }
+
+  private def deleteTemps(conf: org.apache.hadoop.conf.Configuration,
+      parts: Seq[(String, String)]): Unit =
+    parts.foreach { case (tmpPath, _) =>
+      val tmp = new org.apache.hadoop.fs.Path(tmpPath)
+      tmp.getFileSystem(conf).delete(tmp, false)
+    }
+
+  /** Rename every reported container into `dir`. A `fs.rename` that
+    * returns false with nothing at the destination fails the commit:
+    * ignoring it silently loses the container (the classic Hadoop
+    * pitfall). Task ids are unique per attempt, so final names never
+    * collide. */
+  private def renameParts(fs: org.apache.hadoop.fs.FileSystem,
+      dir: org.apache.hadoop.fs.Path, parts: Seq[(String, String)]): Unit =
+    parts.foreach { case (tmpPath, name) =>
+      val tmp = new org.apache.hadoop.fs.Path(tmpPath)
+      val dst = new org.apache.hadoop.fs.Path(dir, name)
+      if (!fs.rename(tmp, dst) && !fs.exists(dst))
+        throw new java.io.IOException(s"$ShortName commit rename failed: $tmp -> $dst")
+    }
+
   /** Driver commit: optionally truncate (overwrite mode), then rename
-    * every non-empty part into place — tasks never mutate the visible
+    * every container into place — tasks never mutate the visible
     * layout, so failed/speculative attempts leave only temp files that
     * commit/abort clean up. */
-  final class OcfBatchWrite(path: String, schemaJson: String, codec: String,
+  final class OcfBatchWrite(path: String, factory: OcfWriterFactory,
       truncate: Boolean) extends BatchWrite {
     private def conf = SparkSession.active.sparkContext.hadoopConfiguration
     override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-      OcfWriterFactory(path, schemaJson, codec, new SerializableConfiguration(conf))
+      factory
     override def commit(messages: Array[WriterCommitMessage]): Unit = {
       val dir = new org.apache.hadoop.fs.Path(path)
       val fs = dir.getFileSystem(conf)
@@ -193,60 +259,27 @@ object AvroTable {
         }
         stale.foreach(fs.delete(_, false))
       }
-      messages.collect { case m: OcfPartMsg => m }.foreach { m =>
-        val tmp = new org.apache.hadoop.fs.Path(m.tmpPath)
-        if (m.rows > 0L) {
-          val dst = new org.apache.hadoop.fs.Path(dir, m.finalName)
-          // unchecked fs.rename silently loses the partition (the
-          // classic Hadoop pitfall AvroFiles.write already guards)
-          if (!fs.rename(tmp, dst) && !fs.exists(dst))
-            throw new java.io.IOException(
-              s"batch commit rename failed: $tmp -> $dst")
-        } else fs.delete(tmp, false) // empty task: no zero-record container
-      }
+      renameParts(fs, dir, reported(messages))
     }
-    override def abort(messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      messages.collect { case m: OcfPartMsg => m }
-        .foreach(m => fs.delete(new org.apache.hadoop.fs.Path(m.tmpPath), false))
-    }
+    override def abort(messages: Array[WriterCommitMessage]): Unit =
+      deleteTemps(conf, reported(messages))
   }
 
   /** Streaming half of the writer: per-epoch `batch=<epoch>/` subdirs
-    * (the micro-batch archival layout [[graft.streaming.StreamingPipeline.avroSink]]
-    * established), same spool + rename-on-commit discipline as the batch
-    * writer, plus an `_epochs` ledger so a REPLAYED epoch (restart after
-    * a sink-side failure) is dropped wholesale — exactly-once object
-    * contents without coordination beyond the driver. */
-  final class OcfStreamingWrite(path: String, schemaJson: String, codec: String,
+    * (the micro-batch archival layout of
+    * [[graft.streaming.StreamingPipeline.avroSink]]), the same spool +
+    * rename-on-commit discipline as the batch writer, plus an `_epochs`
+    * ledger so a REPLAYED epoch (restart after a sink-side failure) is
+    * dropped wholesale — exactly-once object contents without
+    * coordination beyond the driver. */
+  final class OcfStreamingWrite(path: String, factory: OcfWriterFactory,
       queryId: String = "")
-      extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-    import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
+      extends StreamingWrite {
     private def conf = SparkSession.active.sparkContext.hadoopConfiguration
 
     override def createStreamingWriterFactory(
-        info: PhysicalWriteInfo): StreamingDataWriterFactory = {
-      val batchFactory =
-        OcfWriterFactory(path, schemaJson, codec, new SerializableConfiguration(conf))
-      new StreamingDataWriterFactory {
-        override def createWriter(partitionId: Int, taskId: Long,
-            epochId: Long): DataWriter[InternalRow] =
-          // reuse the batch spool writer; the epoch lands in the part name
-          // so concurrent epochs (continuous retries) never collide
-          batchFactory.createWriter(partitionId, taskId) match {
-            case w => new DataWriter[InternalRow] {
-              override def write(r: InternalRow): Unit = w.write(r)
-              override def commit(): WriterCommitMessage = w.commit() match {
-                case OcfPartMsg(tmp, name, n) =>
-                  OcfPartMsg(tmp, s"epoch-$epochId-$name", n)
-                case m => m
-              }
-              override def abort(): Unit = w.abort()
-              override def close(): Unit = w.close()
-            }
-          }
-      }
-    }
+        info: PhysicalWriteInfo): StreamingDataWriterFactory =
+      OcfStreamingWriterFactory(factory)
 
     private def epochsPath = new org.apache.hadoop.fs.Path(path, "_epochs")
 
@@ -309,7 +342,7 @@ object AvroTable {
     private def commitLocked(dir: org.apache.hadoop.fs.Path,
         fs: org.apache.hadoop.fs.FileSystem, epochId: Long,
         messages: Array[WriterCommitMessage]): Unit = {
-      val parts = messages.collect { case m: OcfPartMsg => m }
+      val parts = reported(messages)
       // QUERY-scoped ledger (r14, the KafkaReplay r13 fix applied to
       // this sink too): bare epoch ids made a fresh-checkpoint rerun
       // SILENTLY DROP its first epochs (its batch 0 matched the dead
@@ -325,8 +358,7 @@ object AvroTable {
       val ledgerKey = s"$queryId:$epochId"
       val scoped = committedLines(fs).filter(_.contains(':'))
       if (scoped.contains(ledgerKey)) {
-        parts.foreach(m =>
-          fs.delete(new org.apache.hadoop.fs.Path(m.tmpPath), false))
+        deleteTemps(conf, parts)
         return
       }
       // incarnation sweep — UN-LEDGERED dirs above this epoch only:
@@ -351,30 +383,16 @@ object AvroTable {
       // two attempts' parts carry different task ids (different final
       // names), so a bare re-rename would leave BOTH attempts' files —
       // duplicated rows. The epoch owns its directory: rewrite it
-      // wholesale, exactly like the foreachBatch avroSink pattern.
+      // wholesale.
       if (fs.exists(epochDir)) fs.delete(epochDir, true)
       fs.mkdirs(epochDir)
-      parts.foreach { m =>
-        val tmp = new org.apache.hadoop.fs.Path(m.tmpPath)
-        if (m.rows > 0L) {
-          val dst = new org.apache.hadoop.fs.Path(epochDir,
-            m.finalName.stripPrefix(s"epoch-$epochId-"))
-          // unchecked fs.rename silently loses the partition (the
-          // classic Hadoop pitfall AvroFiles.write already guards)
-          if (!fs.rename(tmp, dst) && !fs.exists(dst))
-            throw new java.io.IOException(
-              s"epoch commit rename failed: $tmp -> $dst")
-        } else fs.delete(tmp, false)
-      }
+      renameParts(fs, epochDir, parts)
       writeLedger(dir, fs, scoped + ledgerKey)
     }
 
     override def abort(epochId: Long,
-        messages: Array[WriterCommitMessage]): Unit = {
-      val fs = new org.apache.hadoop.fs.Path(path).getFileSystem(conf)
-      messages.collect { case m: OcfPartMsg => m }
-        .foreach(m => fs.delete(new org.apache.hadoop.fs.Path(m.tmpPath), false))
-    }
+        messages: Array[WriterCommitMessage]): Unit =
+      deleteTemps(conf, reported(messages))
   }
 
   final class OcfTable(path: String, readerSchemaJson: String)
@@ -395,16 +413,23 @@ object AvroTable {
           with org.apache.spark.sql.connector.write.SupportsTruncate {
         private var doTruncate = false
         override def truncate(): WriteBuilder = { doTruncate = true; this }
-        override def build(): Write = new Write {
-          private def json = Option(info.options.get("avroSchema"))
-            .getOrElse(AvroCodec.avroSchemaJson(info.schema(), "Record", "graft"))
-          private def target = Option(info.options.get("path")).getOrElse(path)
-          private def codec = Option(info.options.get("codec")).getOrElse("deflate")
-          override def toBatch: BatchWrite =
-            new OcfBatchWrite(target, json, codec, doTruncate)
-          override def toStreaming
-              : org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-            new OcfStreamingWrite(target, json, codec, info.queryId())
+        override def build(): Write = {
+          val o = info.options
+          val target = Option(o.get("path")).getOrElse(path)
+          val factory = OcfWriterFactory(target,
+            Option(o.get("avroSchema"))
+              .getOrElse(AvroCodec.avroSchemaJson(info.schema(), "Record", "graft")),
+            Option(o.get("codec")).getOrElse("deflate"),
+            numOption(o, "syncIntervalBytes", DataFileConstants.DEFAULT_SYNC_INTERVAL)(_.toIntOption),
+            numOption(o, "maxRecordsPerFile", 0L)(_.toLongOption),
+            new SerializableConfiguration(
+              SparkSession.active.sparkContext.hadoopConfiguration))
+          new Write {
+            override def toBatch: BatchWrite =
+              new OcfBatchWrite(target, factory, doTruncate)
+            override def toStreaming: StreamingWrite =
+              new OcfStreamingWrite(target, factory, info.queryId())
+          }
         }
       }
   }

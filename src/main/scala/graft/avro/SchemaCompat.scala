@@ -76,7 +76,7 @@ object SchemaCompat {
 
   /** `(parent location segments, branch index)` when the location's LAST
     * segment is a union branch index — probe-measured against avro-1.12
-    * (dev/CompatProbe, r17): per-branch mismatch entries carry the
+    * (BENCH_NOTES.md, r17): per-branch mismatch entries carry the
     * WRITER union's branch index as their trailing segment
     * (`/fields/0/type/1` = writer branch 1), while field indexes follow
     * the READER's field order. */

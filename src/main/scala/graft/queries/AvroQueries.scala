@@ -392,7 +392,7 @@ object AvroQueries {
   /** Scratch dir for the container-file queries, keyed by the testdata
     * dir so concurrent Verify runs at different scale factors never
     * collide; each query owns its own subdir (AvroFiles.write replaces
-    * it wholesale, so reruns are self-cleaning). */
+    * its containers, so reruns are self-cleaning). */
   private def ocfDir(dir: String, sub: String): String =
     new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
       s"graft_ocf_${Integer.toHexString(dir.hashCode)}"), sub).toString

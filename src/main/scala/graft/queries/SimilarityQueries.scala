@@ -202,7 +202,7 @@ object SimilarityQueries {
     * The brute-force cross join survives as `sim_neardup_exact_check`
     * (the verification baseline; it dies at 100× scale). */
   /** The static 6×3 banding's declared envelope: measured candidate
-    * mass is 95.6k at sf0.01 and 1.52M at sf0.1 (ScaleTime, r4) —
+    * mass is 95.6k at sf0.01 and 1.52M at sf0.1 (BENCH_NOTES.md, r4) —
     * per-vector mass quadruples when the corpus does, so a ~2× corpus
     * trips this budget and fails LOUDLY with the autoBitsPerBand
     * suggestion instead of silently going quadratic (at 100× the fixed

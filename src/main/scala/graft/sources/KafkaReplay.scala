@@ -66,6 +66,17 @@ object KafkaReplay {
     }.toSeq.sorted
   }
 
+  /** Write one log frame: `[offset i64][tsMicros i64][keyLen i32][key]
+    * [valLen i32][value]`, `len = -1` for a null key/value. The one
+    * encoder of the on-disk format. */
+  private def writeFrame(out: DataOutputStream, offset: Long, tsMicros: Long,
+      key: Array[Byte], value: Array[Byte]): Unit = {
+    out.writeLong(offset)
+    out.writeLong(tsMicros)
+    if (key == null) out.writeInt(-1) else { out.writeInt(key.length); out.write(key) }
+    if (value == null) out.writeInt(-1) else { out.writeInt(value.length); out.write(value) }
+  }
+
   /** Append records to the log at `path` (creating it if absent),
     * continuing each partition's offset sequence — the producer side of
     * the replay contract. Runs under the same commit lock + crash
@@ -89,12 +100,7 @@ object KafkaReplay {
           new FileOutputStream(f, true)))
         var primary: Throwable = null
         try recs.foreach { r =>
-          out.writeLong(next); next += 1
-          out.writeLong(r.tsMicros)
-          if (r.key == null) out.writeInt(-1)
-          else { out.writeInt(r.key.length); out.write(r.key) }
-          if (r.value == null) out.writeInt(-1)
-          else { out.writeInt(r.value.length); out.write(r.value) }
+          writeFrame(out, next, r.tsMicros, r.key, r.value); next += 1
         } catch { case t: Throwable => primary = t } finally {
           // close() flushes — a flush failure must propagate so the
           // manifest survives and the torn bytes are truncated away
@@ -165,12 +171,9 @@ object KafkaReplay {
               out = new DataOutputStream(new BufferedOutputStream(
                 new FileOutputStream(tmp, false)))
             }
-            out.writeLong(next); next += 1
-            out.writeLong(r.getLong(3))
-            val k = r.getAs[Array[Byte]](1)
-            if (k == null) out.writeInt(-1) else { out.writeInt(k.length); out.write(k) }
-            val v = r.getAs[Array[Byte]](2)
-            if (v == null) out.writeInt(-1) else { out.writeInt(v.length); out.write(v) }
+            writeFrame(out, next, r.getLong(3),
+              r.getAs[Array[Byte]](1), r.getAs[Array[Byte]](2))
+            next += 1
           }
           finishCurrent()
         } finally if (out != null) { out.close(); tmp.delete(); () }
@@ -390,19 +393,27 @@ object KafkaReplay {
       java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
   }
 
-  private[graft] def recoverTornAppend(dir: File): Unit = {
-    val mf = new File(dir, InflightName)
-    if (!mf.exists()) return
+  /** Parse a `_commit.inflight` manifest: its ledger key and every
+    * listed log's pre-append byte length. Throws the read's
+    * IOException — each caller decides what a vanished manifest means. */
+  private def readInflight(mf: File): (Option[String], Map[Int, Long]) = {
     val src = scala.io.Source.fromFile(mf)
     val lines =
       try src.getLines().map(_.trim).filter(_.nonEmpty).toList
       finally src.close()
     val key = lines.collectFirst {
       case l if l.startsWith("key ") => l.stripPrefix("key ") }
+    val lengths = lines.collect { case l if !l.startsWith("key ") =>
+      val parts = l.split(" "); (parts(0).toInt, parts(1).toLong) }.toMap
+    (key, lengths)
+  }
+
+  private[graft] def recoverTornAppend(dir: File): Unit = {
+    val mf = new File(dir, InflightName)
+    if (!mf.exists()) return
+    val (key, listed) = readInflight(mf)
     val committed = key.exists(k => committedEpochs(dir).contains(k))
     if (!committed) {
-      val listed = lines.collect { case l if !l.startsWith("key ") =>
-        val parts = l.split(" "); (parts(0).toInt, parts(1).toLong) }.toMap
       listPartitions(dir).foreach { p =>
         val f = partFile(dir, p)
         listed.get(p) match {
@@ -453,11 +464,7 @@ object KafkaReplay {
               })
               val off = nexts(p)
               nexts(p) = off + 1
-              out.writeLong(off); out.writeLong(ts)
-              if (k == null) out.writeInt(-1)
-              else { out.writeInt(k.length); out.write(k) }
-              if (v == null) out.writeInt(-1)
-              else { out.writeInt(v.length); out.write(v) }
+              writeFrame(out, off, ts, k, v)
             }
           } catch { case _: EOFException => }
           finally in.close()
@@ -497,17 +504,11 @@ object KafkaReplay {
   private def uncommittedCaps(dir: File): Option[Map[Int, Long]] = {
     val mf = new File(dir, InflightName)
     if (!mf.exists()) return None
-    val lines =
-      try {
-        val src = scala.io.Source.fromFile(mf)
-        try src.getLines().map(_.trim).filter(_.nonEmpty).toList
-        finally src.close()
-      } catch { case _: java.io.IOException => return None } // raced its delete
-    val key = lines.collectFirst {
-      case l if l.startsWith("key ") => l.stripPrefix("key ") }
+    val (key, caps) =
+      try readInflight(mf)
+      catch { case _: java.io.IOException => return None } // raced its delete
     if (key.exists(k => committedEpochs(dir).contains(k))) None
-    else Some(lines.collect { case l if !l.startsWith("key ") =>
-      val parts = l.split(" "); (parts(0).toInt, parts(1).toLong) }.toMap)
+    else Some(caps)
   }
 
   /** Per-partition end offsets (exclusive) — the broker's "latest".

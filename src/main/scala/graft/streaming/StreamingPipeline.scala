@@ -301,13 +301,13 @@ object StreamingPipeline {
     * holding one partition's records. No count, persist or shuffle runs
     * per trigger; record-level content is identical. A batch whose rows
     * are all filtered out leaves at most an empty object. Exactly-once
-    * is the [[avroSink]] pattern: each batch OVERWRITES its own
-    * `batch=<id>/` subdirectory, so a micro-batch replayed after a
-    * crash-before-checkpoint rewrites its output instead of appending a
-    * duplicate copy (a bare `mode("append")` to one directory — the
-    * pre-r13 form — double-writes exactly then). Readers glob the
-    * directory tree; the `batch` path segment surfaces as a partition
-    * column and is not part of the record payload. */
+    * comes from the per-batch directory, as in [[avroSink]]: each batch
+    * OVERWRITES its own `batch=<id>/` subdirectory, so a micro-batch
+    * replayed after a crash-before-checkpoint rewrites its output
+    * instead of appending a duplicate copy (a bare `mode("append")` to
+    * one directory — the pre-r13 form — double-writes exactly then).
+    * Readers glob the directory tree; the `batch` path segment surfaces
+    * as a partition column and is not part of the record payload. */
   def jsonSinkSizedObjects(
       df: DataFrame, outPath: String, checkpoint: String,
       recordsPerObject: Int,
@@ -325,34 +325,32 @@ object StreamingPipeline {
       .trigger(trigger)
   }
 
-  /** Avro container-file streaming sink: one subdirectory of OCF files
-    * per micro-batch (`batch=<id>/part-*.avro`) written through
-    * [[graft.avro.AvroFiles]]. A replayed batch (restart before the
-    * checkpoint commit) rewrites its OWN subdirectory wholesale, so
-    * object contents are exactly-once without a commit log — the
-    * idempotent-overwrite delivery pattern. `recordsPerObject > 0`
-    * sizes files per the flush.size story (S8). */
+  /** Avro container-file streaming sink: `writeStream.format("graft-avro")`,
+    * one subdirectory of OCF containers per micro-batch
+    * (`batch=<id>/part-*.avro`). The epoch commit renames the batch's
+    * containers into its own subdirectory and ledgers the epoch in
+    * `_epochs` at the sink root, so a batch replayed after a restart
+    * rewrites its `batch=<id>/` wholesale (or is skipped when already
+    * ledgered): exactly-once object contents. `recordsPerObject > 0`
+    * is the writer's `maxRecordsPerFile` (the flush.size story, S8):
+    * every write task rolls a new container each N records, so a batch
+    * yields `Σ_p ceil(n_p / N)` containers of at most N records, one
+    * series per upstream partition. `0` leaves containers unsized (one
+    * per non-empty task); a batch whose rows are all filtered out may
+    * leave an empty `batch=<id>/`. */
   def avroSink(
       df: DataFrame, schemaJson: String, outPath: String, checkpoint: String,
       recordsPerObject: Int = 0,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.persist() // count() + write: one source decode, not two
-        try {
-          val n = batch.count()
-          if (n > 0) {
-            val sized =
-              if (recordsPerObject > 0)
-                batch.repartition(math.max(1, math.ceil(n.toDouble / recordsPerObject).toInt))
-              else batch
-            graft.avro.AvroFiles.write(sized.toDF(), schemaJson, s"$outPath/batch=$batchId")
-            ()
-          }
-        } finally { batch.unpersist(): Unit }
-      }
+      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] = {
+    require(recordsPerObject >= 0,
+      s"avroSink: recordsPerObject must be >= 0, got $recordsPerObject")
+    val w = df.writeStream.format(graft.avro.AvroTable.ShortName)
+      .option("path", outPath)
+      .option("avroSchema", schemaJson)
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
+    if (recordsPerObject > 0) w.option("maxRecordsPerFile", recordsPerObject.toLong) else w
+  }
 
   /** The highest committed state version strictly below `before` (a
     * replayed batch must fold from its ORIGINAL predecessor, never from

@@ -198,7 +198,7 @@ object ScaleProbe {
         // ratio depends on how many partitions a pair's term hits span
         // — physical history, shifting between scales (measured: srows
         // x9.8 at k=10 but x111 at k=30 while joinRows x28.2 and
-        // distinct pairs x30.0 stayed exactly linear — FixedQProbe).
+        // distinct pairs x30.0 stayed exactly linear — BENCH_NOTES.md).
         // Repartitioning by doc_id pins every pair's contributions to
         // one task, making the combine scale-invariant: srows x29.9 at
         // k=30. The repartition itself is one linear postings exchange.

@@ -16,6 +16,21 @@ object AvroFilesSpec {
     """{"type": "record", "name": "E", "fields": [
       |  {"name": "id", "type": "long"},
       |  {"name": "name", "type": "string"}]}""".stripMargin
+
+  /** The `id` values of every `*.avro` container directly under `dir`,
+    * one sequence per container (in file-name order). */
+  def containerIds(dir: java.io.File): Seq[Seq[Long]] =
+    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.endsWith(".avro")).sortBy(_.getName).toSeq.map { f =>
+        val r = org.apache.avro.file.DataFileReader.openReader(f,
+          new org.apache.avro.generic.GenericDatumReader[
+            org.apache.avro.generic.GenericRecord]())
+        try {
+          val ids = scala.collection.mutable.ArrayBuffer.empty[Long]
+          while (r.hasNext) ids += r.next().get("id").asInstanceOf[Long]
+          ids.toSeq
+        } finally r.close()
+      }
 }
 
 /** The Avro Object Container File source/sink: round trip, codec
@@ -45,9 +60,9 @@ class AvroFilesSpec extends SparkSpec {
   test("OCF round trip preserves every field including null unions") {
     val df = usersDf(20, 3)
     val dir = tmp()
-    val written = AvroFiles.write(df, schema, dir)
-    assert(written === 20)
+    AvroFiles.write(df, schema, dir)
     val back = AvroFiles.read(spark, dir, schema)
+    assert(back.count() === 20)
     assert(back.schema === df.schema)
     val a = df.collect().map(_.toString).sorted.toSeq
     val b = back.collect().map(_.toString).sorted.toSeq
@@ -176,27 +191,69 @@ class AvroFilesSpec extends SparkSpec {
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
     val out = tmp(); val ckpt = tmp()
     val mem = MemoryStream[OcfEvent]
+    def run(): Unit = graft.streaming.StreamingPipeline
+      .avroSink(mem.toDF().filter(col("name") =!= "drop"),
+        AvroFilesSpec.eventSchemaJson, out, ckpt, recordsPerObject = 2)
+      .start().awaitTermination()
+    def batchDirs(): Seq[String] = new java.io.File(out).listFiles()
+      .filter(_.isDirectory).map(_.getName).sorted.toSeq
+    def readBack(): Seq[OcfEvent] =
+      AvroFiles.read(spark, out, AvroFilesSpec.eventSchemaJson)
+        .as[OcfEvent].collect().sortBy(_.id).toSeq
     mem.addData((1L to 4L).map(i => OcfEvent(i, s"n$i")): _*)
-    val q1 = graft.streaming.StreamingPipeline
-      .avroSink(mem.toDF(), AvroFilesSpec.eventSchemaJson, out, ckpt,
-        recordsPerObject = 2)
-      .start()
-    q1.awaitTermination()
+    run()
     mem.addData(OcfEvent(5L, "n5"))
-    val q2 = graft.streaming.StreamingPipeline
-      .avroSink(mem.toDF(), AvroFilesSpec.eventSchemaJson, out, ckpt,
-        recordsPerObject = 2)
-      .start()
-    q2.awaitTermination()
-    val batchDirs = new java.io.File(out).listFiles().filter(_.isDirectory)
-      .map(_.getName).sorted
-    assert(batchDirs.toSeq === Seq("batch=0", "batch=1"))
+    run()
+    assert(batchDirs() === Seq("batch=0", "batch=1"))
     val files0 = new java.io.File(out, "batch=0").listFiles()
       .filter(_.getName.endsWith(".avro"))
     assert(files0.length === 2) // 4 rows at recordsPerObject=2
-    val back = AvroFiles.read(spark, out, AvroFilesSpec.eventSchemaJson)
-      .as[OcfEvent].collect().sortBy(_.id).toSeq
-    assert(back === (1L to 5L).map(i => OcfEvent(i, s"n$i")))
+    assert(readBack() === (1L to 5L).map(i => OcfEvent(i, s"n$i")))
+    // a multi-partition batch: one MemoryStream block per partition
+    // (3, 1 and 5 rows) -> every task rolls its own container series,
+    // ceil(3/2) + ceil(1/2) + ceil(5/2) = 6 containers of <= 2 records,
+    // each holding one partition's rows
+    val blocks = Seq(10L to 12L, 20L to 20L, 30L to 34L)
+    blocks.foreach(b => mem.addData(b.map(i => OcfEvent(i, s"n$i")): _*))
+    run()
+    val sized = AvroFilesSpec.containerIds(new java.io.File(out, "batch=2"))
+    assert(sized.size === 6, sized)
+    assert(sized.forall(_.size <= 2), sized)
+    assert(sized.forall(ids => ids.map(_ / 10).distinct.size == 1), sized)
+    // a batch whose rows are all filtered out adds no container rows
+    mem.addData(OcfEvent(40L, "drop"), OcfEvent(41L, "drop"))
+    run()
+    val expected = ((1L to 5L) ++ blocks.flatten).map(i => OcfEvent(i, s"n$i"))
+    assert(readBack() === expected)
+    assert(AvroFilesSpec.containerIds(new java.io.File(out, "batch=3"))
+      .forall(_.isEmpty))
+    // restart with nothing new: no new batch dir, no duplicate rows
+    val before = batchDirs()
+    run()
+    assert(batchDirs() === before)
+    assert(readBack() === expected)
+    assert(!new java.io.File(out).listFiles().exists(_.getName.startsWith("_tmp-")))
+  }
+
+  test("streaming OCF sink: recordsPerObject 0 is unsized, negative is rejected") {
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
+      spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
+    val out = tmp(); val ckpt = tmp()
+    val mem = MemoryStream[OcfEvent]
+    val e = intercept[IllegalArgumentException] {
+      graft.streaming.StreamingPipeline.avroSink(mem.toDF(),
+        AvroFilesSpec.eventSchemaJson, out, ckpt, recordsPerObject = -1)
+    }
+    assert(e.getMessage.contains("recordsPerObject"))
+    mem.addData((1L to 5L).map(i => OcfEvent(i, s"n$i")): _*)
+    graft.streaming.StreamingPipeline.avroSink(mem.toDF(),
+        AvroFilesSpec.eventSchemaJson, out, ckpt)
+      .start().awaitTermination()
+    // one block -> one task -> one container holding all five rows
+    assert(AvroFilesSpec.containerIds(new java.io.File(out, "batch=0"))
+      .map(_.size) === Seq(5))
   }
 
   test("registry OCF queries run and agree with the wire-path fixture") {
@@ -268,8 +325,9 @@ class AvroFilesSpec extends SparkSpec {
       StructField("member1", DecimalType(6, 2), nullable = true))))
     val df = ltDf(12)
     val dir = tmp()
-    assert(AvroFiles.write(df, ltSchemaJson, dir) === 12)
+    AvroFiles.write(df, ltSchemaJson, dir)
     val back = AvroFiles.read(spark, dir, ltSchemaJson)
+    assert(back.count() === 12)
     assert(back.schema === df.schema)
     assert(back.collect().map(_.toString).sorted.toSeq ===
       df.collect().map(_.toString).sorted.toSeq)

@@ -149,6 +149,36 @@ class GraftAvroSourceSpec extends SparkSpec {
     assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("_tmp-")))
   }
 
+  test("V2 batch write: maxRecordsPerFile rolls containers within each task") {
+    import spark.implicits._
+    val dir = tmp()
+    // three partitions of 7, 3 and 12 rows; ids carry their partition
+    val sizes = Seq(7, 3, 12)
+    val df = spark.sparkContext.parallelize(sizes.indices, 3)
+      .flatMap(p => (0 until sizes(p)).map(i => (p * 100L + i, s"p$p-$i")))
+      .toDF("id", "name")
+    df.write.format("graft-avro").mode("overwrite")
+      .option("maxRecordsPerFile", 5L).save(dir)
+    val containers = AvroFilesSpec.containerIds(new java.io.File(dir))
+    // ceil(7/5) + ceil(3/5) + ceil(12/5) = 2 + 1 + 3
+    assert(containers.size === 6, containers)
+    assert(containers.forall(c => c.nonEmpty && c.size <= 5), containers)
+    assert(containers.forall(_.map(_ / 100).distinct.size == 1), containers)
+    val back = spark.read.format("graft-avro").load(dir)
+      .as[(Long, String)].collect().sortBy(_._1).toSeq
+    assert(back === df.as[(Long, String)].collect().sortBy(_._1).toSeq)
+    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("_tmp-")))
+  }
+
+  test("V2 write: a non-numeric maxRecordsPerFile fails naming the option") {
+    import spark.implicits._
+    val e = intercept[IllegalArgumentException] {
+      Seq((1L, "a")).toDF("id", "name").write.format("graft-avro")
+        .mode("overwrite").option("maxRecordsPerFile", "ten").save(tmp())
+    }
+    assert(e.getMessage.contains("maxRecordsPerFile"), e.getMessage)
+  }
+
   test("V2 write interoperates with the function surface and nested structs") {
     val dir = tmp()
     val df = usersDf(25, 3)
@@ -272,6 +302,36 @@ class GraftAvroSourceSpec extends SparkSpec {
       s"concurrent committers overlapped inside the archive lock (${maxInside.get()})")
     // and the flock file exists for cross-JVM writers on local paths
     assert(new java.io.File(dir.toUri.getPath, "_commit.lock").exists())
+  }
+
+  test("V2 streaming write: one task id across two uncommitted epochs keeps both") {
+    import graft.avro.AvroTable.{OcfStreamingWrite, OcfStreamingWriterFactory, OcfWriterFactory}
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.unsafe.types.UTF8String
+    import spark.implicits._
+    // a continuous-mode task keeps its task id across epochs: epoch 1's
+    // writer must not overwrite epoch 0's temp container before the
+    // driver has committed epoch 0
+    val dir = tmp()
+    val factory = OcfWriterFactory(dir, AvroFilesSpec.eventSchemaJson,
+      "null", 64000, 0L, new org.apache.spark.util.SerializableConfiguration(
+        spark.sparkContext.hadoopConfiguration))
+    def epoch(e: Long, ids: Seq[Long]) = {
+      val w = OcfStreamingWriterFactory(factory).createWriter(0, 7L, e)
+      ids.foreach(i => w.write(InternalRow(i, UTF8String.fromString(s"n$i"))))
+      try w.commit() finally w.close()
+    }
+    val m0 = epoch(0L, Seq(1L, 2L, 3L))
+    val m1 = epoch(1L, Seq(4L, 5L))
+    val sink = new OcfStreamingWrite(dir, factory, "q")
+    sink.commit(0L, Array(m0))
+    sink.commit(1L, Array(m1))
+    def ids(batch: String) =
+      AvroFilesSpec.containerIds(new java.io.File(dir, batch)).flatten
+    assert(ids("batch=0") === Seq(1L, 2L, 3L))
+    assert(ids("batch=1") === Seq(4L, 5L))
+    assert(spark.read.format("graft-avro").load(dir).as[(Long, String)]
+      .collect().map(_._1).sorted.toSeq === (1L to 5L))
   }
 
   test("empty/absent paths fail with a clear message unless a schema is given") {

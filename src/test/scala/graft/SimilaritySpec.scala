@@ -215,7 +215,7 @@ class SimilaritySpec extends SparkSpec {
   }
 
   test("synthetic 10x growth: auto banding holds per-vector candidate mass ~flat") {
-    // deterministic md5-derived 64-dim corpus (ScaleTime's generator) at
+    // deterministic md5-derived 64-dim corpus (BENCH_NOTES.md, round 5) at
     // n=2k and n=20k — the committed receipt behind the BENCH_NOTES
     // static-vs-auto table, kept green so the scaling law can't regress
     import org.apache.spark.sql.functions.{col, expr}
