@@ -16,6 +16,13 @@ import org.apache.spark.sql.SparkSession
   *    `events.ts` as TIMESTAMP(NANOS); the flag is a no-op on the
   *    current TIMESTAMP(MICROS) files — see [[Tables.nanosAsLongKey]]
   *    and the dtype-adaptive [[Tables.normalizeEventTs]]).
+  *  - `file:` bound to [[NoForkLocalFileSystem]] / [[NoForkLocalFs]]:
+  *    the stock local filesystem forks `chmod` per created file or
+  *    directory, `readlink` per checkpoint rename and `ls -ld` per
+  *    `listFiles` entry when the Hadoop native library is absent; these
+  *    do the same through `java.nio`. Same checksums, `.crc` files,
+  *    modes and renames. Only `file:` is rebound; `s3a:`/`hdfs:` keep
+  *    their own classes.
   */
 object GraftSession {
 
@@ -44,12 +51,16 @@ object GraftSession {
         sys.env.getOrElse("SPARK_GRAFT_MIN_COALESCE", (64 * 1024).toString))
       .config("spark.sql.session.timeZone", "UTC")
       .config(Tables.nanosAsLongKey, "true")
-      // Checkpoint file checksums (4.1 default-on) route every state
-      // file through RawLocalFileSystem.getFileLinkStatus, which forks
-      // a `readlink` SHELL per file on local filesystems — a RocksDB
-      // transformWithState spec went from minutes-stuck to seconds with
-      // this off. The feature targets object-store corruption detection;
-      // on a real deployment's DFS checkpoint dir, re-enable it.
+      .config("spark.hadoop.fs.file.impl", classOf[NoForkLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NoForkLocalFs].getName)
+      // Checkpoint file checksums (4.1 default-on) write a checksum file
+      // beside every state file. With stock RawLocalFileSystem each of
+      // those forked a `readlink` shell on a local checkpoint dir (a
+      // RocksDB transformWithState spec went from minutes-stuck to
+      // seconds with this off); the `file:` binding above no longer
+      // forks, but the setting stays off here. The feature targets
+      // object-store corruption detection; on a real deployment's DFS
+      // checkpoint dir, re-enable it.
       .config("spark.sql.streaming.checkpoint.fileChecksum.enabled", "false")
       .config("spark.ui.enabled", "false")
 

@@ -20,33 +20,11 @@ class PostingIndexCrossJvmSpec extends AnyFunSuite {
 
   private val sf = "/root/testdata/sf0.001"
 
-  // mirrors build.sbt's jdk17AddOpens — a plain `java` fork does not
-  // inherit sbt's javaOptions
-  private val addOpens = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar"
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private def runCli(wh: String, ms: String, cwd: java.io.File): String = {
-    import scala.sys.process._
-    val javaBin = new java.io.File(
-      new java.io.File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
-    val cmd = Seq(javaBin) ++ addOpens ++ Seq(
-      "-Xmx3g", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
-      "-cp", System.getProperty("java.class.path"),
-      "graft.tools.PostingIndexCli", sf, wh, ms)
-    val out = new StringBuilder
-    val logger = ProcessLogger(l => out.synchronized { out.append(l).append('\n') },
-      l => out.synchronized { out.append(l).append('\n') })
-    val code = Process(cmd, cwd).!(logger)
-    assert(code === 0, s"CLI exited $code; tail:\n${out.toString.takeRight(4000)}")
-    val line = out.toString.linesIterator.find(_.contains("[xjvm]"))
-    assert(line.isDefined, s"no [xjvm] line; tail:\n${out.toString.takeRight(4000)}")
+    val (code, out) = ForkedJvm.run("3g", cwd, Nil, "graft.tools.PostingIndexCli", sf, wh, ms)
+    assert(code === 0, s"CLI exited $code; tail:\n${out.takeRight(4000)}")
+    val line = out.linesIterator.find(_.contains("[xjvm]"))
+    assert(line.isDefined, s"no [xjvm] line; tail:\n${out.takeRight(4000)}")
     line.get
   }
 
