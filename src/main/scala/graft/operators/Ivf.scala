@@ -277,7 +277,7 @@ object Ivf {
     import scala.jdk.CollectionConverters._
     val probed = spark.createDataFrame(collected.toSeq.asJava, probedRows.schema)
     val probedCells = collected.map(_.getAs[Int]("cell")).distinct.sorted
-    val lists = spark.read.parquet(indexPath)
+    val lists = graft.sources.Tables.parquet(spark, indexPath)
       .filter(col("cell").isin(probedCells.toIndexedSeq.map(Integer.valueOf): _*))
       .select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("nvec"))
     val cands = lists.join(probed, Seq("cell"))

@@ -576,7 +576,7 @@ object RetrievalQueries {
               // the checkpoint materializes before the write overwrites
               // the files being read; its blocks die with the batch
               graft.operators.LocalCheckpoints.tracked(
-                sp.read.parquet(indexDir).filter(col("source") === sourceId)
+                Tables.parquet(sp, indexDir).filter(col("source") === sourceId)
                   .join(batch.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
                   .unionByName(batch))
             } else (batch, Seq.empty[org.apache.spark.rdd.RDD[_]])

@@ -127,7 +127,7 @@ object SignalMemo {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS"))) write(build, path)
-    spark.read.parquet(path)
+    graft.sources.Tables.parquet(spark, path)
   }
 
   /** One eviction listener per session (not per cache miss — a session

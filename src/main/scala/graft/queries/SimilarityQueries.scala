@@ -433,7 +433,7 @@ object SimilarityQueries {
                 // OTHER ids in those cells survive the anti-join, so a
                 // batch split across triggers accumulates instead of
                 // clobbering, and whole-run re-delivery is idempotent
-                LocalCheckpoints.tracked(sp.read.parquet(indexDir)
+                LocalCheckpoints.tracked(Tables.parquet(sp, indexDir)
                   .filter(col("cell").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
                   .join(b.select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
                   .unionByName(b))

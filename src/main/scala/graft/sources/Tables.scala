@@ -1,6 +1,9 @@
 package graft.sources
 
+import org.apache.parquet.hadoop.ParquetFileWriter.{PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFooters
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table loaders over the driver-generated testdata layout
   * (`/root/repo/TESTDATA.md`): one parquet file per table under `dir`.
@@ -18,7 +21,39 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    parquet(spark, s"$dir/$name.parquet")
+
+  /** The parquet table at `path` (one file, or a directory of part
+    * files, hive-partitioned or not) with its schema read on the driver.
+    * A bare `spark.read.parquet(path)` infers the schema in a Spark job
+    * (`ParquetFileFormat.mergeSchemasInParallel`) that reads one footer
+    * and serializes the session's Hadoop conf into its closure; handing
+    * the same schema back through `.schema(...)` skips that job. The
+    * relation is the one inference builds: Spark still applies
+    * `asNullable`, keeps the field metadata and discovers partition
+    * columns from the directory names (a partition column that is also
+    * stored in the data files, which Spark only warns about, resolves to
+    * the data files' type here). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    spark.read.schema(footerSchema(spark, path)).parquet(path)
+
+  /** The data schema `spark.read.parquet(path)` infers with
+    * `spark.sql.parquet.mergeSchema` off (its default), read without a
+    * job: the footer of `_common_metadata`, else `_metadata`, else the
+    * first data file by path among the files the relation indexes
+    * (hidden, `_`- and `.`-prefixed names excluded). A missing path, or
+    * no footer to read, raises inference's own AnalysisException. Not
+    * covered: a `mergeSchema` session, and a directory a file-stream
+    * sink wrote, which Spark reads through its `_spark_metadata` log. */
+  def footerSchema(spark: SparkSession, path: String): StructType = {
+    val summaries = Seq(PARQUET_COMMON_METADATA_FILE, PARQUET_METADATA_FILE)
+    val (summary, data) = ParquetFooters.indexedFiles(spark, path)
+      .sortBy(_.getPath.toString).partition(f => summaries.contains(f.getPath.getName))
+    summaries.flatMap(n => summary.find(_.getPath.getName == n)).headOption
+      .orElse(data.headOption)
+      .flatMap(ParquetFooters.schema(spark, _))
+      .getOrElse(throw ParquetFooters.noSchemaError())
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "nation")
@@ -73,27 +108,23 @@ object Tables {
   /** STREAMING read of events.parquet with the same normalized shape as
     * [[events]] (`ts` always session-TZ TimestampType). Streaming file
     * sources can't infer a schema, and hard-coding one resurrects the
-    * generation-assumption [[normalizeEventTs]] exists to kill — so probe
-    * the batch reader's schema (a footer-only read) and declare THAT.
-    * One definition for every streamed-events query. */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema = load(spark, dir, "events").schema
+    * generation-assumption [[normalizeEventTs]] exists to kill — so read
+    * the footer schema ([[footerSchema]]) and declare THAT. One
+    * definition for every streamed-events query. */
+  def eventsStream(spark: SparkSession, dir: String): DataFrame =
     normalizeEventTs(
-      spark.readStream.schema(fileSchema)
+      spark.readStream.schema(footerSchema(spark, s"$dir/events.parquet"))
         .option("pathGlobFilter", "events.parquet")
         .parquet(dir))
-  }
 
   /** Orders replayed as a file stream (the CDC-changelog shape for the
-    * streamed merge): schema probed from the batch footer like
+    * streamed merge): schema read from the footer like
     * [[eventsStream]], so encoding drift surfaces in the contract spec,
     * not silently here. */
-  def ordersStream(spark: SparkSession, dir: String): DataFrame = {
-    val fileSchema = load(spark, dir, "orders").schema
-    spark.readStream.schema(fileSchema)
+  def ordersStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.schema(footerSchema(spark, s"$dir/orders.parquet"))
       .option("pathGlobFilter", "orders.parquet")
       .parquet(dir)
-  }
 
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")

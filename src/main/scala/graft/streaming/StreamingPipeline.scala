@@ -137,11 +137,6 @@ object StreamingPipeline {
         col("value").cast("string").as("value"),
         col("topic"), col("partition"), col("offset"), col("timestamp"))
 
-  /** File-based stand-in with the same shape: a directory of JSONL files
-    * (exactly what the reference's sink bucket holds, S5/S6). */
-  def jsonlStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.readStream.schema(schema).json(path)
-
   /** S3/S4 schema enforcement: decode the value payload against an
     * explicit schema (the Schema-Registry analog — analyzer errors on
     * mismatch replace registry rejection). Keeps Kafka metadata columns
@@ -377,7 +372,7 @@ object StreamingPipeline {
         .flatten
         .filter(_ < before)
       if (versions.isEmpty) None
-      else Some(spark.read.parquet(s"$stateDir/v=${versions.max}"))
+      else Some(graft.sources.Tables.parquet(spark, s"$stateDir/v=${versions.max}"))
     }
   }
 

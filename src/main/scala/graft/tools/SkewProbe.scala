@@ -439,7 +439,7 @@ object SkewProbe {
       val streamDir = java.nio.file.Files.createTempDirectory("graft_skew_stream").toString
       try {
       userDim(events).write.mode("overwrite").parquet(dimPath)
-      val dim = spark.read.parquet(dimPath)
+      val dim = graft.sources.Tables.parquet(spark, dimPath)
       val parts = spark.conf.get("spark.sql.shuffle.partitions").toInt
       // the advisor's sketches see the full skewed table, bounded state
       val advice = Salting.advise(events, "user_id", parts)
