@@ -184,10 +184,6 @@ object Bpe {
   def learnMerges(docs: DataFrame, textCol: String, steps: Int): DataFrame =
     mergesDf(docs.sparkSession, learn(docs, textCol, steps))
 
-  /** One-shot convenience over [[learn]] + [[segmentsDf]]. */
-  def segmentVocab(docs: DataFrame, textCol: String, steps: Int): DataFrame =
-    segmentsDf(learn(docs, textCol, steps))
-
   /** Corpus-level subword statistics under the learned vocabulary: the
     * token-count planning number a training pipeline needs ("how many
     * subword tokens is this corpus under tokenizer X"). The segment

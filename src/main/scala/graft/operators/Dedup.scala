@@ -1221,16 +1221,6 @@ object Dedup {
     untouched.unionByName(connectedComponents(affEdges))
   }
 
-  /** Exact n-gram Jaccard with blocking: all pairs within a blocking key
-    * (quadratic per block — the demo/verification path; MinHash is the
-    * scale path and the blocking key bounds the quadratic term). */
-  def ngramJaccardBlocked(
-      df: DataFrame, idCol: String, textCol: String, blockCol: String,
-      k: Int, threshold: Double): DataFrame =
-    ngramJaccardOnBlocked(
-      df.select(col(blockCol).as("block"), col(idCol),
-        TextFunctions.shingles(col(textCol), k).as("sh")), idCol)(threshold)
-
   /** Blocking by the rolling min-shingle fingerprint, derived from the
     * one shingle pass (1-perm minhash: near-identical docs collide with
     * probability ≈ their Jaccard). */

@@ -202,14 +202,6 @@ object Ivf {
     (cents, assignTo(corpus, cents, idCol, vecCol))
   }
 
-  /** One-shot Lloyd-IVF search (oracle-backed true k-means). */
-  def lloydTopK(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCells: Int, nProbe: Int, iters: Int = 2): DataFrame = {
-    val (cents, assigned) = buildLloydFlat(corpus, idCol, vecCol, nCells, iters)
-    searchWithCentroids(cents, assigned, queries, idCol, vecCol, k, nProbe)
-  }
-
   /** One-shot seeded-IVF search (the oracle-backed variant). */
   def seededTopK(
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,

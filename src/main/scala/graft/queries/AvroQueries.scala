@@ -378,15 +378,8 @@ object AvroQueries {
       .select(col("schema_id"), col("v.user_id"), col("v.email"), col("v.age"),
         col("v.first_name"), col("v.last_name"), col("v.status"),
         col("v.address.city").as("city"))
-    val name = "avro_mixed_writers_streamed_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    StreamGate.runToCompletion(spark, skipNoDataBatch = true) {
-      enforced.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name).orderBy(col("user_id"))
+    StreamGate.collect("avro_mixed_writers_streamed", enforced, skipNoDataBatch = true)
+      .orderBy(col("user_id"))
   }
 
   /** Scratch dir for the container-file queries, keyed by the testdata

@@ -480,14 +480,7 @@ object CoverageQueries {
         count(lit(1)).as("n"),
         sum(col("value").cast(DecimalType(18, 3))).cast("double").as("sum_value"))
       .select(col("w.start").as("window_start"), col("event_type"), col("n"), col("sum_value"))
-    val name = "tumbling_streamed_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      stream.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("tumbling_streamed", stream)
       .filter(col("event_type") =!= sentinelType)
       .orderBy(col("window_start"), col("event_type"))
   }

@@ -64,14 +64,7 @@ object DedupQueries {
       .select(col("doc_id"),
         coalesce(col("n_hist_copies"), lit(0L)).as("n_hist_copies"),
         col("n_hist_copies").isNull.cast("int").as("is_new"))
-    val name = "dedup_inc_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name).orderBy(col("doc_id"))
+    graft.streaming.StreamGate.collect("dedup_inc", joined).orderBy(col("doc_id"))
   }
 
   /** The engine-neutral 16-bit md5 uniform hash, shared with
@@ -571,14 +564,7 @@ object DedupQueries {
       "doc_id", "text", passageTokens = 10, minOcc = 1L)
     val screened = Dedup.passageScreen(arriving, hist, "doc_id", "text",
       passageTokens = 10)
-    val name = "passage_screen_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      screened.writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("passage_screen", screened, outputMode = "update")
       .groupBy(col("doc_id"))
       .agg(max(col("n_tiles")).as("n_tiles"), max(col("n_contam")).as("n_contam"),
         max(col("contam_share")).as("contam_share"))

@@ -65,14 +65,8 @@ object MaintenanceQueries {
   def cdcMergeStreamed(spark: SparkSession, dir: String): DataFrame = {
     val latest = CdcMerge.latestPerKey(
       ordersChangelog(Tables.ordersStream(spark, dir)), "c_custkey", "seq", "op")
-    val name = "cdc_latest_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      latest.writeStream.format("memory").queryName(name)
-        .outputMode("complete")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    CdcMerge.applyLatest(customerSnapshot(spark, dir), spark.table(name), "c_custkey")
+    val streamed = graft.streaming.StreamGate.collect("cdc_latest", latest, outputMode = "complete")
+    CdcMerge.applyLatest(customerSnapshot(spark, dir), streamed, "c_custkey")
       .orderBy(col("c_custkey"))
   }
 

@@ -497,14 +497,7 @@ object RetrievalQueries {
         .option("pathGlobFilter", "documents.parquet").parquet(dir)
         .filter(col("source") === "src0"))
       .select(col("doc_id"), col("t"), col("tf"), col("dl"))
-    val name = "bm25_post_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      postings.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name).orderBy(col("doc_id"), col("t"))
+    graft.streaming.StreamGate.collect("bm25_post", postings).orderBy(col("doc_id"), col("t"))
   }
 
   /** Retrieve-and-rerank (the classic two-stage pipeline: cheap lexical

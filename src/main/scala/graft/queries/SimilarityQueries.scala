@@ -387,14 +387,7 @@ object SimilarityQueries {
       .select(col("vec_id"),
         (array_position(col("d2s"), array_min(col("d2s"))) - 1).cast("int").as("cell"),
         round(array_min(col("d2s")), 9).as("d2"))
-    val name = "sim_assign_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      assigned.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name).orderBy(col("vec_id"))
+    graft.streaming.StreamGate.collect("sim_assign", assigned).orderBy(col("vec_id"))
   }
 
   /** The consumer of the streamed assignments — the vector-side

@@ -102,17 +102,10 @@ object TemporalQueries {
       .select(col("user_id"), col("event_id"), col("ts"), col("value"))
       .as[graft.streaming.VersionEvent]
     val out = graft.streaming.StreamingPipeline.streamingScd2(events)
-    val name = "scd2_streamed_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      out.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
     val settle = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"), col("event_id"))
       .orderBy(col("valid_to").asc_nulls_last)
-    spark.table(name)
+    graft.streaming.StreamGate.collect("scd2_streamed", out.toDF())
       .withColumn("rn", row_number().over(settle)).filter(col("rn") === 1)
       .select(col("user_id"), col("event_id"), col("valid_from"),
         col("valid_to"), col("value"), col("is_current"))
@@ -140,14 +133,8 @@ object TemporalQueries {
       .withWatermark("ts", "1 hour")
       .dropDuplicatesWithinWatermark("user_id", "event_type")
       .select(col("user_id"), col("event_type"))
-    val name = "dedup_late_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      deduped.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name).orderBy(col("user_id"), col("event_type"))
+    graft.streaming.StreamGate.collect("dedup_late", deduped)
+      .orderBy(col("user_id"), col("event_type"))
   }
 
   /** ST4 CUSTOM keyed state under the oracle gate: gap sessionization
@@ -176,14 +163,7 @@ object TemporalQueries {
         .withWatermark("ts", "1 hour")
         .as[graft.streaming.SessEvent],
       gapUs = 30L * 60L * 1000000L)
-    val name = "session_fmgs_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      sessions.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("session_fmgs", sessions.toDF())
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
@@ -210,17 +190,10 @@ object TemporalQueries {
       .as[graft.streaming.SessEvent]
     val sessions = graft.streaming.TwsSessions.gapSessionsTws(
       events, gapUs = 30L * 60L * 1000000L)
-    val name = "session_tws_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // rocksdb conf rides INSIDE the gate's locked start window (the
     // Verify pool races a naked set/restore — see TwsSessions.rocksDbConfs)
-    graft.streaming.StreamGate.runToCompletion(spark,
-        extraConfs = graft.streaming.TwsSessions.rocksDbConfs) {
-        sessions.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("session_tws", sessions.toDF(),
+      extraConfs = graft.streaming.TwsSessions.rocksDbConfs)
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
@@ -264,21 +237,15 @@ object TemporalQueries {
       .as[graft.streaming.SessEvent]
     val sessions = graft.streaming.TwsSessions.gapSessionsTwsBootstrapped(
       streamHalf, gapUs, seed)
-    val name = "session_boot_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // rocksdb conf rides INSIDE the gate's locked start window (the
     // Verify pool races a naked set/restore — see TwsSessions.rocksDbConfs)
-    graft.streaming.StreamGate.runToCompletion(spark,
-        extraConfs = graft.streaming.TwsSessions.rocksDbConfs) {
-        sessions.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-    }
+    val streamed = graft.streaming.StreamGate.collect("session_boot", sessions.toDF(),
+      extraConfs = graft.streaming.TwsSessions.rocksDbConfs)
     // the completed replay consumed the seed (initial state loaded in
     // micro-batch 0); its blocks would otherwise stay pinned for the
     // session lifetime
     graft.operators.LocalCheckpoints.free(seedRdds)
-    spark.table(name)
+    streamed
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"), sum(col("n_events")).as("n_events"))
@@ -305,17 +272,10 @@ object TemporalQueries {
       .withWatermark("ts", "1 hour")
       .as[graft.streaming.TypedEvent]
     val counts = graft.streaming.TwsCounts.typeCounts(events)
-    val name = "type_counts_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // rocksdb conf rides INSIDE the gate's locked start window (the
     // Verify pool races a naked set/restore — see TwsSessions.rocksDbConfs)
-    graft.streaming.StreamGate.runToCompletion(spark,
-        extraConfs = graft.streaming.TwsSessions.rocksDbConfs) {
-        counts.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("type_counts", counts.toDF(),
+      extraConfs = graft.streaming.TwsSessions.rocksDbConfs)
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"), col("event_type"))
       .agg(max(col("n")).as("n"))
@@ -336,14 +296,7 @@ object TemporalQueries {
     val counts = Tables.eventsStream(spark, dir)
       .groupBy(col("event_type"))
       .agg(count(lit(1)).as("n"))
-    val name = "type_counts_upd_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      counts.writeStream.format("memory").queryName(name)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("type_counts_upd", counts, outputMode = "update")
       .groupBy(col("event_type"))
       .agg(max(col("n")).as("n"))
       .orderBy(col("event_type"))
@@ -366,17 +319,10 @@ object TemporalQueries {
       .withWatermark("ts", "1 hour")
       .as[graft.streaming.RecentIn]
     val recent = graft.streaming.TwsRecent.recentEvents(events, 3)
-    val name = "recent_events_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // rocksdb conf rides INSIDE the gate's locked start window (the
     // Verify pool races a naked set/restore — see TwsSessions.rocksDbConfs)
-    graft.streaming.StreamGate.runToCompletion(spark,
-        extraConfs = graft.streaming.TwsSessions.rocksDbConfs) {
-        recent.writeStream.format("memory").queryName(name)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("recent_events", recent.toDF(),
+      extraConfs = graft.streaming.TwsSessions.rocksDbConfs)
       .filter(col("user_id") >= 0)
       .groupBy(col("user_id"), col("slot"))
       .agg(max(struct(col("ts"), col("event_id"))).as("m"))
@@ -406,16 +352,9 @@ object TemporalQueries {
       delay = "1 hour", horizon = "7 days")
       .select(col("l.user_id").as("user_id"), col("p_event_id"),
         col("s_event_id"), col("p_ts"), col("s_ts"))
-    val name = "ssjoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
     // inner join: every match emits inside the data batch; the trailing
     // no-data batch would only evict state the teardown deletes anyway
-    graft.streaming.StreamGate.runToCompletion(spark, skipNoDataBatch = true) {
-      joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("ssjoin", joined, skipNoDataBatch = true)
       .orderBy(col("user_id"), col("p_event_id"), col("s_event_id"))
   }
 
@@ -450,14 +389,7 @@ object TemporalQueries {
       .select(col("l.user_id").as("user_id"), col("p_event_id"),
         coalesce(col("s_event_id"), lit(-1L)).as("s_event_id"), col("p_ts"),
         col("s_event_id").isNotNull.as("matched"))
-    val name = "ssljoin_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      joined.writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
-    spark.table(name)
+    graft.streaming.StreamGate.collect("ssljoin", joined)
       .filter(col("p_event_id") >= 0)
       .orderBy(col("user_id"), col("p_event_id"), col("s_event_id"))
   }
@@ -718,17 +650,10 @@ object TemporalQueries {
       .as[graft.streaming.FunnelEvent]
     val out = graft.streaming.StreamingPipeline.funnelMatch(
       src, windowUs = 48L * 3600L * 1000000L)
-    val name = "funnel_streamed_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      out.toDF().writeStream.format("memory").queryName(name)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
     val settle = org.apache.spark.sql.expressions.Window
       .partitionBy(col("user_id"))
       .orderBy(col("frontier_us").desc, col("n_events").desc)
-    spark.table(name)
+    graft.streaming.StreamGate.collect("funnel_streamed", out.toDF())
       .withColumn("rn", row_number().over(settle)).filter(col("rn") === 1)
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("n_events"), col("matched"))

@@ -1,7 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 /** Runs a bounded (AvailableNow) stream with the state-store partition
   * count sized to the STATE, not to the session's batch shuffle
@@ -26,6 +26,12 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Correctness is unaffected: partition count changes where keys live,
   * never what the aggregation emits (stream==batch equality over every
   * `_streamed` query is the standing oracle gate).
+  *
+  * Two entry points. [[collect]] is THE way to run a bounded stream for
+  * its rows: every `_streamed` registry query goes through it, and it is
+  * the only `memory`-sink call in the program. [[runToCompletion]] is for
+  * streams whose sink does its own work (`foreachBatch` upserts) and
+  * yields no rows to read back.
   */
 object StreamGate {
 
@@ -55,6 +61,35 @@ object StreamGate {
     spark.conf.getOption(checkpointDirKey).map(new java.io.File(_))
       .orElse(Some(new java.io.File("/dev/shm")).filter(d => d.isDirectory && d.canWrite))
       .map(new java.io.File(_, "graft-gate-ckpt"))
+
+  /** Run `df` to completion (AvailableNow) into a `memory` sink and
+    * return its rows, under [[runToCompletion]]'s scoped confs
+    * (`skipNoDataBatch` and `extraConfs` pass through unchanged).
+    *
+    * The query is named `label_<uuid>`, so `SPARK_GRAFT_STREAM_DEBUG`
+    * lines still name the caller. The memory sink registers a session
+    * temp view under that name; it is dropped before returning, also
+    * when the stream fails. Left registered, every call would pin its
+    * whole result in driver heap under a view nobody reads again, for
+    * the life of the session (each Bench pass, each Verify run). The
+    * returned DataFrame is resolved BEFORE the drop: its analyzed plan
+    * holds the sink itself, not the view name, so it keeps reading the
+    * same rows after the view is gone. */
+  def collect(label: String, df: DataFrame, outputMode: String = "append",
+      skipNoDataBatch: Boolean = false,
+      extraConfs: Map[String, String] = Map.empty): DataFrame = {
+    val spark = df.sparkSession
+    val name = label + "_" + java.util.UUID.randomUUID().toString.replace("-", "")
+    try {
+      runToCompletion(spark, skipNoDataBatch, extraConfs) {
+        df.writeStream.format("memory").queryName(name)
+          .outputMode(outputMode)
+          .trigger(Trigger.AvailableNow())
+          .start()
+      }
+      spark.table(name)
+    } finally spark.catalog.dropTempView(name)
+  }
 
   /** Start a stream with state-sized shuffle partitions and wait for it
     * to finish. The overrides are scoped to the `start` call — Spark

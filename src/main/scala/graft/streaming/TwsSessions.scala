@@ -121,7 +121,7 @@ object TwsSessions {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** The RocksDB provider conf `transformWithState` requires. Apply it
-    * through [[StreamGate.runToCompletion]]'s `extraConfs` in any
+    * through the `extraConfs` of [[StreamGate.collect]] in any
     * concurrent harness, so the set→start→restore happens inside the
     * gate's lock window (the Verify pool races a naked set/restore:
     * one thread's restore between another's set and start strips the

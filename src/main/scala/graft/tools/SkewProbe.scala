@@ -349,31 +349,21 @@ object SkewProbe {
     * to the batch arms'. */
   private def streamArms(spark: SparkSession, streamDir: String, dim: DataFrame,
       maxShare: Double, stateParts: Int): Seq[Arm] = {
-    import org.apache.spark.sql.streaming.Trigger
     import graft.sources.Tables
     import graft.streaming.StreamGate
     val streamConfs = plainConfs +
       (StreamGate.statePartitionsKey -> stateParts.toString)
-    def sinkName() =
-      "skew_stream_" + java.util.UUID.randomUUID().toString.replace("-", "")
-    def runStream(q: DataFrame, name: String): Unit =
-      StreamGate.runToCompletion(spark) {
-        q.writeStream.format("memory").queryName(name)
-          .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-      }
     val streamSalts = math.max(1, math.ceil(maxShare * stateParts).toInt)
     Seq(
       runArm(spark, "stream_agg_hot",
         "streamed stateful per-user agg: map-side partial agg collapses the hot key before the state shuffle — immune like batch",
         streamConfs) {
-        val name = sinkName()
-        runStream(
+        StreamGate.collect("skew_stream",
           Tables.eventsStream(spark, streamDir)
             .groupBy(col("user_id"))
             .agg(count(lit(1)).as("n"),
               sum(round(col("value") * 1e6).cast("long")).as("value_micro")),
-          name)
-        spark.table(name)
+          outputMode = "complete")
           .groupBy(pmod(col("user_id"), lit(10L)).as("segment"))
           .agg(count(lit(1)).as("n_rows"), sum(col("value_micro")).as("value_micro"))
           .orderBy(col("segment"))
@@ -381,28 +371,26 @@ object SkewProbe {
       runArm(spark, "stream_join_plain",
         "stream-static enrichment join, unmitigated: each micro-batch concentrates like the batch join",
         streamConfs) {
-        val name = sinkName()
-        runStream(
+        StreamGate.collect("skew_stream",
           Tables.eventsStream(spark, streamDir)
             .join(dim, Seq("user_id"), "inner")
             .groupBy(col("segment"))
             .agg(count(lit(1)).as("n_rows"),
               sum(round(col("value") * 1e6).cast("long")).as("value_micro")),
-          name)
-        spark.table(name).orderBy(col("segment"))
+          outputMode = "complete")
+          .orderBy(col("segment"))
       },
       runArm(spark, "stream_join_salted",
         s"stream-static join through Salting.saltedJoin (salts=$streamSalts for $stateParts state partitions): same mitigation, streaming plan",
         streamConfs) {
-        val name = sinkName()
-        runStream(
+        StreamGate.collect("skew_stream",
           Salting.saltedJoin(
               Tables.eventsStream(spark, streamDir), dim, "user_id", streamSalts)
             .groupBy(col("segment"))
             .agg(count(lit(1)).as("n_rows"),
               sum(round(col("value") * 1e6).cast("long")).as("value_micro")),
-          name)
-        spark.table(name).orderBy(col("segment"))
+          outputMode = "complete")
+          .orderBy(col("segment"))
       })
   }
 

@@ -3,22 +3,18 @@ package org.apache.spark.sql.graft
 import org.apache.hadoop.conf.Configuration
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.util.SerializableConfiguration
 
 /** Bridge into Spark's `private[sql]`/`private[spark]` internals needed by
   * custom file sources (the same surface a built-in FileFormat uses):
-  * InternalRow RDD extraction/creation and a task-serializable Hadoop
-  * configuration. Lives under the org.apache.spark package for access;
-  * contains no logic.
+  * DataFrame creation over an InternalRow RDD and a task-serializable
+  * Hadoop configuration. Lives under the org.apache.spark package for
+  * access; contains no logic.
   */
 object InternalDf {
-
-  /** The physical plan's output as RDD[InternalRow] (no Row conversion). */
-  def toInternalRdd(df: DataFrame): RDD[InternalRow] =
-    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[Row]].queryExecution.toRdd
 
   /** DataFrame over an InternalRow RDD with an explicit schema. */
   def fromInternalRdd(spark: SparkSession, rdd: RDD[InternalRow],

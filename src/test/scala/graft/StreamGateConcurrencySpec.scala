@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 
 /** Pins the gate harness's concurrency contract: [[graft.streaming.StreamGate
-  * .runToCompletion]] is called from a thread POOL by the Verify main, so
+  * .collect]] is called from a thread POOL by the Verify main, so
   * its scoped session-conf overrides (state partitions, scratch checkpoint
   * root, no-data-batch toggle) must serialize their set→start→restore
   * window. Without that lock, stream B can capture stream A's checkpoint
@@ -11,7 +11,8 @@ import org.apache.spark.sql.functions._
   * (observed as FileNotFoundException on `right-keyWithIndexToValue` under
   * the 4-thread Verify pool). This spec drives more concurrent gate streams
   * than the pool the bug shipped under and asserts every one completes with
-  * exactly its own results — and that the scratch roots are gone after. */
+  * exactly its own results, and that no sink view or stream is left
+  * behind. A second case pins the view contract on registry queries. */
 class StreamGateConcurrencySpec extends SparkSpec {
 
   test("concurrent gate streams never cross checkpoints and all complete") {
@@ -32,21 +33,15 @@ class StreamGateConcurrencySpec extends SparkSpec {
       pool.submit(new Runnable {
         override def run(): Unit =
           try {
-            val name = s"gate_conc_$i"
             val agg = spark.readStream.schema(schema).parquet(src)
               .withWatermark("ts", "1 minute")
               .groupBy(window(col("ts"), "1 hour"), col("k"))
               .agg(count(lit(1)).as("c"))
               .select(col("k"), col("c"))
-            graft.streaming.StreamGate.runToCompletion(spark) {
-              agg.writeStream.format("memory").queryName(name)
-                .outputMode("append")
-                .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-                .start()
-            }
+            val rows = graft.streaming.StreamGate.collect(s"gate_conc_$i", agg)
             // every hour-window closes under the far-past watermark except
             // the last, so each stream must see the same per-key totals
-            val got = spark.table(name).groupBy(col("k")).agg(sum(col("c")))
+            val got = rows.groupBy(col("k")).agg(sum(col("c")))
               .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
             assert(got.size == 7, s"stream $i: keys=${got.size}")
             assert(got.values.sum > 0, s"stream $i: empty result")
@@ -57,8 +52,28 @@ class StreamGateConcurrencySpec extends SparkSpec {
     pool.shutdown()
     assert(failures.isEmpty,
       s"concurrent gate streams failed: ${failures.peek()}")
+    // collect dropped every sink view and every stream has terminated;
+    // the check is scoped to this test's names, so a stream another
+    // suite left running does not fail it
+    def ours(name: String): Boolean = name != null && name.startsWith("gate_conc_")
+    val views = spark.catalog.listTables().collect().map(_.name).filter(ours)
+    assert(views.isEmpty, s"sink views left registered: ${views.mkString(",")}")
+    val active = spark.streams.active.map(_.name).filter(ours)
+    assert(active.isEmpty, s"streams still active: ${active.mkString(",")}")
     // no leak assertion on the shared scratch root: suites run in
     // parallel in this JVM, so another suite's gate stream may be
     // legitimately mid-run with its dir present
+  }
+
+  test("streamed registry queries leave no temp view and read the same rows twice") {
+    def viewCount(): Long = spark.catalog.listTables().count()
+    Seq("dedup_late_streamed", "cdc_merge_streamed").foreach { q =>
+      val before = viewCount()
+      val first = SparkEntry.queries(q)(spark, sf).collect().toSeq
+      val second = SparkEntry.queries(q)(spark, sf).collect().toSeq
+      assert(viewCount() == before, s"$q: temp views ${viewCount()} != $before")
+      assert(first.nonEmpty, s"$q: empty result")
+      assert(first == second, s"$q: the second call returned different rows")
+    }
   }
 }
