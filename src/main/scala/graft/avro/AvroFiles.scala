@@ -23,9 +23,11 @@ import org.apache.spark.sql.graft.InternalDf
   *    into a temp container (no driver collect, no shuffle) and the
   *    driver commit renames every container into place. The writer's
   *    `maxRecordsPerFile` option closes a container and opens the next
-  *    every N records per task (the `flush.size` story, S8). Paths go
-  *    through the Hadoop FileSystem API, so the same call sites write
-  *    `s3a://` URIs.
+  *    every N records per task (the `flush.size` story, S8).
+  *    `StreamingPipeline.avroSink` makes the same batch write once per
+  *    micro-batch, into that batch's `batch=<id>/`. Paths go through
+  *    the Hadoop FileSystem API, so the same call sites write `s3a://`
+  *    URIs.
   *  - READ: sync-marker splits, the same contract a built-in FileFormat
   *    gives parquet — each container is planned as `ceil(len /
   *    splitBytes)` byte ranges, a task seeks to the first Avro sync

@@ -38,33 +38,15 @@ import org.apache.spark.util.SerializableConfiguration
   * (writer schema; derived from the DataFrame when absent), `codec`
   * (default deflate), `syncIntervalBytes` (default Avro's 64000) and
   * `maxRecordsPerFile` (records per container per task; default 0,
-  * unlimited). The write side is the library's only OCF writer:
-  * [[AvroFiles.write]] and the streaming `avroSink` both call it.
+  * unlimited). The write side is a batch write only, and the library's
+  * only OCF writer: [[AvroFiles.write]] calls it, and
+  * `StreamingPipeline.avroSink` calls it once per micro-batch (an
+  * overwrite of that batch's `batch=<id>/`).
   */
 object AvroTable {
   val ShortName = "graft-avro"
 
   final case class OcfBin(splits: Seq[AvroFiles.OcfSplit]) extends InputPartition
-
-  /** Serialize epoch commits on the archive dir — the same
-    * [[graft.sources.FileLocks]] monitor+flock protocol KafkaReplay's
-    * commits use (ONE implementation; the r15 review found hand-rolled
-    * copies diverging on symlink canonicalization): two live queries
-    * sharing one archive path would otherwise race the incarnation
-    * sweep — writer A's sweep deletes writer B's mid-commit batch= dir
-    * (parts renamed, ledger line not yet written), then B ledgers the
-    * epoch as committed: silent data loss. Only local paths can flock;
-    * non-local filesystems fall back to the JVM monitor alone
-    * (single-driver commits, the common case). */
-  private[graft] def withArchiveLock[A](
-      dir: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem)(body: => A): A =
-    if (fs.getScheme == "file") {
-      val d = new java.io.File(dir.toUri.getPath)
-      d.mkdirs()
-      graft.sources.FileLocks.withFileLock(new java.io.File(d, "_commit.lock"))(body)
-    } else graft.sources.FileLocks.withMonitor(
-      fs.makeQualified(dir).toString)(body)
 
   /** Project the reader schema to `required`'s top-level fields, in
     * `required`'s order — Avro schema resolution then SKIPS every other
@@ -133,7 +115,6 @@ object AvroTable {
   // ---------------------------------------------------------------- write
 
   import org.apache.spark.sql.connector.write.{BatchWrite, DataWriter, DataWriterFactory, LogicalWriteInfo, PhysicalWriteInfo, Write, WriteBuilder, WriterCommitMessage}
-  import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
 
   /** Every container one task wrote, as (temp path, final name) pairs. */
   final case class OcfPartMsg(parts: Seq[(String, String)])
@@ -157,11 +138,6 @@ object AvroTable {
       conf: SerializableConfiguration)
       extends DataWriterFactory {
     override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-      taskWriter(partitionId, taskId, "_tmp-")
-
-    /** `tmpPrefix` must start with `_tmp-` (planner-excluded). */
-    private[avro] def taskWriter(partitionId: Int, taskId: Long,
-        tmpPrefix: String): DataWriter[InternalRow] =
       new DataWriter[InternalRow] {
         private val schema = AvroCodec.parsedSchema(schemaJson)
         private val parts = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
@@ -171,7 +147,7 @@ object AvroTable {
           if (writer != null) { val w = writer; writer = null; w.close() }
         private def openNext(): Unit = {
           val name = f"part-$partitionId%05d-$taskId-c${parts.size}%03d.avro"
-          val tmp = new org.apache.hadoop.fs.Path(path, tmpPrefix + name)
+          val tmp = new org.apache.hadoop.fs.Path(path, "_tmp-" + name)
           parts += tmp.toString -> name
           writer = new DataFileWriter(new GenericDatumWriter[GenericRecord](schema))
           writer.setCodec(AvroFiles.codecFactory(codec))
@@ -195,18 +171,6 @@ object AvroTable {
       }
   }
 
-  /** The streaming face of [[OcfWriterFactory]]. The epoch is in the
-    * temp name (`_tmp-epoch-<e>-part-*`), because a continuous-mode task
-    * keeps one task id across epochs and must not overwrite a temp
-    * container its previous epoch has not committed yet; the epoch
-    * commit maps it back to `batch=<e>/part-*`. */
-  final case class OcfStreamingWriterFactory(factory: OcfWriterFactory)
-      extends StreamingDataWriterFactory {
-    override def createWriter(partitionId: Int, taskId: Long,
-        epochId: Long): DataWriter[InternalRow] =
-      factory.taskWriter(partitionId, taskId, s"_tmp-epoch-$epochId-")
-  }
-
   /** Every container the tasks' commit messages report. */
   private def reported(messages: Array[WriterCommitMessage]): Seq[(String, String)] =
     messages.toSeq.flatMap {
@@ -221,24 +185,13 @@ object AvroTable {
       tmp.getFileSystem(conf).delete(tmp, false)
     }
 
-  /** Rename every reported container into `dir`. A `fs.rename` that
-    * returns false with nothing at the destination fails the commit:
-    * ignoring it silently loses the container (the classic Hadoop
-    * pitfall). Task ids are unique per attempt, so final names never
-    * collide. */
-  private def renameParts(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path, parts: Seq[(String, String)]): Unit =
-    parts.foreach { case (tmpPath, name) =>
-      val tmp = new org.apache.hadoop.fs.Path(tmpPath)
-      val dst = new org.apache.hadoop.fs.Path(dir, name)
-      if (!fs.rename(tmp, dst) && !fs.exists(dst))
-        throw new java.io.IOException(s"$ShortName commit rename failed: $tmp -> $dst")
-    }
-
   /** Driver commit: optionally truncate (overwrite mode), then rename
     * every container into place — tasks never mutate the visible
     * layout, so failed/speculative attempts leave only temp files that
-    * commit/abort clean up. */
+    * commit/abort clean up. A `fs.rename` that returns false with
+    * nothing at the destination fails the commit: ignoring it silently
+    * loses the container (the classic Hadoop pitfall). Task ids are
+    * unique per attempt, so final names never collide. */
   final class OcfBatchWrite(path: String, factory: OcfWriterFactory,
       truncate: Boolean) extends BatchWrite {
     private def conf = SparkSession.active.sparkContext.hadoopConfiguration
@@ -259,139 +212,14 @@ object AvroTable {
         }
         stale.foreach(fs.delete(_, false))
       }
-      renameParts(fs, dir, reported(messages))
+      reported(messages).foreach { case (tmpPath, name) =>
+        val tmp = new org.apache.hadoop.fs.Path(tmpPath)
+        val dst = new org.apache.hadoop.fs.Path(dir, name)
+        if (!fs.rename(tmp, dst) && !fs.exists(dst))
+          throw new java.io.IOException(s"$ShortName commit rename failed: $tmp -> $dst")
+      }
     }
     override def abort(messages: Array[WriterCommitMessage]): Unit =
-      deleteTemps(conf, reported(messages))
-  }
-
-  /** Streaming half of the writer: per-epoch `batch=<epoch>/` subdirs
-    * (the micro-batch archival layout of
-    * [[graft.streaming.StreamingPipeline.avroSink]]), the same spool +
-    * rename-on-commit discipline as the batch writer, plus an `_epochs`
-    * ledger so a REPLAYED epoch (restart after a sink-side failure) is
-    * dropped wholesale — exactly-once object contents without
-    * coordination beyond the driver. */
-  final class OcfStreamingWrite(path: String, factory: OcfWriterFactory,
-      queryId: String = "")
-      extends StreamingWrite {
-    private def conf = SparkSession.active.sparkContext.hadoopConfiguration
-
-    override def createStreamingWriterFactory(
-        info: PhysicalWriteInfo): StreamingDataWriterFactory =
-      OcfStreamingWriterFactory(factory)
-
-    private def epochsPath = new org.apache.hadoop.fs.Path(path, "_epochs")
-
-    private def committedLines(fs: org.apache.hadoop.fs.FileSystem): Set[String] =
-      if (!fs.exists(epochsPath)) Set.empty
-      else {
-        val in = fs.open(epochsPath)
-        try scala.io.Source.fromInputStream(in).getLines()
-          .map(_.trim).filter(_.nonEmpty).toSet
-        finally in.close()
-      }
-
-    /** Epochs retained per query in the ledger. Batch ids are
-      * checkpoint-monotone, so a replay can only target the recent
-      * tail; without a bound a per-second micro-batch run re-reads and
-      * rewrites an ever-growing file inside every driver commit —
-      * O(epochs²) cumulative ledger I/O. */
-    private val LedgerRetain = 4096
-
-    /** Atomic, bounded ledger rewrite: per-query tail retention, write
-      * to temp, FileContext OVERWRITE rename (a delete-then-rename pair
-      * leaves a crash window in which the WHOLE committed-epoch record
-      * is lost — and with it every dedupe/sweep protection). */
-    private def writeLedger(dir: org.apache.hadoop.fs.Path,
-        fs: org.apache.hadoop.fs.FileSystem, lines: Set[String]): Unit = {
-      // toLongOption, NOT toLong: one corrupt/foreign ledger line with a
-      // non-numeric suffix would otherwise throw inside every subsequent
-      // commit() of every query on this path — a permanently wedged
-      // sink. Unparsable lines sort oldest (MinValue) so retention drops
-      // them first; they carry no skip decision anyway (the epoch-dir
-      // rewrite is idempotent without them).
-      val kept = lines.groupBy(l => l.substring(0, l.lastIndexOf(':')))
-        .values.flatMap { ls =>
-          ls.toSeq.sortBy(l => l.substring(l.lastIndexOf(':') + 1)
-            .toLongOption.getOrElse(Long.MinValue))(Ordering[Long].reverse)
-            .take(LedgerRetain)
-        }.toSet
-      val ledgerTmp = new org.apache.hadoop.fs.Path(dir, "_epochs.tmp")
-      val out = fs.create(ledgerTmp, true)
-      try out.write(kept.toSeq.sorted.mkString("", "\n", "\n")
-        .getBytes("UTF-8"))
-      finally out.close()
-      org.apache.hadoop.fs.FileContext.getFileContext(dir.toUri, conf)
-        .rename(ledgerTmp, epochsPath,
-          org.apache.hadoop.fs.Options.Rename.OVERWRITE)
-    }
-
-    override def commit(epochId: Long,
-        messages: Array[WriterCommitMessage]): Unit = {
-      val dir = new org.apache.hadoop.fs.Path(path)
-      val fs = dir.getFileSystem(conf)
-      fs.mkdirs(dir)
-      // cross-writer serialization: the incarnation sweep below deletes
-      // UN-LEDGERED batch= dirs above this epoch — racing a concurrent
-      // committer on a shared archive (parts renamed, ledger not yet
-      // written) it would destroy that commit silently
-      AvroTable.withArchiveLock(dir, fs) { commitLocked(dir, fs, epochId, messages) }
-    }
-
-    private def commitLocked(dir: org.apache.hadoop.fs.Path,
-        fs: org.apache.hadoop.fs.FileSystem, epochId: Long,
-        messages: Array[WriterCommitMessage]): Unit = {
-      val parts = reported(messages)
-      // QUERY-scoped ledger (r14, the KafkaReplay r13 fix applied to
-      // this sink too): bare epoch ids made a fresh-checkpoint rerun
-      // SILENTLY DROP its first epochs (its batch 0 matched the dead
-      // run's ledgered 0). Unlike the append-log sink, THIS sink's
-      // replay is idempotent WITHOUT the ledger — an epoch owns its
-      // batch= dir and the commit rewrites it wholesale — so the skip
-      // is purely a work-saver and bare legacy lines are never worth a
-      // skip decision: they are IGNORED here (a legacy replay just
-      // redundantly rewrites identical contents) and garbage-collected
-      // by the next ledger rewrite. Claiming them under this queryId
-      // instead would fabricate false self-history and re-create the
-      // drop for every colliding epoch of the rerun.
-      val ledgerKey = s"$queryId:$epochId"
-      val scoped = committedLines(fs).filter(_.contains(':'))
-      if (scoped.contains(ledgerKey)) {
-        deleteTemps(conf, parts)
-        return
-      }
-      // incarnation sweep — UN-LEDGERED dirs above this epoch only:
-      // those are a dead incarnation's uncommitted leftovers (this
-      // run's checkpoint guarantees ITS later epochs never committed),
-      // and glob readers over the archive would double-count them. A
-      // LEDGERED dir above belongs to another incarnation sharing the
-      // archive — deleting it would destroy committed data. Non-numeric
-      // batch= names (user artifacts) are left alone, not a crash.
-      val committedNums = scoped.flatMap(l =>
-        l.substring(l.lastIndexOf(':') + 1).toLongOption)
-      fs.listStatus(dir).filter(_.isDirectory).map(_.getPath)
-        .filter { d =>
-          val n = d.getName
-          n.startsWith("batch=") && n.stripPrefix("batch=").toLongOption
-            .exists(x => x > epochId && !committedNums.contains(x))
-        }
-        .foreach(d => fs.delete(d, true))
-      val epochDir = new org.apache.hadoop.fs.Path(dir, s"batch=$epochId")
-      // a replay whose ORIGINAL attempt crashed between the renames and
-      // the ledger write finds batch=<e> populated but un-ledgered: the
-      // two attempts' parts carry different task ids (different final
-      // names), so a bare re-rename would leave BOTH attempts' files —
-      // duplicated rows. The epoch owns its directory: rewrite it
-      // wholesale.
-      if (fs.exists(epochDir)) fs.delete(epochDir, true)
-      fs.mkdirs(epochDir)
-      renameParts(fs, epochDir, parts)
-      writeLedger(dir, fs, scoped + ledgerKey)
-    }
-
-    override def abort(epochId: Long,
-        messages: Array[WriterCommitMessage]): Unit =
       deleteTemps(conf, reported(messages))
   }
 
@@ -402,7 +230,7 @@ object AvroTable {
     override def schema(): StructType = AvroCodec.sparkStructType(readerSchemaJson)
     override def capabilities(): java.util.Set[TableCapability] =
       Set(TableCapability.BATCH_READ, TableCapability.BATCH_WRITE,
-        TableCapability.TRUNCATE, TableCapability.STREAMING_WRITE).asJava
+        TableCapability.TRUNCATE).asJava
     override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
       new OcfScan(path, readerSchemaJson,
         Option(o.get("splitBytes")).map(_.toLong)
@@ -427,8 +255,6 @@ object AvroTable {
           new Write {
             override def toBatch: BatchWrite =
               new OcfBatchWrite(target, factory, doTruncate)
-            override def toStreaming: StreamingWrite =
-              new OcfStreamingWrite(target, factory, info.queryId())
           }
         }
       }

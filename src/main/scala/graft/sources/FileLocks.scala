@@ -1,18 +1,10 @@
 package graft.sources
 
-/** ONE implementation of the monitor+flock commit-serialization protocol
-  * shared by [[KafkaReplay]]'s log-dir commits and
-  * [[graft.avro.AvroTable]]'s archive-dir commits (r15 review: the two
-  * hand-rolled copies had already diverged on monitor-key normalization
-  * — one canonicalized symlinks, the other did not, so two same-JVM
-  * writers reaching one dir via a symlink alias got different monitors
-  * and the second FileChannel.lock() threw OverlappingFileLockException
-  * instead of serializing).
-  *
-  * Same-JVM writers serialize on a monitor keyed by the lock file's
-  * CANONICAL path (symlink aliases collapse to one monitor; a second
-  * FileChannel lock in one JVM throws instead of blocking); cross-JVM
-  * writers serialize on the flock itself.
+/** The monitor+flock commit-serialization protocol of [[KafkaReplay]]'s
+  * log-dir commits. Same-JVM writers serialize on a monitor keyed by the
+  * lock file's CANONICAL path (symlink aliases collapse to one monitor;
+  * a second FileChannel lock in one JVM throws instead of blocking);
+  * cross-JVM writers serialize on the flock itself.
   */
 object FileLocks {
 
@@ -33,9 +25,4 @@ object FileLocks {
       try body finally { lk.release(); ch.close() }
     }
   }
-
-  /** Monitor-only serialization for paths that cannot flock (non-local
-    * filesystems): same canonical-key discipline, no cross-JVM arm. */
-  def withMonitor[A](key: String)(body: => A): A =
-    monitors.computeIfAbsent(key, _ => new Object).synchronized(body)
 }

@@ -375,9 +375,8 @@ object KafkaReplay {
 
   private val InflightName = "_commit.inflight"
 
-  // monitor+flock protocol shared with AvroTable via FileLocks (one
-  // implementation — the r15 review found the two copies diverging on
-  // symlink canonicalization)
+  // monitor+flock protocol (FileLocks): same-JVM writers reaching one
+  // dir through a symlink alias share one monitor
   private def withCommitLock[A](dir: File)(body: => A): A =
     FileLocks.withFileLock(new File(dir, "_commit.lock"))(body)
 
@@ -1028,7 +1027,7 @@ object KafkaReplay {
       if (effLegacy.nonEmpty) {
         // claim-and-migrate: rewrite the whole ledger query-scoped via
         // temp + atomic move so a crash mid-rewrite cannot lose
-        // committed epochs (the AvroTable ledger discipline)
+        // committed epochs
         val all = legacy.map(l => s"$queryId:$l") + ledgerKey
         val tmp = new File(dir, "_epochs.tmp")
         val w = new java.io.FileWriter(tmp, false)

@@ -120,22 +120,32 @@ object StreamingPipeline {
   val kafkaShapedColumns: Seq[String] =
     Seq("key", "value", "topic", "partition", "offset", "timestamp")
 
+  /** Project a loaded Kafka-shaped source onto [[kafkaShapedColumns]]:
+    * `key` as a string, `value` as a string or left binary. */
+  private def toKafkaShape(castValue: Boolean, loaded: DataFrame): DataFrame =
+    loaded.select(kafkaShapedColumns.map {
+      case "key" => col("key").cast("string").as("key")
+      case "value" if castValue => col("value").cast("string").as("value")
+      case c => col(c)
+    }: _*)
+
   /** Wiring for a real Kafka cluster (S2: earliest offsets, bounded batch
     * or continuous stream). Compiles against core Spark; running it
     * requires the spark-sql-kafka connector jar on the cluster classpath. */
   def kafkaStream(
       spark: SparkSession, bootstrapServers: String, topic: String,
       startingOffsets: String = "earliest"): DataFrame =
+    toKafkaShape(castValue = true,
+      kafkaLoad(spark, bootstrapServers, topic, startingOffsets))
+
+  private def kafkaLoad(spark: SparkSession, bootstrapServers: String,
+      topic: String, startingOffsets: String): DataFrame =
     spark.readStream
       .format("kafka")
       .option("kafka.bootstrap.servers", bootstrapServers)
       .option("subscribe", topic)
       .option("startingOffsets", startingOffsets)
       .load()
-      .select(
-        col("key").cast("string").as("key"),
-        col("value").cast("string").as("value"),
-        col("topic"), col("partition"), col("offset"), col("timestamp"))
 
   /** S3/S4 schema enforcement: decode the value payload against an
     * explicit schema (the Schema-Registry analog — analyzer errors on
@@ -212,11 +222,7 @@ object StreamingPipeline {
       .option("path", path)
       .option("topic", "users")
     maxOffsetsPerTrigger.foreach(n => r.option("maxOffsetsPerTrigger", n.toString))
-    r.load()
-      .select(
-        col("key").cast("string").as("key"),
-        col("value"),
-        col("topic"), col("partition"), col("offset"), col("timestamp"))
+    toKafkaShape(castValue = false, r.load())
   }
 
   /** [[kafkaStream]] minus the value cast — Avro payloads need the raw
@@ -224,16 +230,8 @@ object StreamingPipeline {
   def kafkaStreamBinary(
       spark: SparkSession, bootstrapServers: String, topic: String,
       startingOffsets: String = "earliest"): DataFrame =
-    spark.readStream
-      .format("kafka")
-      .option("kafka.bootstrap.servers", bootstrapServers)
-      .option("subscribe", topic)
-      .option("startingOffsets", startingOffsets)
-      .load()
-      .select(
-        col("key").cast("string").as("key"),
-        col("value"),
-        col("topic"), col("partition"), col("offset"), col("timestamp"))
+    toKafkaShape(castValue = false,
+      kafkaLoad(spark, bootstrapServers, topic, startingOffsets))
 
   /** The transform stage over an enforced frame: T2-T9 on the value
     * fields + T10 re-wrap (key/partition/timestamp preserved alongside
@@ -296,13 +294,10 @@ object StreamingPipeline {
     * holding one partition's records. No count, persist or shuffle runs
     * per trigger; record-level content is identical. A batch whose rows
     * are all filtered out leaves at most an empty object. Exactly-once
-    * comes from the per-batch directory, as in [[avroSink]]: each batch
-    * OVERWRITES its own `batch=<id>/` subdirectory, so a micro-batch
-    * replayed after a crash-before-checkpoint rewrites its output
-    * instead of appending a duplicate copy (a bare `mode("append")` to
-    * one directory — the pre-r13 form — double-writes exactly then).
-    * Readers glob the directory tree; the `batch` path segment surfaces
-    * as a partition column and is not part of the record payload. */
+    * and the `batch=<id>/` layout are [[batchObjects]]'s, shared with
+    * [[avroSink]]. Readers glob the directory tree; the `batch` path
+    * segment surfaces as a partition column and is not part of the
+    * record payload. */
   def jsonSinkSizedObjects(
       df: DataFrame, outPath: String, checkpoint: String,
       recordsPerObject: Int,
@@ -310,41 +305,71 @@ object StreamingPipeline {
     // 0 would read as "unlimited" under maxRecordsPerFile
     require(recordsPerObject > 0,
       s"jsonSinkSizedObjects: recordsPerObject must be > 0, got $recordsPerObject")
-    df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        batch.write.mode("overwrite")
-          .option("maxRecordsPerFile", recordsPerObject.toLong)
-          .json(s"$outPath/batch=$batchId")
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
+    batchObjects(df, "json", Map("maxRecordsPerFile" -> recordsPerObject.toString),
+      outPath, checkpoint, trigger)
   }
 
-  /** Avro container-file streaming sink: `writeStream.format("graft-avro")`,
-    * one subdirectory of OCF containers per micro-batch
-    * (`batch=<id>/part-*.avro`). The epoch commit renames the batch's
-    * containers into its own subdirectory and ledgers the epoch in
-    * `_epochs` at the sink root, so a batch replayed after a restart
-    * rewrites its `batch=<id>/` wholesale (or is skipped when already
-    * ledgered): exactly-once object contents. `recordsPerObject > 0`
-    * is the writer's `maxRecordsPerFile` (the flush.size story, S8):
-    * every write task rolls a new container each N records, so a batch
-    * yields `Σ_p ceil(n_p / N)` containers of at most N records, one
-    * series per upstream partition. `0` leaves containers unsized (one
-    * per non-empty task); a batch whose rows are all filtered out may
-    * leave an empty `batch=<id>/`. */
+  /** Avro container-file streaming sink: the [[batchObjects]] path with
+    * the `graft-avro` batch writer, so each micro-batch is one
+    * subdirectory of OCF containers (`batch=<id>/part-*.avro`) written
+    * under `schemaJson`. `recordsPerObject > 0` is the writer's
+    * `maxRecordsPerFile` (the flush.size story, S8): every write task
+    * rolls a new container each N records, so a batch yields
+    * `Σ_p ceil(n_p / N)` containers of at most N records, one series per
+    * upstream partition. `0` leaves containers unsized (one per
+    * non-empty task); a batch whose rows are all filtered out leaves an
+    * empty `batch=<id>/`. */
   def avroSink(
       df: DataFrame, schemaJson: String, outPath: String, checkpoint: String,
       recordsPerObject: Int = 0,
       trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] = {
     require(recordsPerObject >= 0,
       s"avroSink: recordsPerObject must be >= 0, got $recordsPerObject")
-    val w = df.writeStream.format(graft.avro.AvroTable.ShortName)
-      .option("path", outPath)
-      .option("avroSchema", schemaJson)
+    val sized =
+      if (recordsPerObject > 0) Map("maxRecordsPerFile" -> recordsPerObject.toString)
+      else Map.empty[String, String]
+    batchObjects(df, graft.avro.AvroTable.ShortName,
+      sized + ("avroSchema" -> schemaJson), outPath, checkpoint, trigger)
+  }
+
+  /** The exactly-once object sink behind [[jsonSinkSizedObjects]] and
+    * [[avroSink]]: each micro-batch OVERWRITES its own
+    * `outPath/batch=<id>/` with one batch write of `format`, so a batch
+    * replayed after a crash before its checkpoint commit rewrites its
+    * objects instead of appending a duplicate copy (an idempotent sink
+    * keyed by the batch id). Before the write, the incarnation sweep
+    * deletes every `batch=<n>/` with `n` above the batch id: the
+    * checkpoint guarantees this run never committed those batches, so
+    * they are a dead run's leftovers (a rerun over a lost checkpoint
+    * restarts at batch 0), and readers globbing the root would count
+    * them twice. Two live queries must not share one `outPath`. */
+  private def batchObjects(
+      df: DataFrame, format: String, options: Map[String, String],
+      outPath: String, checkpoint: String,
+      trigger: Trigger): DataStreamWriter[org.apache.spark.sql.Row] =
+    df.writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
+        deleteNumberedDirs(batch.sparkSession, outPath, "batch=")(_ > batchId)
+        batch.write.format(format).options(options).mode("overwrite")
+          .save(s"$outPath/batch=$batchId")
+      }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-    if (recordsPerObject > 0) w.option("maxRecordsPerFile", recordsPerObject.toLong) else w
+
+  /** Delete the `<prefix><n>` directories directly under `root` whose
+    * `n` satisfies `doomed`. A non-numeric suffix (a foreign directory)
+    * is left alone, never a per-batch crash. */
+  private def deleteNumberedDirs(spark: SparkSession, root: String,
+      prefix: String)(doomed: Long => Boolean): Unit = {
+    val p = new org.apache.hadoop.fs.Path(root)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (fs.exists(p))
+      fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
+        .filter { d =>
+          val n = d.getName
+          n.startsWith(prefix) && n.drop(prefix.length).toLongOption.exists(doomed)
+        }
+        .foreach(d => fs.delete(d, true))
   }
 
   /** The highest committed state version strictly below `before` (a
@@ -360,9 +385,8 @@ object StreamingPipeline {
       // the first task file of an in-flight (or crashed) overwrite, and
       // reading it would violate the snapshot-isolation contract —
       // _SUCCESS is the FileOutputCommitter's commit marker
-      // toLongOption, not toLong (r17 review — the same hardening the
-      // retention sweep and AvroTable's batch= sweep already carry): a
-      // foreign `v=<non-numeric>` dir under stateDir would otherwise
+      // toLongOption, not toLong (r17 review, as in deleteNumberedDirs):
+      // a foreign `v=<non-numeric>` dir under stateDir would otherwise
       // throw inside EVERY read and commit — a permanently wedged sink
       val versions = fs.listStatus(p).filter(_.isDirectory)
         .map(_.getPath)
@@ -394,27 +418,11 @@ object StreamingPipeline {
     df.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
         val spark = batch.sparkSession
-        // incarnation guard (r14): versions STRICTLY ABOVE the current
-        // batch id cannot belong to this run — the checkpoint guarantees
-        // batches after `batchId` never committed, so any higher v=
-        // came from a DEAD incarnation (a rerun whose checkpoint was
-        // lost restarts batch ids at 0; without this sweep the dead
-        // run's higher versions survive and currentTotals' max-version
-        // read silently serves the stale snapshot forever)
-        locally {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(p))
-            fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-              .filter { d =>
-                // toLongOption: a foreign non-numeric v= dir is left
-                // alone, not a per-batch crash (r17 review, matching
-                // the retention sweep below)
-                val n = d.getName
-                n.startsWith("v=") && n.drop(2).toLongOption.exists(_ > batchId)
-              }
-              .foreach(d => fs.delete(d, true))
-        }
+        // incarnation sweep, as in [[batchObjects]]: a v= above this
+        // batch id is a dead run's (a rerun whose checkpoint was lost
+        // restarts at 0), and currentTotals' max-version read would
+        // otherwise serve its stale snapshot forever
+        deleteNumberedDirs(spark, stateDir, "v=")(_ > batchId)
         val agg = batch.groupBy(col(keyCol))
           .agg(sum(col(valueCol)).as("total"), count(lit(1)).as("n_events"))
         val merged = latestStateVersion(spark, stateDir, before = batchId) match {
@@ -432,18 +440,7 @@ object StreamingPipeline {
         // reader that just resolved v=B-1 a grace window; as with the
         // signal sweeps, cross-process readers racing a regeneration
         // are out of scope (single estate per stateDir).
-        locally {
-          val p = new org.apache.hadoop.fs.Path(stateDir)
-          val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-          if (fs.exists(p))
-            fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-              .filter { d =>
-                val n = d.getName
-                n.startsWith("v=") &&
-                  n.drop(2).toLongOption.exists(_ < batchId - 2)
-              }
-              .foreach(d => fs.delete(d, true))
-        }
+        deleteNumberedDirs(spark, stateDir, "v=")(_ < batchId - 2)
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)

@@ -57,9 +57,16 @@ object TwsSessions {
       GapMerge.merge(prior, fresh, gapUs)
 
     /** Re-arm the single per-key timer to the earliest closable session,
-      * clamped past the current watermark. */
-    protected def rearm(open: List[SessAcc], wmMs: Long): Unit = {
-      getHandle.listTimers().foreach(getHandle.deleteTimer)
+      * clamped past the current watermark. `expiringMs` is the timer
+      * whose callback is running, if any: Spark deletes that one itself
+      * once the callback returns, so deleting it here too only makes the
+      * engine's own delete miss (a WARN per expiry). The new timer is
+      * past the watermark, the expiring one at or before it, so the two
+      * never coincide. */
+    protected def rearm(open: List[SessAcc], wmMs: Long,
+        expiringMs: Option[Long]): Unit = {
+      getHandle.listTimers().filterNot(t => expiringMs.contains(t))
+        .foreach(getHandle.deleteTimer)
       if (open.nonEmpty)
         getHandle.registerTimer(GapMerge.nextTimerMs(open, gapUs, wmMs))
     }
@@ -67,14 +74,14 @@ object TwsSessions {
     /** Emit closable sessions against the current watermark, persist the
       * rest, and re-arm the single per-key timer. */
     protected def drain(key: Long, fresh: List[SessAcc],
-        timers: TimerValues): Iterator[SessionOut] = {
+        timers: TimerValues, expiringMs: Option[Long]): Iterator[SessionOut] = {
       val wmMs = timers.getCurrentWatermarkInMs()
       val wmUs = wmMs * 1000L
       val prior = if (sessions.exists()) sessions.get().sessions else Nil
       val (closed, open) = GapMerge.split(merge(prior, fresh), gapUs, wmUs)
       if (open.isEmpty) sessions.clear()
       else sessions.update(SessState(open))
-      rearm(open, wmMs)
+      rearm(open, wmMs, expiringMs)
       closed.iterator.map(s => SessionOut(key, s.start_us, s.last_us, s.n))
     }
 
@@ -86,12 +93,12 @@ object TwsSessions {
       val wmUs = timers.getCurrentWatermarkInMs() * 1000L
       val fresh = rows.filter(_.ts_us >= wmUs)
         .map(e => SessAcc(e.ts_us, e.ts_us, 1L)).toList
-      drain(key, fresh, timers)
+      drain(key, fresh, timers, expiringMs = None)
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
         expired: ExpiredTimerInfo): Iterator[SessionOut] =
-      drain(key, Nil, timers)
+      drain(key, Nil, timers, Some(expired.getExpiryTimeInMs()))
   }
 
   class GapSessionProcessor(val gapUs: Long)
@@ -112,7 +119,7 @@ object TwsSessions {
         timers: TimerValues): Unit = {
       val merged = merge(Nil, initial.sessions)
       sessions.update(SessState(merged))
-      rearm(merged, timers.getCurrentWatermarkInMs())
+      rearm(merged, timers.getCurrentWatermarkInMs(), expiringMs = None)
     }
   }
 

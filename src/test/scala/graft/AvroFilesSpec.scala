@@ -202,6 +202,13 @@ class AvroFilesSpec extends SparkSpec {
         .as[OcfEvent].collect().sortBy(_.id).toSeq
     mem.addData((1L to 4L).map(i => OcfEvent(i, s"n$i")): _*)
     run()
+    // replay batch 0 under its own id, as after a crash before its
+    // commit: it rewrites batch=0/ instead of adding a second copy
+    assert(new java.io.File(ckpt, "commits/0").delete(), "no commits/0")
+    new java.io.File(ckpt, "commits/.0.crc").delete()
+    run()
+    assert(batchDirs() === Seq("batch=0"))
+    assert(readBack() === (1L to 4L).map(i => OcfEvent(i, s"n$i")))
     mem.addData(OcfEvent(5L, "n5"))
     run()
     assert(batchDirs() === Seq("batch=0", "batch=1"))
@@ -233,6 +240,24 @@ class AvroFilesSpec extends SparkSpec {
     assert(batchDirs() === before)
     assert(readBack() === expected)
     assert(!new java.io.File(out).listFiles().exists(_.getName.startsWith("_tmp-")))
+    // the named source reads the same archive back
+    assert(spark.read.format("graft-avro").load(out).as[OcfEvent]
+      .collect().sortBy(_.id).toSeq === expected)
+    // a fresh checkpoint over a dead run's root: batch=9/ lies above the
+    // new run's batch 0 and goes; the non-numeric batch=x/ stays
+    val root = tmp(); val ckpt2 = tmp()
+    def events(ids: Long*) = ids.map(i => OcfEvent(i, s"n$i")).toDF()
+    AvroFiles.write(events(90L), AvroFilesSpec.eventSchemaJson, s"$root/batch=9")
+    AvroFiles.write(events(91L), AvroFilesSpec.eventSchemaJson, s"$root/batch=x")
+    val mem2 = MemoryStream[OcfEvent]
+    mem2.addData(OcfEvent(1L, "n1"))
+    graft.streaming.StreamingPipeline
+      .avroSink(mem2.toDF(), AvroFilesSpec.eventSchemaJson, root, ckpt2)
+      .start().awaitTermination()
+    assert(new java.io.File(root).listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted.toSeq === Seq("batch=0", "batch=x"))
+    assert(AvroFiles.read(spark, root, AvroFilesSpec.eventSchemaJson)
+      .as[OcfEvent].collect().map(_.id).sorted.toSeq === Seq(1L, 91L))
   }
 
   test("streaming OCF sink: recordsPerObject 0 is unsized, negative is rejected") {

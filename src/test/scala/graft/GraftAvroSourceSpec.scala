@@ -190,150 +190,6 @@ class GraftAvroSourceSpec extends SparkSpec {
     assert(viaFn === df.collect().map(_.toString).sorted.toSeq)
   }
 
-  test("V2 streaming write: per-epoch batch dirs, epoch idempotence, readable archive") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
-    val dir = tmp(); val ckpt = tmp()
-    val mem = MemoryStream[(Long, String)]
-    def run(): Unit = {
-      val q = mem.toDF().toDF("id", "name")
-        .writeStream.format("graft-avro")
-        .option("path", dir).option("checkpointLocation", ckpt)
-        .option("codec", "null")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-      q.awaitTermination()
-    }
-    mem.addData((1L, "a"), (2L, "b"))
-    run()
-    mem.addData((3L, "c"))
-    run()
-    val batchDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
-      .map(_.getName).sorted
-    assert(batchDirs.toSeq === Seq("batch=0", "batch=1"))
-    // the archive reads back through BOTH surfaces (recursive lookup)
-    val viaFormat = spark.read.format("graft-avro").load(dir)
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(viaFormat === Seq((1L, "a"), (2L, "b"), (3L, "c")))
-    run() // restart with nothing new: no third batch dir, no duplicates
-    assert(spark.read.format("graft-avro").load(dir).count() === 3)
-    assert(!new java.io.File(dir).listFiles().exists(_.getName.startsWith("_tmp-")))
-  }
-
-  test("V2 streaming write: a fresh-checkpoint rerun over a legacy ledger keeps its data") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
-    // r14: a pre-query-scoping ledger holds BARE epoch ids; a new query
-    // (fresh checkpoint => epochs restart at 0) used to match them and
-    // silently DROP its first epochs. The epoch-dir rewrite is already
-    // idempotent, so bare lines must be ignored (and GC'd), never
-    // consulted for a skip.
-    val dir = tmp(); val ckpt = tmp()
-    new java.io.File(dir).mkdirs()
-    val lw = new java.io.FileWriter(new java.io.File(dir, "_epochs"))
-    try lw.write("0\n1\n2\n") finally lw.close()
-    val mem = MemoryStream[(Long, String)]
-    mem.addData((7L, "x"), (8L, "y"))
-    val q = mem.toDF().toDF("id", "name")
-      .writeStream.format("graft-avro")
-      .option("path", dir).option("checkpointLocation", ckpt)
-      .option("codec", "null")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val got = spark.read.format("graft-avro").load(dir)
-      .as[(Long, String)].collect().sortBy(_._1).toSeq
-    assert(got === Seq((7L, "x"), (8L, "y")),
-      s"fresh run's epoch 0 was dropped against a bare legacy ledger line: $got")
-    val ledger = {
-      val src = scala.io.Source.fromFile(new java.io.File(dir, "_epochs"))
-      try src.getLines().map(_.trim).filter(_.nonEmpty).toSet finally src.close()
-    }
-    assert(ledger.forall(_.contains(':')),
-      s"bare legacy lines must be garbage-collected: $ledger")
-  }
-
-  test("V2 streaming write: one corrupt ledger line cannot wedge the sink (ADVICE r14)") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext =
-      spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
-    // a colon-bearing line with a NON-NUMERIC suffix used to throw
-    // NumberFormatException inside writeLedger's retention sort —
-    // permanently failing every subsequent commit of every query
-    val dir = tmp(); val ckpt = tmp()
-    new java.io.File(dir).mkdirs()
-    val lw = new java.io.FileWriter(new java.io.File(dir, "_epochs"))
-    try lw.write("deadquery:not-a-number\nother:3\n") finally lw.close()
-    val mem = MemoryStream[(Long, String)]
-    mem.addData((1L, "a"))
-    val q = mem.toDF().toDF("id", "name")
-      .writeStream.format("graft-avro")
-      .option("path", dir).option("checkpointLocation", ckpt)
-      .option("codec", "null")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    assert(spark.read.format("graft-avro").load(dir).count() === 1)
-  }
-
-  test("withArchiveLock serializes same-JVM committers on one archive path (ADVICE r14)") {
-    val dir = new org.apache.hadoop.fs.Path(tmp())
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val inside = new java.util.concurrent.atomic.AtomicInteger(0)
-    val maxInside = new java.util.concurrent.atomic.AtomicInteger(0)
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-    try {
-      val futures = (1 to 8).map { _ =>
-        pool.submit(new Runnable {
-          override def run(): Unit =
-            graft.avro.AvroTable.withArchiveLock(dir, fs) {
-              val n = inside.incrementAndGet()
-              maxInside.updateAndGet(m => math.max(m, n))
-              Thread.sleep(5)
-              inside.decrementAndGet(): Unit
-            }
-        })
-      }
-      futures.foreach(_.get())
-    } finally pool.shutdown()
-    assert(maxInside.get() === 1,
-      s"concurrent committers overlapped inside the archive lock (${maxInside.get()})")
-    // and the flock file exists for cross-JVM writers on local paths
-    assert(new java.io.File(dir.toUri.getPath, "_commit.lock").exists())
-  }
-
-  test("V2 streaming write: one task id across two uncommitted epochs keeps both") {
-    import graft.avro.AvroTable.{OcfStreamingWrite, OcfStreamingWriterFactory, OcfWriterFactory}
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.unsafe.types.UTF8String
-    import spark.implicits._
-    // a continuous-mode task keeps its task id across epochs: epoch 1's
-    // writer must not overwrite epoch 0's temp container before the
-    // driver has committed epoch 0
-    val dir = tmp()
-    val factory = OcfWriterFactory(dir, AvroFilesSpec.eventSchemaJson,
-      "null", 64000, 0L, new org.apache.spark.util.SerializableConfiguration(
-        spark.sparkContext.hadoopConfiguration))
-    def epoch(e: Long, ids: Seq[Long]) = {
-      val w = OcfStreamingWriterFactory(factory).createWriter(0, 7L, e)
-      ids.foreach(i => w.write(InternalRow(i, UTF8String.fromString(s"n$i"))))
-      try w.commit() finally w.close()
-    }
-    val m0 = epoch(0L, Seq(1L, 2L, 3L))
-    val m1 = epoch(1L, Seq(4L, 5L))
-    val sink = new OcfStreamingWrite(dir, factory, "q")
-    sink.commit(0L, Array(m0))
-    sink.commit(1L, Array(m1))
-    def ids(batch: String) =
-      AvroFilesSpec.containerIds(new java.io.File(dir, batch)).flatten
-    assert(ids("batch=0") === Seq(1L, 2L, 3L))
-    assert(ids("batch=1") === Seq(4L, 5L))
-    assert(spark.read.format("graft-avro").load(dir).as[(Long, String)]
-      .collect().map(_._1).sorted.toSeq === (1L to 5L))
-  }
-
   test("empty/absent paths fail with a clear message unless a schema is given") {
     val e = intercept[IllegalArgumentException] {
       spark.read.format("graft-avro").load(tmp())

@@ -580,6 +580,22 @@ class StreamingSpec extends SparkSpec {
     }
     drain()
     checkLayout()
+
+    // a fresh checkpoint over a dead run's root: batch=9/ lies above the
+    // new run's batch 0 and goes; the non-numeric batch=x/ stays
+    val root = Files.createTempDirectory("graft_sized_sweep").toString
+    val rootCkpt = Files.createTempDirectory("graft_sized_sweep_ckpt").toString
+    Seq(ev(90, "a", 90.0)).toDF().write.json(s"$root/batch=9")
+    Seq(ev(91, "a", 91.0)).toDF().write.json(s"$root/batch=x")
+    val stream3 = MemoryStream[Ev]
+    stream3.addData(ev(1, "a", 1.0))
+    val q3 = StreamingPipeline.jsonSinkSizedObjects(
+      stream3.toDF(), root, rootCkpt, recordsPerObject = 25).start()
+    q3.processAllAvailable(); q3.stop()
+    assert(new java.io.File(root).listFiles().filter(_.isDirectory)
+      .map(_.getName).sorted.toSeq === Seq("batch=0", "batch=x"))
+    assert(spark.read.json(root).select($"value").as[Double].collect()
+      .sorted.toSeq === Seq(1.0, 91.0))
   }
 
   test("flush.size analog rejects a non-positive recordsPerObject") {

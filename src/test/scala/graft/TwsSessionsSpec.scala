@@ -142,4 +142,37 @@ class TwsSessionsSpec extends SparkSpec {
     assert(a.nonEmpty && a === b,
       s"TWS and fMGWS session sets diverge: ${a.diff(b)} vs ${b.diff(a)}")
   }
+
+  test("session_tws_streamed deletes no timer twice; rows equal the fMGWS twin's") {
+    import org.apache.logging.log4j.Level
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    // Spark deletes an expired timer itself after handleExpiredTimer; a
+    // processor that deletes it too makes that delete miss, and
+    // TimerStateImpl logs "Failed to delete timer ... does not exist"
+    val misses = new java.util.concurrent.atomic.AtomicInteger(0)
+    val appender = new AbstractAppender("tws-timer-warns", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN && e.getLoggerName.endsWith(".TimerStateImpl"))
+          misses.incrementAndGet(): Unit
+    }
+    appender.start()
+    val ctx = org.apache.logging.log4j.LogManager.getContext(false)
+      .asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    val tws =
+      try graft.queries.TemporalQueries.sessionTwsStreamed(spark, sf).collect().toSeq
+      finally {
+        root.removeAppender(appender.getName)
+        ctx.updateLoggers()
+        appender.stop()
+      }
+    assert(misses.get() === 0, s"${misses.get()} TimerStateImpl WARNs")
+    val fmgs = graft.queries.TemporalQueries.sessionFmgsStreamed(spark, sf).collect().toSeq
+    assert(tws.nonEmpty && tws === fmgs)
+  }
 }
