@@ -498,26 +498,31 @@ object AvroQueries {
       f.delete(); ()
     }
     rm(new java.io.File(log)) // the sink appends; each run produces afresh
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ckpt").toString
     // the wire rows stage through a FILE stream, not a MemoryStream: a
     // MemoryStream needs the whole encoded fixture collect()ed to the
     // driver — an unbounded driver copy at scale, and the only streamed
     // gate query that didn't stream from files (r14 review). The
-    // staging write + readStream keeps every row executor-side.
+    // staging write + readStream keeps every row executor-side. Both
+    // scratch dirs go in the finally: the result reads only the log.
+    val ckpt = java.nio.file.Files.createTempDirectory("graft_sink_ckpt").toString
     val wireDir = java.nio.file.Files.createTempDirectory("graft_sink_wire").toString
-    val wire = userStruct(spark, dir).select(
-      (col("user.user_id").cast("long") % 4).cast("int").as("partition"),
-      encode(col("user.user_id"), "UTF-8").as("key"),
-      to_avro_confluent(col("user"), userSchemaJson, SchemaId).as("value"))
-    wire.write.mode("overwrite").parquet(wireDir)
-    val q = spark.readStream.schema(wire.schema).parquet(wireDir)
-      .select(col("key"), col("value"), col("partition"),
-        lit(java.sql.Timestamp.from(FixedClock)).as("timestamp"))
-      .writeStream.format(graft.sources.KafkaReplay.ShortName)
-      .option("path", log).option("checkpointLocation", ckpt)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    rm(new java.io.File(wireDir))
+    try {
+      val wire = userStruct(spark, dir).select(
+        (col("user.user_id").cast("long") % 4).cast("int").as("partition"),
+        encode(col("user.user_id"), "UTF-8").as("key"),
+        to_avro_confluent(col("user"), userSchemaJson, SchemaId).as("value"))
+      wire.write.mode("overwrite").parquet(wireDir)
+      val q = spark.readStream.schema(wire.schema).parquet(wireDir)
+        .select(col("key"), col("value"), col("partition"),
+          lit(java.sql.Timestamp.from(FixedClock)).as("timestamp"))
+        .writeStream.format(graft.sources.KafkaReplay.ShortName)
+        .option("path", log).option("checkpointLocation", ckpt)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+      q.awaitTermination()
+    } finally {
+      rm(new java.io.File(ckpt))
+      rm(new java.io.File(wireDir))
+    }
     val raw = spark.read.format(graft.sources.KafkaReplay.ShortName)
       .option("path", log).load()
       .select(col("partition"), col("offset"),

@@ -79,43 +79,16 @@ object KafkaReplay {
 
   /** Append records to the log at `path` (creating it if absent),
     * continuing each partition's offset sequence — the producer side of
-    * the replay contract. Runs under the same commit lock + crash
-    * manifest as the streaming sink (r15 review): an unlocked append
-    * racing a sink commit on a shared dir would compute the same "next"
-    * offset (duplicate offsets, interleaved flushes misframing the log),
-    * and a crash mid-append would leave a torn tail no recovery ever
-    * repaired. The manifest key is never ledgered, so a crashed append
-    * is rolled back wholesale by the next writer's recoverTornAppend —
-    * all-or-nothing, like the sink's epochs. */
+    * the replay contract. It is a sink commit whose key (`append:<uuid>`)
+    * is never ledgered, so a crashed append is rolled back wholesale by
+    * the next writer's recoverTornAppend. */
   def append(path: String, records: Seq[Record]): Unit = {
     val dir = new File(path)
     dir.mkdirs()
     withCommitLock(dir) {
       recoverTornAppend(dir)
-      writeInflight(dir, s"append:${java.util.UUID.randomUUID()}")
-      records.groupBy(_.partition).foreach { case (p, recs) =>
-        val f = partFile(dir, p)
-        var next = endOffset(f)
-        val out = new DataOutputStream(new BufferedOutputStream(
-          new FileOutputStream(f, true)))
-        var primary: Throwable = null
-        try recs.foreach { r =>
-          writeFrame(out, next, r.tsMicros, r.key, r.value); next += 1
-        } catch { case t: Throwable => primary = t } finally {
-          // close() flushes — a flush failure must propagate so the
-          // manifest survives and the torn bytes are truncated away
-          try out.close()
-          catch { case t: Throwable => if (primary == null) primary = t }
-          if (primary != null) throw primary
-        }
-      }
-      // the manifest delete MUST surface on failure: append's
-      // 'append:UUID' key is never ledgered, so a surviving manifest
-      // after a fully successful append would make readers cap
-      // endOffsets below the new records and the next writer's
-      // recoverTornAppend would truncate the committed append away —
-      // unreported data loss (r15 ADVICE). Files.delete throws.
-      java.nio.file.Files.delete(new File(dir, InflightName).toPath)
+      appendRecords(dir, s"append:${java.util.UUID.randomUUID()}",
+        ledger = false)(records.foreach)
     }
   }
 
@@ -184,6 +157,16 @@ object KafkaReplay {
     invalidateUnder(dir)
   }
 
+  /** Skip the frame `in` is positioned at and return its byte length.
+    * Throws EOFException on a torn or absent frame. */
+  private def skipFrame(in: DataInputStream): Long = {
+    in.readLong(); in.readLong()
+    val kl = in.readInt(); if (kl >= 0) in.skipNBytes(kl.toLong)
+    val vl = in.readInt(); if (vl >= 0) in.skipNBytes(vl.toLong)
+    // frame = offset(8) + ts(8) + klen(4) + key + vlen(4) + value
+    24L + (if (kl > 0) kl else 0L) + (if (vl > 0) vl else 0L)
+  }
+
   /** Records per sparse-index slot: the framing scan that counts a log
     * also records the byte position of every `IndexStride`-th record,
     * so later range reads SEEK near their start offset instead of
@@ -243,11 +226,7 @@ object KafkaReplay {
       if (pos > 0L) in.skipNBytes(pos)
       while (true) {
         if (n % IndexStride == 0L) marks += pos
-        in.readLong(); in.readLong()
-        val kl = in.readInt(); if (kl >= 0) in.skipNBytes(kl.toLong)
-        val vl = in.readInt(); if (vl >= 0) in.skipNBytes(vl.toLong)
-        // frame = offset(8) + ts(8) + klen(4) + key + vlen(4) + value
-        pos += 24L + (if (kl > 0) kl else 0L) + (if (vl > 0) vl else 0L)
+        pos += skipFrame(in)
         n += 1
       }
     } catch { case _: EOFException =>
@@ -338,10 +317,7 @@ object KafkaReplay {
     var pos = 0L
     try {
       while (pos < capBytes) {
-        in.readLong(); in.readLong()
-        val kl = in.readInt(); if (kl >= 0) in.skipNBytes(kl.toLong)
-        val vl = in.readInt(); if (vl >= 0) in.skipNBytes(vl.toLong)
-        pos += 24L + (if (kl > 0) kl else 0L) + (if (vl > 0) vl else 0L)
+        pos += skipFrame(in)
         if (pos <= capBytes) n += 1
       }
     } catch { case _: EOFException => } finally in.close()
@@ -359,26 +335,36 @@ object KafkaReplay {
     else positions(math.min(start / IndexStride, (positions.length - 1).toLong).toInt)
   }
 
-  // ---- sink-commit atomicity (r14) -------------------------------------
-  // The partition logs are append-only plain files: an append is not
-  // atomic, and the ledger mark follows it — so a driver crash inside
-  // commit() could either re-append a whole epoch on replay (appended,
-  // not yet marked) or leave a torn record at a log tail. The commit
-  // protocol below makes that window recoverable: an exclusive lock
-  // (per-dir monitor for same-JVM writers + flock for cross-process,
-  // since the query-scoped ledger explicitly supports two queries
-  // sharing one log dir), a crash manifest written atomically BEFORE
-  // any byte lands (the ledger key + every log's pre-append length),
-  // and recovery-on-next-commit that truncates the torn append away —
-  // unless the manifest's key already reached the ledger, in which case
-  // the crash was after the point of no return and the logs are good.
+  // ---- commit protocol: one lock, one tail writer ----------------------
+  // The partition logs are append-only plain files, so an append is not
+  // atomic. `append` and the sink commit are the log's only tail writers,
+  // and both run one protocol: hold withCommitLock, run recoverTornAppend,
+  // then write through appendRecords. A crash manifest (the key + every
+  // log's pre-append length) lands atomically BEFORE any frame; recovery
+  // on the next write truncates a torn append away, unless the manifest's
+  // key reached the ledger — then the crash came after the point of no
+  // return and the logs are good.
 
   private val InflightName = "_commit.inflight"
 
-  // monitor+flock protocol (FileLocks): same-JVM writers reaching one
-  // dir through a symlink alias share one monitor
-  private def withCommitLock[A](dir: File)(body: => A): A =
-    FileLocks.withFileLock(new File(dir, "_commit.lock"))(body)
+  private val lockMonitors =
+    new java.util.concurrent.ConcurrentHashMap[String, Object]()
+
+  /** Run `body` holding the log dir's commit lock: a JVM monitor keyed by
+    * the lock file's CANONICAL path (symlink aliases share it; a second
+    * FileChannel lock in one JVM throws instead of blocking), then a flock
+    * on `_commit.lock` for other JVMs, released by closing the channel. */
+  private def withCommitLock[A](dir: File)(body: => A): A = {
+    val lockFile = new File(dir, "_commit.lock")
+    val mon = lockMonitors.computeIfAbsent(lockFile.getCanonicalPath,
+      _ => new Object)
+    mon.synchronized {
+      val ch = java.nio.channels.FileChannel.open(lockFile.toPath,
+        java.nio.file.StandardOpenOption.CREATE,
+        java.nio.file.StandardOpenOption.WRITE)
+      try { ch.lock(); body } finally ch.close()
+    }
+  }
 
   private def writeInflight(dir: File, ledgerKey: String): Unit = {
     val lines = (Seq(s"key $ledgerKey") ++
@@ -430,69 +416,74 @@ object KafkaReplay {
     mf.delete(): Unit
   }
 
-  /** Stream spool records straight into the partition logs — one record
-    * in memory at a time, so commit heap is O(1) in the epoch's payload
-    * (the pre-r14 path buffered EVERY key/value of the epoch in a
-    * driver-side ArrayBuffer before appending: a few-GB micro-batch the
-    * executors handled fine OOM'd the driver). Traversal order (spools
-    * by partitionId, records in spool order) matches the old
-    * collect-then-append order, so the resulting logs are identical. */
-  private def appendSpools(dir: File, spools: Seq[String]): Unit = {
-    val outs = scala.collection.mutable.Map.empty[Int, DataOutputStream]
-    val nexts = scala.collection.mutable.Map.empty[Int, Long]
+  /** A partition log's open tail: its stream and the next offset. */
+  private final class Tail(var next: Long, val out: DataOutputStream)
+
+  /** The one tail writer of the log; the caller holds [[withCommitLock]]
+    * and has run [[recoverTornAppend]]. Writes the manifest under `key`,
+    * then streams `records` one at a time (heap O(1) in the payload),
+    * opening each partition log once, at its end offset. Every stream is
+    * closed and the first failure rethrown: close() flushes, and a torn
+    * append must keep its manifest so the next writer truncates it. With
+    * `ledger`, `key` goes to `_epochs`. The manifest is retired LAST by a
+    * delete that throws: one surviving a finished unledgered append would
+    * cap readers below its records and get them truncated. */
+  private def appendRecords(dir: File, key: String, ledger: Boolean)(
+      records: (Record => Unit) => Unit): Unit = {
+    writeInflight(dir, key)
+    val tails = scala.collection.mutable.HashMap.empty[Int, Tail]
     var primary: Throwable = null
-    try {
-      spools.foreach { sp =>
-        val f = new File(sp)
-        if (f.exists()) {
-          val in = new DataInputStream(new BufferedInputStream(new FileInputStream(f)))
-          try {
-            while (true) {
-              val p = in.readInt()
-              val ts = in.readLong()
-              val kl = in.readInt()
-              val k = if (kl < 0) null
-                else { val b = new Array[Byte](kl); in.readFully(b); b }
-              val vl = in.readInt()
-              val v = if (vl < 0) null
-                else { val b = new Array[Byte](vl); in.readFully(b); b }
-              val out = outs.getOrElseUpdate(p, {
-                nexts(p) = endOffset(partFile(dir, p))
-                new DataOutputStream(new BufferedOutputStream(
-                  new FileOutputStream(partFile(dir, p), true)))
-              })
-              val off = nexts(p)
-              nexts(p) = off + 1
-              writeFrame(out, off, ts, k, v)
-            }
-          } catch { case _: EOFException => }
-          finally in.close()
-        }
-      }
+    try records { r =>
+      val t = tails.getOrElseUpdate(r.partition, {
+        val f = partFile(dir, r.partition)
+        new Tail(endOffset(f), new DataOutputStream(new BufferedOutputStream(
+          new FileOutputStream(f, true))))
+      })
+      writeFrame(t.out, t.next, r.tsMicros, r.key, r.value)
+      t.next += 1
     } catch { case t: Throwable => primary = t } finally {
-      // close() is what flushes each BufferedOutputStream — a flush
-      // failure (ENOSPC, disk error) MUST propagate, or commitLocked
-      // would ledger a torn epoch as committed and the next epoch would
-      // append after the torn bytes, misframing the partition log. Close
-      // every stream, remember the first failure, rethrow it (unless a
-      // write failure is already propagating — that one wins): the
-      // _commit.inflight manifest then survives and recoverTornAppend
-      // truncates the torn append on the next commit.
-      outs.values.foreach { o =>
-        try o.close()
-        catch { case t: Throwable => if (primary == null) primary = t }
+      tails.values.foreach { t =>
+        try t.out.close()
+        catch { case e: Throwable => if (primary == null) primary = e }
       }
       if (primary != null) throw primary
     }
+    if (ledger) {
+      val w = new java.io.FileWriter(epochsFile(dir), true)
+      try w.write(s"$key\n") finally w.close()
+    }
+    java.nio.file.Files.delete(new File(dir, InflightName).toPath)
   }
+
+  private def readBytes(in: DataInputStream): Array[Byte] = {
+    val n = in.readInt()
+    if (n < 0) null else { val b = new Array[Byte](n); in.readFully(b); b }
+  }
+
+  /** Feed every record of one task spool to `emit`, in spool order; a
+    * missing spool feeds nothing. The spool's stream is closed in a
+    * `finally`, also when `emit` fails. */
+  private def readSpool(spool: File)(emit: Record => Unit): Unit =
+    if (spool.exists()) {
+      val in = new DataInputStream(new BufferedInputStream(new FileInputStream(spool)))
+      try {
+        while (true) {
+          val p = in.readInt()
+          val ts = in.readLong()
+          val k = readBytes(in)
+          emit(Record(p, k, readBytes(in), ts))
+        }
+      } catch { case _: EOFException => }
+      finally in.close()
+    }
 
   /** Per-partition READ-VISIBLE byte caps from a live (un-ledgered)
     * `_commit.inflight` manifest, or None when every byte on disk is
     * committed. Readers must not see bytes a crashed commit may still
-    * truncate (r15 review): a sink crash between appendSpools and the
-    * ledger write leaves the epoch's records physically in the logs; a
-    * reader that counts them emits offsets the next commit's
-    * recoverTornAppend truncates and re-appends — possibly with a
+    * truncate: a crash inside appendRecords after its
+    * frames landed, before its ledger write, leaves the records
+    * physically in the logs; a reader that counts them emits offsets the
+    * next writer's recoverTornAppend truncates and re-appends — possibly with a
     * different record-to-offset assignment (task replay order) — so the
     * reader would have consumed phantom records it never re-reads. The
     * manifest records every log's pre-append length: that prefix is
@@ -887,12 +878,13 @@ object KafkaReplay {
     *  1. every task writes its rows to a task-attempt-unique spool file
     *     (`.epoch-<e>-task-<t>-<a>.spool`) — retries and speculative
     *     duplicates never touch the log;
-    *  2. the driver's `commit(epochId, messages)` appends the spooled
-    *     records to the partition logs in (partitionId, row) order with
-    *     broker-style continued offsets, then records the epoch in
-    *     `_epochs` — a REPLAYED epoch (micro-batch retry after a sink
-    *     failure) is detected there and skipped wholesale, giving
-    *     exactly-once log contents;
+    *  2. the driver's `commit(epochId, messages)` takes the log's one
+    *     commit lock and streams the spooled records, in (partitionId,
+    *     row) order, through the one tail writer [[appendRecords]] that
+    *     [[append]] uses too: broker-style continued offsets, then the
+    *     `<queryId>:<epochId>` line in `_epochs`. A REPLAYED epoch
+    *     (micro-batch retry after a sink failure) finds its line there
+    *     and is skipped wholesale, giving exactly-once log contents;
     *  3. `abort` deletes the spools.
     *
     * Only spool PATHS travel through commit messages — record bytes stay
@@ -978,77 +970,26 @@ object KafkaReplay {
       val dir = new File(path)
       dir.mkdirs()
       val spools = messages.collect { case m: SpoolMsg => m }.sortBy(_.partitionId)
-      withCommitLock(dir) { commitLocked(dir, epochId, spools) }
-    }
-
-    private def commitLocked(dir: File, epochId: Long,
-        spools: Array[SpoolMsg]): Unit = {
-      // undo any torn append a crashed commit left behind BEFORE
-      // consulting the ledger or appending (see the protocol note above
-      // recoverTornAppend)
-      recoverTornAppend(dir)
       // ledger entries are QUERY-scoped: epoch ids are per-query batch
       // ids starting at 0, so two queries (or a restart with a fresh
       // checkpoint) sharing one log dir would collide on bare epoch ids
       // and the second writer's batches would be silently dropped
       val ledgerKey = s"$queryId:$epochId"
-      // One-time legacy migration (ADVICE r13, narrowed r14): ledgers
-      // written before the query-scoped key change hold BARE epoch ids
-      // — an epoch committed to the sink just before upgrade but not
-      // yet checkpointed would never match the scoped key and be
-      // double-appended on the post-upgrade replay. But honoring bare
-      // lines for EVERY query forever reintroduces the cross-query
-      // silent drop the scoped key exists to fix (a NEW query's epoch 0
-      // matching some old query's bare "0"). The pre-r13 format was
-      // single-writer by construction (bare ids made shared dirs
-      // collide), so the FIRST post-upgrade committer is that writer's
-      // continuation: it alone honors the bare lines, and it CLAIMS
-      // them — the ledger is rewritten fully query-scoped below, so no
-      // later query ever consults them. Ambiguity window: a brand-new
-      // query that commits to a legacy dir before the old query resumes
-      // would claim the lines — give new queries fresh log dirs during
-      // the migration window. A mixed ledger (scoped lines already
-      // present alongside bare ones — an r13-era dir) cannot attribute
-      // its bare lines; they are ignored (worst case is the documented
-      // one-time re-ingest, never a silent drop).
-      val ledger = committedEpochs(dir)
-      val (scoped, legacy) = ledger.partition(_.contains(':'))
-      val effLegacy = if (scoped.isEmpty) legacy else Set.empty[String]
-      val qslug = querySlug(queryId)
-      if (scoped.contains(ledgerKey) || effLegacy.contains(epochId.toString)) {
-        spools.foreach(m => new File(m.path).delete()) // replayed epoch: drop
-        sweepSpools(dir, qslug, epochId) // + the crashed attempt's orphans
-        return
+      withCommitLock(dir) {
+        // undo a torn append BEFORE consulting the ledger (see the
+        // commit-protocol note above withCommitLock)
+        recoverTornAppend(dir)
+        // a ledgered key is a replayed epoch: drop its spools unwritten
+        if (!committedEpochs(dir).contains(ledgerKey))
+          appendRecords(dir, ledgerKey, ledger = true) { emit =>
+            spools.foreach(m => readSpool(new File(m.path))(emit))
+          }
+        spools.foreach(m => new File(m.path).delete())
+        // orphans from attempts that crashed after their ledger write but
+        // before their spool deletions — ledgered epochs never replay, so
+        // anything at this epoch or older is dead weight
+        sweepSpools(dir, querySlug(queryId), epochId)
       }
-      // crash manifest BEFORE any byte lands; spools stream record-at-
-      // a-time into the logs (O(1) driver heap in the epoch payload)
-      writeInflight(dir, ledgerKey)
-      appendSpools(dir, spools.toIndexedSeq.map(_.path))
-      if (effLegacy.nonEmpty) {
-        // claim-and-migrate: rewrite the whole ledger query-scoped via
-        // temp + atomic move so a crash mid-rewrite cannot lose
-        // committed epochs
-        val all = legacy.map(l => s"$queryId:$l") + ledgerKey
-        val tmp = new File(dir, "_epochs.tmp")
-        val w = new java.io.FileWriter(tmp, false)
-        try w.write(all.toSeq.sorted.mkString("", "\n", "\n")) finally w.close()
-        java.nio.file.Files.move(tmp.toPath, epochsFile(dir).toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE): Unit
-      } else {
-        val w = new java.io.FileWriter(epochsFile(dir), true)
-        try w.write(s"$ledgerKey\n") finally w.close()
-      }
-      // the epoch reached the ledger: retire the manifest LAST, so a
-      // crash anywhere earlier is classified correctly by recovery
-      // (manifest + unledgered key => torn append, truncate; manifest +
-      // ledgered key => completed commit, keep the bytes)
-      new File(dir, InflightName).delete()
-      spools.foreach(m => new File(m.path).delete())
-      // orphans from attempts that crashed after their ledger write but
-      // before their spool deletions — ledgered epochs never replay, so
-      // anything at this epoch or older is dead weight
-      sweepSpools(dir, qslug, epochId)
     }
 
     override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

@@ -59,6 +59,20 @@ class KafkaReplaySpec extends SparkSpec {
     })
   }
 
+  /** A task spool in the sink's spool format (`[partition i32][ts i64]
+    * [keyLen i32 = -1][valLen i32][value]` per record) under `dir`. */
+  private def spool(dir: String, name: String,
+      recs: Seq[(Int, Array[Byte])]): KafkaReplay.SpoolMsg = {
+    val f = new java.io.File(dir, name); f.getParentFile.mkdirs()
+    val out = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
+    recs.foreach { case (p, v) =>
+      out.writeInt(p); out.writeLong(0L); out.writeInt(-1)
+      out.writeInt(v.length); out.write(v)
+    }
+    out.close()
+    KafkaReplay.SpoolMsg(f.getPath, 0)
+  }
+
   test("batch read: Kafka-shaped rows, per-partition offset sequences, tombstone") {
     val dir = writeTopic(4)
     val df = spark.read.format(KafkaReplay.ShortName)
@@ -133,86 +147,25 @@ class KafkaReplaySpec extends SparkSpec {
 
   test("sink epoch ledger is query-scoped: two queries sharing a log dir never drop batches") {
     val dir = Files.createTempDirectory("graft_replay_multiq").toString
-    def spool(name: String, recs: Seq[(Int, Array[Byte])]): KafkaReplay.SpoolMsg = {
-      val f = new java.io.File(dir, name); f.getParentFile.mkdirs()
-      val out = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
-      recs.foreach { case (p, v) =>
-        out.writeInt(p); out.writeLong(0L); out.writeInt(-1)
-        out.writeInt(v.length); out.write(v)
-      }
-      out.close()
-      KafkaReplay.SpoolMsg(f.getPath, 0)
-    }
     val wA = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryA")
     val wB = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryB")
     // both queries commit THEIR OWN epoch 0 — pre-r13 the bare epoch-id
     // ledger made B's commit a silent no-op
-    wA.commit(0L, Array(spool(".epoch-0-task-a-0.spool", Seq((0, "a".getBytes)))))
-    wB.commit(0L, Array(spool(".epoch-0-task-b-0.spool", Seq((0, "b".getBytes)))))
+    wA.commit(0L, Array(spool(dir, ".epoch-0-task-a-0.spool", Seq((0, "a".getBytes)))))
+    wB.commit(0L, Array(spool(dir, ".epoch-0-task-b-0.spool", Seq((0, "b".getBytes)))))
     assert(KafkaReplay.endOffsets(dir) ===
       scala.collection.immutable.SortedMap(0 -> 2L),
       "second query's epoch 0 was dropped by a cross-query ledger hit")
     // while replaying A's OWN epoch 0 stays a no-op
-    wA.commit(0L, Array(spool(".epoch-0-task-a-1.spool", Seq((0, "a2".getBytes)))))
+    wA.commit(0L, Array(spool(dir, ".epoch-0-task-a-1.spool", Seq((0, "a2".getBytes)))))
     assert(KafkaReplay.endOffsets(dir) ===
       scala.collection.immutable.SortedMap(0 -> 2L))
   }
 
-  test("sink ledger migration: a bare legacy epoch line still counts as committed") {
-    // ADVICE r13: ledgers written before the query-scoped key change hold
-    // bare epoch ids; an epoch committed just before upgrade but not yet
-    // checkpointed must NOT be double-appended by the post-upgrade replay
-    val dir = Files.createTempDirectory("graft_replay_legacy").toString
-    def spool(name: String, recs: Seq[(Int, Array[Byte])]): KafkaReplay.SpoolMsg = {
-      val f = new java.io.File(dir, name); f.getParentFile.mkdirs()
-      val out = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
-      recs.foreach { case (p, v) =>
-        out.writeInt(p); out.writeLong(0L); out.writeInt(-1)
-        out.writeInt(v.length); out.write(v)
-      }
-      out.close()
-      KafkaReplay.SpoolMsg(f.getPath, 0)
-    }
-    new java.io.File(dir).mkdirs()
-    val legacy = new java.io.FileWriter(new java.io.File(dir, "_epochs"), true)
-    try legacy.write("3\n") finally legacy.close()
-    val w = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryX")
-    w.commit(3L, Array(spool(".epoch-3-task-x-0.spool", Seq((0, "dup".getBytes)))))
-    assert(KafkaReplay.endOffsets(dir).getOrElse(0, 0L) === 0L,
-      "legacy-committed epoch was replayed and double-appended")
-    // a genuinely new epoch still appends — and CLAIMS the legacy lines:
-    // the ledger must be fully query-scoped afterwards
-    w.commit(4L, Array(spool(".epoch-4-task-x-1.spool", Seq((0, "new".getBytes)))))
-    assert(KafkaReplay.endOffsets(dir).getOrElse(0, 0L) === 1L)
-    val migrated = {
-      val src = scala.io.Source.fromFile(new java.io.File(dir, "_epochs"))
-      try src.getLines().map(_.trim).filter(_.nonEmpty).toSet finally src.close()
-    }
-    assert(migrated === Set("queryX:3", "queryX:4"),
-      s"legacy lines not migrated to query-scoped form: $migrated")
-    // the narrowed shim (r14): once migrated, a DIFFERENT query's epoch
-    // matching an old bare id must NOT be suppressed — the cross-query
-    // silent drop the scoped key exists to prevent
-    val wB = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryB")
-    wB.commit(3L, Array(spool(".epoch-3-task-b-0.spool", Seq((0, "b3".getBytes)))))
-    assert(KafkaReplay.endOffsets(dir).getOrElse(0, 0L) === 2L,
-      "a new query's epoch was suppressed by a claimed legacy line")
-  }
-
   test("sink commit protocol: a torn append is truncated away on the next commit") {
     val dir = Files.createTempDirectory("graft_replay_torn").toString
-    def spool(name: String, recs: Seq[(Int, Array[Byte])]): KafkaReplay.SpoolMsg = {
-      val f = new java.io.File(dir, name); f.getParentFile.mkdirs()
-      val out = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
-      recs.foreach { case (p, v) =>
-        out.writeInt(p); out.writeLong(0L); out.writeInt(-1)
-        out.writeInt(v.length); out.write(v)
-      }
-      out.close()
-      KafkaReplay.SpoolMsg(f.getPath, 0)
-    }
     val w = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryT")
-    w.commit(0L, Array(spool(".epoch-0-task-t-0.spool",
+    w.commit(0L, Array(spool(dir, ".epoch-0-task-t-0.spool",
       Seq((0, "a".getBytes), (0, "b".getBytes)))))
     assert(KafkaReplay.endOffsets(dir) ===
       scala.collection.immutable.SortedMap(0 -> 2L))
@@ -231,7 +184,7 @@ class KafkaReplaySpec extends SparkSpec {
     val cw = new java.io.FileOutputStream(created)
     try cw.write(Array[Byte](1, 2, 3)) finally cw.close()
     // the next commit must recover (truncate + delete) then append clean
-    w.commit(1L, Array(spool(".epoch-1-task-t-1.spool", Seq((0, "c".getBytes)))))
+    w.commit(1L, Array(spool(dir, ".epoch-1-task-t-1.spool", Seq((0, "c".getBytes)))))
     assert(KafkaReplay.endOffsets(dir) ===
       scala.collection.immutable.SortedMap(0 -> 3L),
       "torn bytes survived recovery or the clean append was lost")
@@ -248,6 +201,70 @@ class KafkaReplaySpec extends SparkSpec {
     try fw2.write(s"key queryT:1\n0 ${log0.length()}\n") finally fw2.close()
     KafkaReplay.recoverTornAppend(new java.io.File(dir))
     assert(!mf.exists() && KafkaReplay.endOffsets(dir).getOrElse(0, 0L) === 3L)
+  }
+
+  test("append and the sink commit share one writer: each truncates the other's torn tail") {
+    val dir = Files.createTempDirectory("graft_replay_one_writer").toString
+    val log0 = new java.io.File(dir, "partition-0.log")
+    val mf = new java.io.File(dir, "_commit.inflight")
+    // a crash after the manifest and half a frame: the key is never ledgered
+    def tear(key: String, offset: Long): Unit = {
+      val fw = new java.io.FileWriter(mf)
+      try fw.write(s"key $key\n0 ${log0.length()}\n") finally fw.close()
+      val torn = new java.io.DataOutputStream(new java.io.FileOutputStream(log0, true))
+      try { torn.writeLong(offset); torn.writeLong(0L); torn.writeInt(5) }
+      finally torn.close()
+    }
+    def rec(v: String) = KafkaReplay.Record(0, null, v.getBytes, 0L)
+    KafkaReplay.append(dir, Seq(rec("a")))
+    tear("append:crashed", 1L)
+    val w = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "q")
+    w.commit(0L, Array(spool(dir, ".epoch-0-task-q-0.spool", Seq((0, "b".getBytes)))))
+    tear("q:1", 2L)
+    KafkaReplay.append(dir, Seq(rec("c")))
+    assert(!mf.exists(), "inflight manifest must be retired")
+    val vals = spark.read.format(KafkaReplay.ShortName).option("path", dir).load()
+      .select($"offset", $"value".cast("string")).as[(Long, String)]
+      .collect().sortBy(_._1).toSeq
+    assert(vals === Seq((0L, "a"), (1L, "b"), (2L, "c")),
+      s"a torn tail survived the other caller's recovery: $vals")
+  }
+
+  test("concurrent appends from four threads land dense offsets, nothing lost") {
+    val dir = Files.createTempDirectory("graft_replay_concurrent").toString
+    val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
+    val threads = (0 until 4).map { t =>
+      new Thread(() =>
+        try (0 until 25).foreach { c =>
+          KafkaReplay.append(dir, (0 until 4).map(p =>
+            KafkaReplay.Record(p, null, s"t$t-c$c-p$p".getBytes, tsMicros)))
+        } catch { case e: Throwable => failures.add(e); () })
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    assert(failures.isEmpty, s"append failed: ${failures.peek()}")
+    assert(KafkaReplay.endOffsets(dir) ===
+      scala.collection.immutable.SortedMap((0 until 4).map(_ -> 100L): _*))
+    val rows = spark.read.format(KafkaReplay.ShortName).option("path", dir).load()
+      .select($"partition", $"offset", $"value".cast("string"))
+      .as[(Int, Long, String)].collect()
+    (0 until 4).foreach { p =>
+      val part = rows.filter(_._1 == p)
+      assert(part.map(_._2).sorted.toSeq === (0L until 100L),
+        s"partition $p offsets not dense")
+      assert(part.map(_._3).toSet.size === 100, s"partition $p lost or duplicated values")
+    }
+  }
+
+  test("kafka_sink_pipeline leaves no checkpoint or staging dir behind") {
+    val tmp = new java.io.File(sys.props("java.io.tmpdir"))
+    def scratch(): Set[String] = Option(tmp.list()).getOrElse(Array.empty[String])
+      .filter(n => n.startsWith("graft_sink_ckpt") || n.startsWith("graft_sink_wire"))
+      .toSet
+    val before = scratch()
+    val rows = SparkEntry.queries("kafka_sink_pipeline")(spark, sf).collect()
+    assert(rows.length.toLong === graft.sources.Tables.customer(spark, sf).count())
+    assert(scratch() === before, "kafka_sink_pipeline leaked scratch dirs")
   }
 
   test("paced reads seek via the sparse position index, same rows as a full scan") {
@@ -369,27 +386,17 @@ class KafkaReplaySpec extends SparkSpec {
   test("sink commit is idempotent per epoch: a replayed micro-batch never double-appends") {
     val dir = Files.createTempDirectory("graft_replay_epoch").toString
     val w = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema)
-    def spool(name: String, recs: Seq[(Int, Array[Byte])]): KafkaReplay.SpoolMsg = {
-      val f = new java.io.File(dir, name); f.getParentFile.mkdirs()
-      val out = new java.io.DataOutputStream(new java.io.FileOutputStream(f))
-      recs.foreach { case (p, v) =>
-        out.writeInt(p); out.writeLong(0L); out.writeInt(-1)
-        out.writeInt(v.length); out.write(v)
-      }
-      out.close()
-      KafkaReplay.SpoolMsg(f.getPath, 0)
-    }
-    w.commit(7L, Array(spool(".epoch-7-task-00000-0.spool",
+    w.commit(7L, Array(spool(dir, ".epoch-7-task-00000-0.spool",
       Seq((0, "a".getBytes), (0, "b".getBytes)))))
     assert(KafkaReplay.endOffsets(dir) ===
       scala.collection.immutable.SortedMap(0 -> 2L))
     // the SAME epoch re-commits (sink-side retry after a failure): skipped wholesale
-    w.commit(7L, Array(spool(".epoch-7-task-00000-1.spool",
+    w.commit(7L, Array(spool(dir, ".epoch-7-task-00000-1.spool",
       Seq((0, "a".getBytes), (0, "b".getBytes)))))
     assert(KafkaReplay.endOffsets(dir) ===
       scala.collection.immutable.SortedMap(0 -> 2L))
     // a NEW epoch appends
-    w.commit(8L, Array(spool(".epoch-8-task-00000-0.spool", Seq((0, "c".getBytes)))))
+    w.commit(8L, Array(spool(dir, ".epoch-8-task-00000-0.spool", Seq((0, "c".getBytes)))))
     assert(KafkaReplay.endOffsets(dir) ===
       scala.collection.immutable.SortedMap(0 -> 3L))
   }
@@ -422,7 +429,7 @@ class KafkaReplaySpec extends SparkSpec {
     val before = KafkaReplay.endOffsets(dir)
     val f0 = new java.io.File(dir, "partition-0.log")
     val len0 = f0.length()
-    // simulate a sink crash between appendSpools and the ledger write:
+    // simulate a sink crash after its frames landed, before the ledger write:
     // extra record bytes in the log + a live manifest whose key never
     // reached the ledger (the exact recoverTornAppend window)
     val out = new java.io.DataOutputStream(new java.io.FileOutputStream(f0, true))
