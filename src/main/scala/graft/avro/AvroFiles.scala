@@ -7,7 +7,6 @@ import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.graft.InternalDf
 
 /** Avro Object Container File (OCF) source + sink over the plain
   * `org.apache.avro` runtime — the archival/file half of the Avro story
@@ -28,9 +27,11 @@ import org.apache.spark.sql.graft.InternalDf
   *    micro-batch, into that batch's `batch=<id>/`. Paths go through
   *    the Hadoop FileSystem API, so the same call sites write `s3a://`
   *    URIs.
-  *  - READ: sync-marker splits, the same contract a built-in FileFormat
-  *    gives parquet — each container is planned as `ceil(len /
-  *    splitBytes)` byte ranges, a task seeks to the first Avro sync
+  *  - READ: [[read]] is `spark.read.format("graft-avro")` — the one OCF
+  *    reader, [[AvroTable.OcfScan]], which decodes only the columns the
+  *    query uses. Sync-marker splits, the same contract a built-in
+  *    FileFormat gives parquet — each container is planned as `ceil(len
+  *    / splitBytes)` byte ranges, a task seeks to the first Avro sync
   *    marker at-or-after its range start (`FileReader.sync`) and decodes
   *    blocks until `pastSync(end)`, so every block is read by exactly
   *    one task and a multi-GiB archival object parallelizes across the
@@ -66,23 +67,6 @@ object AvroFiles {
       .option("syncIntervalBytes", syncIntervalBytes.toLong)
       .save(outDir)
 
-  /** Observable skip accounting for a [[read]] call — the r3 "silent
-    * skip" fix. The accumulators fill as the scan executes, surfacing in
-    * the Spark UI like any task metric.
-    *
-    * Validity: read them after exactly ONE successful action over the
-    * returned DataFrame. Task retries, speculative duplicates, or a
-    * second action re-executing the scan will increment again — this is
-    * inherent to Spark accumulators in transformations; treat the values
-    * as a per-run diagnostic, not an exactly-once ledger. Granularity:
-    * `truncatedFiles` increments once per affected SPLIT — a corrupt
-    * tail of a container planned as k byte-ranges can count up to k
-    * (each range independently hits the mangled region), so read it as
-    * "truncation events observed", not distinct files. */
-  final case class ReadMetrics(
-      corruptHeaderFiles: org.apache.spark.util.LongAccumulator,
-      truncatedFiles: org.apache.spark.util.LongAccumulator)
-
   /** Target bytes per read task: a container larger than this is split
     * on Avro sync markers into multiple ranges; files (or ranges)
     * smaller than it are bin-packed several-to-a-task. Mirrors
@@ -96,14 +80,8 @@ object AvroFiles {
   final case class OcfSplit(path: String, start: Long, length: Long)
 
   /** Plan the splits for every `*.avro` under `dir` (recursive),
-    * bin-packed into task groups of ~`splitBytes`. Driver-side metadata
-    * only. Exposed for tests/planning introspection. */
-  def planSplits(spark: SparkSession, dir: String,
-      splitBytes: Long): Seq[Seq[OcfSplit]] =
-    planSplits(spark.sparkContext.hadoopConfiguration, dir, splitBytes)
-
-  /** [[planSplits]] against an explicit Hadoop configuration (the DSv2
-    * table path, where no session travels with the scan). */
+    * bin-packed into task groups of ~`splitBytes`: one input partition
+    * of the `graft-avro` scan per group. Driver-side metadata only. */
   def planSplits(conf: org.apache.hadoop.conf.Configuration, dir: String,
       splitBytes: Long): Seq[Seq[OcfSplit]] = {
     require(splitBytes > 0, s"splitBytes must be positive: $splitBytes")
@@ -156,40 +134,22 @@ object AvroFiles {
     * mid-stream yields its rows up to the corruption — one bad object
     * in a 100 TB prefix must not kill the scan (the S6 malformed-skip
     * semantic applied at container granularity). Strict mode fails the
-    * task, surfacing the bad path. Either way the skips are COUNTED —
-    * see [[readWithMetrics]]; this overload discards the handle. */
+    * task, surfacing the bad path. Either way the skips are COUNTED, as
+    * the scan's `corruptHeaderFiles` and `truncatedFiles` SQL metrics
+    * (per split; see [[AvroTable.CorruptHeaderFiles]]). */
   def read(spark: SparkSession, dir: String, readerSchemaJson: String,
       permissive: Boolean = false,
       splitBytes: Long = DefaultSplitBytes): DataFrame =
-    readWithMetrics(spark, dir, readerSchemaJson, permissive, splitBytes)._1
-
-  /** [[read]] plus its [[ReadMetrics]] handle (accumulators are live —
-    * read them after an action has executed the scan). */
-  def readWithMetrics(spark: SparkSession, dir: String, readerSchemaJson: String,
-      permissive: Boolean = false,
-      splitBytes: Long = DefaultSplitBytes): (DataFrame, ReadMetrics) = {
-    val confAccess = InternalDf.hadoopConfAccessor(spark)
-    val corruptHeaderFiles = spark.sparkContext.longAccumulator("ocfCorruptHeaderFiles")
-    val truncatedFiles = spark.sparkContext.longAccumulator("ocfTruncatedFiles")
-    val bins = planSplits(spark, dir, splitBytes)
-    val schema = AvroCodec.sparkStructType(readerSchemaJson)
-    val rdd = spark.sparkContext
-      .parallelize(bins, math.max(1, bins.size))
-      .mapPartitions { binIt =>
-        binIt.flatMap(_.iterator).flatMap { sp =>
-          decodeSplit(sp, confAccess(), readerSchemaJson, permissive,
-            onCorruptHeader = () => corruptHeaderFiles.add(1L),
-            onTruncated = () => truncatedFiles.add(1L))
-        }
-      }
-    (InternalDf.fromInternalRdd(spark, rdd, schema),
-      ReadMetrics(corruptHeaderFiles, truncatedFiles))
-  }
+    spark.read.format(AvroTable.ShortName)
+      .option("avroSchema", readerSchemaJson)
+      .option("permissive", permissive)
+      .option("splitBytes", splitBytes)
+      .load(dir)
 
   /** Decode one planned split to InternalRows: open, seek to the first
     * sync marker at-or-after the range start, stream blocks until past
-    * the range end. Shared by the RDD read path and the `graft-avro`
-    * DSv2 table's partition readers. Permissive-mode skips invoke the
+    * the range end: the `graft-avro` scan's partition reader, per split
+    * of its group. Permissive-mode skips invoke the
     * callbacks (a corrupt header is attributed only to the split owning
     * byte 0, so a multi-split file counts once). */
   private[avro] def decodeSplit(sp: OcfSplit,

@@ -7,10 +7,12 @@ import scala.jdk.CollectionConverters._
 import org.apache.avro.file.{DataFileConstants, DataFileWriter}
 import org.apache.avro.generic.{GenericDatumWriter, GenericRecord}
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
+import org.apache.spark.sql.connector.metric.{CustomMetric, CustomSumMetric, CustomTaskMetric}
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types.StructType
@@ -19,19 +21,22 @@ import org.apache.spark.util.SerializableConfiguration
 
 /** `graft-avro`: the OCF source as a named DataSource-V2 table, so a
   * library user reads Avro archives with the stock API —
-  * `spark.read.format("graft-avro").load(dir)` — instead of calling
-  * [[AvroFiles.read]]:
+  * `spark.read.format("graft-avro").load(dir)`. It is the library's only
+  * OCF reader: [[AvroFiles.read]] is this scan with the `avroSchema`,
+  * `permissive` and `splitBytes` options.
   *
   *  - schema inference from the first container's writer schema (the
   *    header carries it; metadata-only probe), or an explicit
   *    `avroSchema` option for schema-evolution reads (reader-added
   *    fields default, writer-only fields drop, fields match by name);
-  *  - the same sync-marker byte-range split planning as
-  *    [[AvroFiles.planSplits]] — one task group per ~`splitBytes`
-  *    (default 128 MiB), so a multi-GiB archival object parallelizes
-  *    and small files bin-pack;
+  *  - sync-marker byte-range split planning ([[AvroFiles.planSplits]])
+  *    — one task group per ~`splitBytes` (default 128 MiB), so a
+  *    multi-GiB archival object parallelizes and small files bin-pack;
   *  - `permissive` option for the lake-robustness mode (corrupt-header
-  *    files skipped, corrupt tails salvaged).
+  *    files skipped, corrupt tails salvaged), its skips reported as the
+  *    scan's `corruptHeaderFiles` / `truncatedFiles` SQL metrics;
+  *  - one file listing and one Hadoop-conf broadcast per scan, however
+  *    many copies of the scan node the planner and AQE make.
   *
   * Read options: `path` (required), `avroSchema` (reader schema JSON),
   * `splitBytes`, `permissive`. Write options: `path`, `avroSchema`
@@ -48,25 +53,53 @@ object AvroTable {
 
   final case class OcfBin(splits: Seq[AvroFiles.OcfSplit]) extends InputPartition
 
+  /** A typed read or write option, or `default` when absent; a value
+    * `parse` rejects fails naming the option. */
+  private def parsedOption[T](options: CaseInsensitiveStringMap, name: String,
+      default: T, expected: String = "a number")(parse: String => Option[T]): T =
+    Option(options.get(name)).fold(default)(v => parse(v.trim).getOrElse(
+      throw new IllegalArgumentException(
+        s"$ShortName: option '$name' must be $expected, got '$v'")))
+
   /** Project the reader schema to `required`'s top-level fields, in
     * `required`'s order — Avro schema resolution then SKIPS every other
     * field during decode (no UTF-8 materialization, no nested-record
     * construction for pruned columns), which is the column-pruning
     * behavior a columnar scan gives for free, at the best a row format
-    * can do. */
+    * can do. Each field is copied whole (aliases, order, props and the
+    * raw JSON default), so aliased renames and bytes defaults resolve
+    * as they do against the full reader schema. */
   private[avro] def projectSchemaJson(fullJson: String,
       required: StructType): String = {
     val full = AvroCodec.parsedSchema(fullJson)
-    val byName = full.getFields.asScala.map(f => f.name() -> f).toMap
     val fields = required.fields.toSeq.map { rf =>
-      val f = byName.getOrElse(rf.name, throw new IllegalArgumentException(
+      val f = Option(full.getField(rf.name)).getOrElse(throw new IllegalArgumentException(
         s"$ShortName: required column ${rf.name} not in reader schema"))
-      new org.apache.avro.Schema.Field(f.name(), f.schema(), f.doc(),
-        f.defaultVal())
+      new org.apache.avro.Schema.Field(f, f.schema())
     }
     org.apache.avro.Schema.createRecord(full.getName, full.getDoc,
       full.getNamespace, false, fields.asJava).toString
   }
+
+  /** Permissive-mode skips, summed over the scan's tasks: files whose
+    * header did not open, and splits whose decode broke mid-stream (a
+    * corrupt tail of a container planned as k ranges can count up to k).
+    * Spark builds these through their no-arg constructors when it
+    * aggregates task values. */
+  final class CorruptHeaderFiles extends CustomSumMetric {
+    override def name(): String = "corruptHeaderFiles"
+    override def description(): String = "OCF files skipped: corrupt header"
+  }
+  final class TruncatedFiles extends CustomSumMetric {
+    override def name(): String = "truncatedFiles"
+    override def description(): String = "OCF splits cut short: corrupt block"
+  }
+
+  private def taskMetric(metricName: String, v: Long): CustomTaskMetric =
+    new CustomTaskMetric {
+      override def name(): String = metricName
+      override def value(): Long = v
+    }
 
   final class OcfScan(path: String, readerSchemaJson: String,
       splitBytes: Long, permissive: Boolean)
@@ -84,29 +117,43 @@ object AvroTable {
       s"$ShortName path=$path ReadSchema: " +
         readSchema().fieldNames.mkString("[", ",", "]")
     override def toBatch: Batch = this
-    override def planInputPartitions(): Array[InputPartition] =
+    override def supportedCustomMetrics(): Array[CustomMetric] =
+      Array(new CorruptHeaderFiles, new TruncatedFiles)
+
+    // the planner and AQE ask every copy of the scan node: list the
+    // files and ship the Hadoop conf (one broadcast) once per scan
+    private lazy val partitions: Array[InputPartition] =
       AvroFiles.planSplits(
         SparkSession.active.sparkContext.hadoopConfiguration, path, splitBytes)
         .map(OcfBin(_): InputPartition).toArray
-    override def createReaderFactory(): PartitionReaderFactory =
+    private lazy val readerFactory: PartitionReaderFactory = {
+      val sc = SparkSession.active.sparkContext
       OcfReaderFactory(
-        new SerializableConfiguration(
-          SparkSession.active.sparkContext.hadoopConfiguration),
+        sc.broadcast(new SerializableConfiguration(sc.hadoopConfiguration)),
         projectedJson, permissive)
+    }
+    override def planInputPartitions(): Array[InputPartition] = partitions
+    override def createReaderFactory(): PartitionReaderFactory = readerFactory
   }
 
-  final case class OcfReaderFactory(conf: SerializableConfiguration,
+  final case class OcfReaderFactory(conf: Broadcast[SerializableConfiguration],
       readerSchemaJson: String, permissive: Boolean)
       extends PartitionReaderFactory {
     override def createReader(p: InputPartition): PartitionReader[InternalRow] = {
+      var corruptHeaders = 0L
+      var truncated = 0L
       val rows = p.asInstanceOf[OcfBin].splits.iterator.flatMap(sp =>
-        AvroFiles.decodeSplit(sp, conf.value, readerSchemaJson, permissive,
-          onCorruptHeader = () => (), onTruncated = () => ()))
+        AvroFiles.decodeSplit(sp, conf.value.value, readerSchemaJson, permissive,
+          onCorruptHeader = () => corruptHeaders += 1,
+          onTruncated = () => truncated += 1))
       new PartitionReader[InternalRow] {
         private var row: InternalRow = _
         override def next(): Boolean =
           if (rows.hasNext) { row = rows.next(); true } else false
         override def get(): InternalRow = row
+        override def currentMetricsValues(): Array[CustomTaskMetric] = Array(
+          taskMetric("corruptHeaderFiles", corruptHeaders),
+          taskMetric("truncatedFiles", truncated))
         override def close(): Unit = ()
       }
     }
@@ -119,13 +166,6 @@ object AvroTable {
   /** Every container one task wrote, as (temp path, final name) pairs. */
   final case class OcfPartMsg(parts: Seq[(String, String)])
       extends WriterCommitMessage
-
-  /** A numeric write option, or `default` when absent. */
-  private def numOption[T](options: CaseInsensitiveStringMap, name: String,
-      default: T)(parse: String => Option[T]): T =
-    Option(options.get(name)).fold(default)(v => parse(v.trim).getOrElse(
-      throw new IllegalArgumentException(
-        s"$ShortName: option '$name' must be a number, got '$v'")))
 
   /** Task-side part writer — the library's one OCF container writer.
     * Rows stream into `_tmp-` containers; the writer closes its
@@ -233,9 +273,8 @@ object AvroTable {
         TableCapability.TRUNCATE).asJava
     override def newScanBuilder(o: CaseInsensitiveStringMap): ScanBuilder =
       new OcfScan(path, readerSchemaJson,
-        Option(o.get("splitBytes")).map(_.toLong)
-          .getOrElse(AvroFiles.DefaultSplitBytes),
-        Option(o.get("permissive")).exists(_.toBoolean))
+        parsedOption(o, "splitBytes", AvroFiles.DefaultSplitBytes)(_.toLongOption),
+        parsedOption(o, "permissive", false, "true or false")(_.toBooleanOption))
     override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
       new WriteBuilder
           with org.apache.spark.sql.connector.write.SupportsTruncate {
@@ -248,8 +287,8 @@ object AvroTable {
             Option(o.get("avroSchema"))
               .getOrElse(AvroCodec.avroSchemaJson(info.schema(), "Record", "graft")),
             Option(o.get("codec")).getOrElse("deflate"),
-            numOption(o, "syncIntervalBytes", DataFileConstants.DEFAULT_SYNC_INTERVAL)(_.toIntOption),
-            numOption(o, "maxRecordsPerFile", 0L)(_.toLongOption),
+            parsedOption(o, "syncIntervalBytes", DataFileConstants.DEFAULT_SYNC_INTERVAL)(_.toIntOption),
+            parsedOption(o, "maxRecordsPerFile", 0L)(_.toLongOption),
             new SerializableConfiguration(
               SparkSession.active.sparkContext.hadoopConfiguration))
           new Write {

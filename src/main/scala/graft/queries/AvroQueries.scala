@@ -2,6 +2,7 @@ package graft.queries
 
 import java.time.Instant
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -493,11 +494,7 @@ object AvroQueries {
     * with dense offsets and lossless payload bytes. */
   def kafkaSinkPipeline(spark: SparkSession, dir: String): DataFrame = {
     val log = ocfDir(dir, "sink_log")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(new java.io.File(log)) // the sink appends; each run produces afresh
+    FileUtils.deleteQuietly(new java.io.File(log)) // the sink appends; each run produces afresh
     // the wire rows stage through a FILE stream, not a MemoryStream: a
     // MemoryStream needs the whole encoded fixture collect()ed to the
     // driver — an unbounded driver copy at scale, and the only streamed
@@ -520,8 +517,8 @@ object AvroQueries {
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
     } finally {
-      rm(new java.io.File(ckpt))
-      rm(new java.io.File(wireDir))
+      FileUtils.deleteQuietly(new java.io.File(ckpt))
+      FileUtils.deleteQuietly(new java.io.File(wireDir))
     }
     val raw = spark.read.format(graft.sources.KafkaReplay.ShortName)
       .option("path", log).load()

@@ -6,6 +6,7 @@ import java.util.{Map => JMap}
 import scala.collection.immutable.SortedMap
 import scala.jdk.CollectionConverters._
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
@@ -104,11 +105,7 @@ object KafkaReplay {
   def writeLog(df: org.apache.spark.sql.DataFrame, path: String,
       numTasks: Int = 8): Unit = {
     val dir = new File(path)
-    def rm(f: File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-      f.delete(); ()
-    }
-    rm(dir)
+    FileUtils.deleteQuietly(dir)
     dir.mkdirs()
     import org.apache.spark.sql.functions.col
     df.select(col("partition").cast("int"), col("key"), col("value"),

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -153,11 +154,11 @@ object StreamGate {
       }
     } catch { case e: Throwable =>
       // a failed start leaves no query to tear the scratch down
-      scratch.foreach(deleteRecursively)
+      scratch.foreach(FileUtils.deleteQuietly)
       throw e
     }
     try q.awaitTermination()
-    finally scratch.foreach(deleteRecursively)
+    finally scratch.foreach(FileUtils.deleteQuietly)
     // env-gated receipt for harness-cost investigations: batch count ×
     // per-batch duration is the fixed-overhead profile of a gate run
     if (sys.env.contains("SPARK_GRAFT_STREAM_DEBUG"))
@@ -170,10 +171,5 @@ object StreamGate {
           s"stateRows=${p.stateOperators.map(_.numRowsTotal).mkString(",")} " +
           s"commitMs=${p.stateOperators.map(_.commitTimeMs).mkString(",")}")
       }
-  }
-
-  private def deleteRecursively(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(deleteRecursively))
-    f.delete(): Unit
   }
 }

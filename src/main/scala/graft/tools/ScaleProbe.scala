@@ -1,5 +1,6 @@
 package graft.tools
 
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.SparkSession
 
 /** Registry-wide EMPIRICAL scale probe (VERDICT r10 next-round #1):
@@ -307,13 +308,8 @@ object ScaleProbe {
   }
 
   /** Recursively deletes an inflated scratch corpus. */
-  def cleanup(dir: String): Unit = {
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) Option(f.listFiles()).foreach(_.foreach(rm))
-      f.delete(): Unit
-    }
-    rm(new java.io.File(dir))
-  }
+  def cleanup(dir: String): Unit =
+    FileUtils.deleteQuietly(new java.io.File(dir)): Unit
 
   private def timedMeasure(spark: SparkSession, dir: String, f: Family):
       (ShuffleAudit.Volumes, Double) = {

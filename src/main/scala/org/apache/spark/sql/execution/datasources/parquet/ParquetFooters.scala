@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.StructType
   * the call `DataSource.resolveRelation` or `ParquetFileFormat.inferSchema`
   * makes; the choice of footer file lives with the caller. Lives under
   * the org.apache.spark package for access; contains no logic, the same
-  * convention as `org.apache.spark.sql.graft.InternalDf`.
+  * convention as `org.apache.spark.sql.graft.ExprBridge`.
   */
 object ParquetFooters {
 

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 
 import graft.avro.AvroFiles
@@ -43,7 +42,7 @@ class AvroFilesSpec extends SparkSpec {
   private val schemaV2 = AvroQueries.userV2SchemaJson
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_ocf_spec").toString
+    suiteTempDir("graft_ocf_spec")
 
   private def usersDf(n: Int, partitions: Int) = {
     val rows = (0 until n).map { i =>
@@ -154,11 +153,16 @@ class AvroFilesSpec extends SparkSpec {
     for (i <- bytes.length - 40 until bytes.length - 32) bytes(i) = 0xFF.toByte
     java.nio.file.Files.write(
       java.nio.file.Paths.get(dir, "scribbled.avro"), bytes)
-    val (back, m) = AvroFiles.readWithMetrics(spark, dir, schema, permissive = true)
-    val n = back.count() // execute the scan; accumulators fill
+    val back = AvroFiles.read(spark, dir, schema, permissive = true)
+    // an action on `back` itself, so its own executed plan holds the
+    // scan whose metrics filled (`back.count()` would plan a new query)
+    val n = back.collect().length
     assert(n >= 10 && n < 20) // intact file + salvaged prefix of the copy
-    assert(m.corruptHeaderFiles.value === 1L, "garbage.avro should be counted")
-    assert(m.truncatedFiles.value === 1L, "scribbled.avro should be counted")
+    val scan = graft.tools.ShuffleAudit.flatten(back.queryExecution.executedPlan)
+      .collectFirst { case s: BatchScanExec => s }
+      .getOrElse(fail("no BatchScanExec in the executed plan"))
+    assert(scan.metrics("corruptHeaderFiles").value === 1L, "garbage.avro should be counted")
+    assert(scan.metrics("truncatedFiles").value === 1L, "scribbled.avro should be counted")
   }
 
   test("sync-marker splits: one large container reads through MANY tasks, losslessly") {
@@ -171,7 +175,8 @@ class AvroFilesSpec extends SparkSpec {
     val len = new java.io.File(dir).listFiles()
       .filter(_.getName.endsWith(".avro")).head.length()
     val splitBytes = len / 8 + 1 // force ~8 ranges over the one file
-    val bins = AvroFiles.planSplits(spark, dir, splitBytes)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val bins = AvroFiles.planSplits(conf, dir, splitBytes)
     assert(bins.map(_.size).sum >= 4, s"expected multiple splits, got $bins")
     assert(bins.flatten.map(_.length).sum === len, "splits must tile the file")
     val back = AvroFiles.read(spark, dir, schema, splitBytes = splitBytes)
@@ -179,7 +184,7 @@ class AvroFilesSpec extends SparkSpec {
     assert(back.count() === 4000)
     assert(back.select("user_id").distinct().count() === 4000)
     // and the task count actually fanned out (parallelism beyond file granularity)
-    assert(graft.avro.AvroFiles.planSplits(spark, dir, splitBytes).size >= 4)
+    assert(AvroFiles.planSplits(conf, dir, splitBytes).size >= 4)
     // boundary sanity at a pathological split size: 1-byte-over ranges
     assert(AvroFiles.read(spark, dir, schema, splitBytes = len - 1).count() === 4000)
   }

@@ -127,11 +127,12 @@ class EdgeCasesSpec extends SparkSpec {
 
   test("OCF split reader: empty dir reads empty; zero-length files planned away") {
     val dir = java.nio.file.Files.createTempDirectory("graft_ocf_empty").toString
-    assert(graft.avro.AvroFiles.planSplits(spark, dir, 1 << 20).isEmpty)
+    val conf = spark.sparkContext.hadoopConfiguration
+    assert(graft.avro.AvroFiles.planSplits(conf, dir, 1 << 20).isEmpty)
     assert(graft.avro.AvroFiles.read(spark, dir,
       AvroFilesSpec.eventSchemaJson).count() === 0)
     java.nio.file.Files.createFile(java.nio.file.Paths.get(dir, "zero.avro"))
-    assert(graft.avro.AvroFiles.planSplits(spark, dir, 1 << 20).isEmpty)
+    assert(graft.avro.AvroFiles.planSplits(conf, dir, 1 << 20).isEmpty)
   }
 
   test("replay sink rejects an input missing the producer-record columns") {

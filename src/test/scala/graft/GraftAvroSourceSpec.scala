@@ -5,10 +5,12 @@ import java.nio.file.Files
 import graft.avro.AvroFiles
 import graft.queries.AvroQueries
 
-/** The `graft-avro` named DSv2 source: stock `spark.read.format(...)`
-  * surface over the OCF split reader — schema inference from the writer
-  * header, explicit-schema evolution reads, split parallelism, and
-  * permissive mode, all equal to the [[AvroFiles.read]] function path.
+/** The `graft-avro` named DSv2 source, the library's one OCF reader
+  * (and [[AvroFiles.read]] underneath): stock `spark.read.format(...)`
+  * surface over the sync-marker split reader — schema inference from
+  * the writer header, explicit-schema evolution reads (aliased renames,
+  * defaults), split parallelism, column pruning, permissive mode, and
+  * read-option validation.
   */
 class GraftAvroSourceSpec extends SparkSpec {
 
@@ -16,7 +18,7 @@ class GraftAvroSourceSpec extends SparkSpec {
   private val schemaV2 = AvroQueries.userV2SchemaJson
 
   private def tmp(): String =
-    Files.createTempDirectory("graft_avro_dsv2").toString
+    suiteTempDir("graft_avro_dsv2")
 
   private def usersDf(n: Int, partitions: Int) = {
     import org.apache.spark.sql.Row
@@ -54,6 +56,21 @@ class GraftAvroSourceSpec extends SparkSpec {
     assert(evolved.count() === 10)
     assert(evolved.select("status").distinct().collect()
       .map(_.getString(0)).toSeq === Seq("active"))
+    // an aliased rename (writer `email` -> reader `contact`) and a
+    // defaulted bytes-decimal (" " = 0x20 = 32 -> 0.32 at scale 2) both
+    // resolve through the pruned scan
+    val renamed =
+      """{"type": "record", "name": "User", "namespace": "com.dorjee.avro",
+        |  "fields": [
+        |    {"name": "user_id", "type": "string"},
+        |    {"name": "contact", "type": "string", "aliases": ["email"]},
+        |    {"name": "fee", "type": {"type": "bytes", "logicalType": "decimal",
+        |      "precision": 4, "scale": 2}, "default": " "}]}""".stripMargin
+    val rows = spark.read.format("graft-avro").option("avroSchema", renamed)
+      .load(dir).select("user_id", "contact", "fee").collect()
+    assert(rows.length === 10)
+    assert(rows.forall(r => r.getString(1) == s"u${r.getString(0).stripPrefix("id_")}@example.com"))
+    assert(rows.forall(_.getDecimal(2).toPlainString == "0.32"))
   }
 
   test("user-supplied .schema(...) is honored over the header probe (r13 review)") {
@@ -96,6 +113,12 @@ class GraftAvroSourceSpec extends SparkSpec {
     assert(back.rdd.getNumPartitions >= 4, "expected split fan-out")
     assert(back.count() === 4000)
     assert(back.select("user_id").distinct().count() === 4000)
+    // a malformed value fails naming the option, not with a bare
+    // NumberFormatException
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft-avro").option("splitBytes", "x").load(dir).count()
+    }
+    assert(e.getMessage.contains("splitBytes"), e.getMessage)
   }
 
   test("column pruning reaches the scan: only required fields decode") {
@@ -124,6 +147,10 @@ class GraftAvroSourceSpec extends SparkSpec {
     }
     assert(spark.read.format("graft-avro")
       .option("permissive", "true").load(dir).count() === 10)
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("graft-avro").option("permissive", "yes").load(dir).count()
+    }
+    assert(e.getMessage.contains("permissive"), e.getMessage)
   }
 
   test("V2 batch write: save/overwrite/append round-trip with a derived schema") {

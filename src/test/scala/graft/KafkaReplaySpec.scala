@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import java.time.Instant
 
 import org.apache.spark.sql.Row
@@ -44,7 +43,7 @@ class KafkaReplaySpec extends SparkSpec {
 
   /** A topic fixture: n users across 2 partitions + one tombstone. */
   private def writeTopic(n: Int): String = {
-    val dir = Files.createTempDirectory("graft_replay").toString
+    val dir = suiteTempDir("graft_replay")
     appendUsers(dir, 0 until n)
     KafkaReplay.append(dir, Seq(
       KafkaReplay.Record(0, "id_9".getBytes, null, tsMicros))) // tombstone (T1)
@@ -146,7 +145,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("sink epoch ledger is query-scoped: two queries sharing a log dir never drop batches") {
-    val dir = Files.createTempDirectory("graft_replay_multiq").toString
+    val dir = suiteTempDir("graft_replay_multiq")
     val wA = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryA")
     val wB = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryB")
     // both queries commit THEIR OWN epoch 0 — pre-r13 the bare epoch-id
@@ -163,7 +162,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("sink commit protocol: a torn append is truncated away on the next commit") {
-    val dir = Files.createTempDirectory("graft_replay_torn").toString
+    val dir = suiteTempDir("graft_replay_torn")
     val w = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema, "queryT")
     w.commit(0L, Array(spool(dir, ".epoch-0-task-t-0.spool",
       Seq((0, "a".getBytes), (0, "b".getBytes)))))
@@ -204,7 +203,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("append and the sink commit share one writer: each truncates the other's torn tail") {
-    val dir = Files.createTempDirectory("graft_replay_one_writer").toString
+    val dir = suiteTempDir("graft_replay_one_writer")
     val log0 = new java.io.File(dir, "partition-0.log")
     val mf = new java.io.File(dir, "_commit.inflight")
     // a crash after the manifest and half a frame: the key is never ledgered
@@ -231,7 +230,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("concurrent appends from four threads land dense offsets, nothing lost") {
-    val dir = Files.createTempDirectory("graft_replay_concurrent").toString
+    val dir = suiteTempDir("graft_replay_concurrent")
     val failures = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]()
     val threads = (0 until 4).map { t =>
       new Thread(() =>
@@ -268,7 +267,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("paced reads seek via the sparse position index, same rows as a full scan") {
-    val dir = Files.createTempDirectory("graft_replay_seek").toString
+    val dir = suiteTempDir("graft_replay_seek")
     val n = 3000
     val rows = (0 until n).map(i =>
       (0, s"k$i".getBytes, s"v$i".getBytes, i.toLong, i.toLong))
@@ -326,8 +325,8 @@ class KafkaReplaySpec extends SparkSpec {
 
   test("exactly-once restart: checkpointed offsets survive; appended records flow once") {
     val dir = writeTopic(4)
-    val out = Files.createTempDirectory("graft_replay_sink").toString
-    val ckpt = Files.createTempDirectory("graft_replay_ckpt").toString
+    val out = suiteTempDir("graft_replay_sink")
+    val ckpt = suiteTempDir("graft_replay_ckpt")
     def run(): Unit = {
       val q = StreamingPipeline.replayStream(spark, dir)
         .select($"key", $"partition", $"offset",
@@ -353,8 +352,8 @@ class KafkaReplaySpec extends SparkSpec {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sqlCtx: org.apache.spark.sql.SQLContext =
       spark.sqlContext.asInstanceOf[org.apache.spark.sql.SQLContext]
-    val dir = Files.createTempDirectory("graft_replay_sink_v2").toString
-    val ckpt = Files.createTempDirectory("graft_replay_sink_ckpt").toString
+    val dir = suiteTempDir("graft_replay_sink_v2")
+    val ckpt = suiteTempDir("graft_replay_sink_ckpt")
     val mem = MemoryStream[(Int, String, String)] // (partition, key, value|null)
     def run(): Unit = {
       val q = mem.toDF().toDF("partition", "k", "v")
@@ -384,7 +383,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("sink commit is idempotent per epoch: a replayed micro-batch never double-appends") {
-    val dir = Files.createTempDirectory("graft_replay_epoch").toString
+    val dir = suiteTempDir("graft_replay_epoch")
     val w = new KafkaReplay.ReplayStreamingWrite(dir, KafkaReplay.sinkSchema)
     w.commit(7L, Array(spool(dir, ".epoch-7-task-00000-0.spool",
       Seq((0, "a".getBytes), (0, "b".getBytes)))))
@@ -456,7 +455,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("maxOffsetsPerTrigger prorates across partitions by lag (r15)") {
-    val dir = Files.createTempDirectory("graft_prorate").toString
+    val dir = suiteTempDir("graft_prorate")
     // p0: 100 records, p1: 4 records
     KafkaReplay.append(dir,
       (0 until 100).map(i => KafkaReplay.Record(0, null, s"a$i".getBytes, tsMicros)) ++
@@ -493,7 +492,7 @@ class KafkaReplaySpec extends SparkSpec {
   }
 
   test("sink write schema is validated on TYPES, not just names (r15)") {
-    val dir = Files.createTempDirectory("graft_sinktype").toString
+    val dir = suiteTempDir("graft_sinktype")
     val ex = intercept[Exception] {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
@@ -501,7 +500,7 @@ class KafkaReplaySpec extends SparkSpec {
       val q = ms.toDF().toDF("key", "value", "partition") // partition: STRING
         .writeStream.format(KafkaReplay.ShortName)
         .option("path", dir)
-        .option("checkpointLocation", Files.createTempDirectory("ck").toString)
+        .option("checkpointLocation", suiteTempDir("ck"))
         .start()
       try { ms.addData((Array[Byte](1), Array[Byte](2), "0")); q.processAllAvailable() }
       finally q.stop()
@@ -535,7 +534,7 @@ class KafkaReplaySpec extends SparkSpec {
       "scratch instead of resuming a stale position (r16 ADVICE)") {
     // dir A: 3 records on partition 0; read once to prime this JVM's
     // position cache with A's framing state
-    val dirA = Files.createTempDirectory("graft_replaceA").toString
+    val dirA = suiteTempDir("graft_replaceA")
     KafkaReplay.append(dirA, (0 until 3).map(i =>
       KafkaReplay.Record(0, s"a_$i".getBytes, s"va_$i".getBytes, tsMicros)))
     def readKeys(dir: String): Seq[String] =
@@ -545,7 +544,7 @@ class KafkaReplaySpec extends SparkSpec {
     assert(readKeys(dirA) === Seq("a_0", "a_1", "a_2"))
     // dir B: a LONGER log with different content AND a different record-0
     // timestamp, written independently (another JVM's writeLog analog)
-    val dirB = Files.createTempDirectory("graft_replaceB").toString
+    val dirB = suiteTempDir("graft_replaceB")
     KafkaReplay.append(dirB, (0 until 7).map(i =>
       KafkaReplay.Record(0, s"b_$i".getBytes, s"vb_longer_$i".getBytes,
         tsMicros + 1000000L)))
@@ -568,7 +567,7 @@ class KafkaReplaySpec extends SparkSpec {
     // bytes at the cached scannedPos are CRAFTED to decode to cached.n —
     // both old checks pass on a replaced file. The prefix CRC sees the
     // differing key/value bytes and forces the full re-frame.
-    val dirA = Files.createTempDirectory("graft_replaceC").toString
+    val dirA = suiteTempDir("graft_replaceC")
     // fixed-shape records: frame = 24 + 4 + 4 = 32 bytes each
     KafkaReplay.append(dirA, (0 until 3).map(i =>
       KafkaReplay.Record(0, f"ka$i%02d".getBytes, f"va$i%02d".getBytes, tsMicros)))
@@ -583,7 +582,7 @@ class KafkaReplaySpec extends SparkSpec {
     val crafted = Array.fill[Byte](76)('x'.toByte)
     java.util.Arrays.fill(crafted, 68, 75, 0.toByte)
     crafted(75) = 3
-    val dirB = Files.createTempDirectory("graft_replaceD").toString
+    val dirB = suiteTempDir("graft_replaceD")
     KafkaReplay.append(dirB,
       KafkaReplay.Record(0, "kb00".getBytes, crafted, tsMicros) +:
         (1 until 5).map(i =>
