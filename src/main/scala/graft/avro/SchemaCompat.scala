@@ -37,10 +37,6 @@ object SchemaCompat {
       s"${i.getType} at ${i.getLocation}: ${i.getMessage}")
   }
 
-  /** True iff a reader with `readerJson` can read `writerJson` data. */
-  def canRead(readerJson: String, writerJson: String): Boolean =
-    incompatibilities(readerJson, writerJson).isEmpty
-
   /** BACKWARD compatibility (the registry default the reference estate
     * runs): consumers on the NEW schema must read data produced under
     * the OLD one. Returns the violation list; empty = safe to register. */
@@ -227,15 +223,5 @@ object SchemaCompat {
     }
     val extra = (enumTotal ++ covered).filterNot(always.contains)
     always ++ extra
-  }
-
-  /** Throws with the named violations unless `readerJson` can read
-    * `writerJson` data — the pre-flight gate for evolution reads. */
-  def requireCanRead(readerJson: String, writerJson: String): Unit = {
-    val bad = incompatibilities(readerJson, writerJson)
-    require(bad.isEmpty,
-      s"reader schema cannot read writer schema (${bad.size} " +
-        s"incompatibilit${if (bad.size == 1) "y" else "ies"}):\n  " +
-        bad.mkString("\n  "))
   }
 }

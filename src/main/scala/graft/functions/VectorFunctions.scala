@@ -23,8 +23,8 @@ object VectorFunctions {
 
   /** Double squared-L2 between two float arrays as an index-ordered
     * fold — bit-identical to the oracle's list_transform+list_sum. ONE
-    * home (r15 review: Ivf, Pq, and an inline copy in Ivf.searchIndexed
-    * each re-spelled it; the fold order and cast placement are
+    * home (r15 review: Ivf, Pq, and an inline copy in Ivf's on-disk
+    * search each re-spelled it; the fold order and cast placement are
     * load-bearing for oracle bit-equality, so a fix to one copy must
     * not diverge the others). */
   def dist2(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column)

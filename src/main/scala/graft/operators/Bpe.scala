@@ -178,12 +178,6 @@ object Bpe {
   def segmentsDf(learned: Learned): DataFrame =
     learned.segmented.select(col("word"), col("s").as("segments"), col("cnt"))
 
-  /** Learn the first `steps` merges (one-shot convenience; callers that
-    * need several views of one learned tokenizer should [[learn]] once
-    * and reuse the [[Learned]] handle). */
-  def learnMerges(docs: DataFrame, textCol: String, steps: Int): DataFrame =
-    mergesDf(docs.sparkSession, learn(docs, textCol, steps))
-
   /** Corpus-level subword statistics under the learned vocabulary: the
     * token-count planning number a training pipeline needs ("how many
     * subword tokens is this corpus under tokenizer X"). The segment

@@ -566,35 +566,6 @@ object Dedup {
     jaccardVerify(cands, withSh, idCol, "sh", threshold)
   }
 
-  /** [[minhashNearDups]] under the [[autoBanding]]-chosen banding: the
-    * closed planner loop for the MinHash family — evaluate the exact
-    * S-curve at the target threshold, pick the floor-meeting banding
-    * with the finest buckets, run it. Output is spec-pinned identical
-    * to spelling the chosen banding out (the auto path changes WHICH
-    * banding runs, never what a banding computes); at the registered
-    * operating point the choice IS the registered 4×4. */
-  def autoBandedNearDups(
-      plan: DataFrame, df: DataFrame, idCol: String, textCol: String,
-      threshold: Double, floorMicro: Long,
-      k: Int = 3, numHashes: Int = 16, useMd5: Boolean = true,
-      maxBucket: Int = 1000): DataFrame = {
-    val sTenths = math.round(threshold * 10).toInt
-    // the band plan measures recall on a TENTH grid — silently rounding
-    // 0.75 to the 0.8 S-curve point would select a banding whose recall
-    // floor holds at a HIGHER similarity than the one verified below
-    // (recall is lower at 0.75), violating the caller's floor with no
-    // error (r15 review)
-    require(math.abs(threshold * 10 - sTenths) < 1e-9,
-      s"threshold $threshold must sit on the band plan's tenth grid " +
-        "(the S-curve is measured at s = 0.1k); interpolate the plan or " +
-        "re-measure at the target similarity")
-    val (bands, rows) = autoBanding(plan, sTenths, floorMicro)
-    require(bands * rows == numHashes,
-      s"plan banding ${bands}x$rows does not factor the $numHashes-hash signature")
-    minhashNearDups(df, idCol, textCol, k, numHashes, bands, threshold, useMd5,
-      maxBucket)
-  }
-
   /** 64-bit SimHash of a token array: per-bit majority vote of token
     * hashes. Fused custom expression; `simhash64Hof` is the composable
     * reference (tests assert bit-equality). */
@@ -682,20 +653,6 @@ object Dedup {
       .groupBy(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"))
       .agg(count(lit(1)).as("n_shared_fps"))
       .filter(col("n_shared_fps") >= minShared)
-  }
-
-  /** Winnowing near-dup pipeline: fingerprint candidates confirmed by
-    * exact shingle Jaccard (candidates are tiny vs the corpus, so the
-    * verify joins broadcast at scale). */
-  def winnowingNearDups(
-      df: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, window: Int = 4, minShared: Int = 5,
-      threshold: Double = 0.8): DataFrame = {
-    val cands = winnowingCandidates(df, idCol, textCol, k, window, minShared, maxBucket = 100)
-      .select(col("id_a"), col("id_b"))
-    val withSh = df.select(col(idCol), TextFunctions.shingles(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-    jaccardVerify(cands, withSh, idCol, "sh", threshold)
   }
 
   /** Connected components over a near-dup pair list (id_a < id_b) —

@@ -1,8 +1,6 @@
 package graft.operators
 
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
-import org.apache.spark.ml.functions.array_to_vector
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -11,11 +9,9 @@ import graft.functions.VectorFunctions
 /** IVF-flat approximate nearest neighbor: the second scale path beside
   * hyperplane LSH (Similarity.lshTopK).
   *
-  * Build: a k-means coarse quantizer (MLlib, seeded) partitions the
-  * corpus into nCells inverted lists; each vector stores its cell id.
-  * At 100 TB the assigned corpus is written partitioned by cell, so a
-  * probe reads only nProbe/nCells of the data (partition pruning does
-  * the skipping).
+  * Build: a k-means coarse quantizer ([[buildLloydFlat]], md5-seeded
+  * init + exact Lloyd rounds) partitions the corpus into nCells
+  * inverted lists; each vector stores its cell id.
   *
   * Search: each query ranks centroids by euclidean distance (centroids
   * are tiny — broadcast), probes the nProbe nearest cells, and
@@ -24,68 +20,16 @@ import graft.functions.VectorFunctions
   */
 object Ivf {
 
-  final case class Index(model: KMeansModel, assigned: DataFrame)
-
-  def build(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, seed: Long = 42L): Index = {
-    // Iterative fit re-reads its input every iteration — persist the
-    // featured frame for the build (MEMORY_AND_DISK: spills, never OOMs).
-    val featured = corpus.select(col(idCol), col(vecCol),
-      array_to_vector(col(vecCol)).as("__features"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // registry-tracked (r15 review): the returned Index.assigned reads
-    // this pin lazily, so it cannot unpersist here — without the
-    // registry every build() leaked one corpus-scale cache for the
-    // session lifetime; identical re-builds now share one entry,
-    // released at evict/application end
-    graft.operators.PinRegistry.replace("ivf.build", Seq(featured))
-    // Coarse-quantizer settings: random init + few iterations is the
-    // standard IVF build recipe (the cells only need to be roughly
-    // balanced, not optimal) — k-means|| init plus the default 20
-    // iterations triples the build's job count for no search-quality
-    // gain. Seeded, so the index is deterministic.
-    val model = new KMeans()
-      .setK(nCells).setSeed(seed).setFeaturesCol("__features")
-      .setPredictionCol("__cell")
-      .setInitMode("random").setMaxIter(8)
-      .fit(featured)
-    val assigned = model.transform(featured)
-      .select(col(idCol), col(vecCol), col("__cell").as("cell"))
-    Index(model, assigned)
-  }
-
-  /** Centroids as a small DataFrame (cell, centroid float array). */
-  def centroidsDf(spark: SparkSession, model: KMeansModel): DataFrame = {
-    import spark.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i, c.toArray.map(_.toFloat)) }
-      .toSeq.toDF("cell", "centroid")
-  }
-
   /** Shared squared-L2 fold — single-homed in
     * [[graft.functions.VectorFunctions.dist2]] (r15 review). */
   private def dist2(a: Column, b: Column): Column =
     graft.functions.VectorFunctions.dist2(a, b)
 
-  def search(
-      index: Index, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int): DataFrame =
-    searchWithCentroids(centroidsDf(index.assigned.sparkSession, index.model),
-      index.assigned, queries, idCol, vecCol, k, nProbe)
-
   /** Search against prebuilt (centroids, assignments) — the reuse entry
     * point: an index built once (or memoized per session) serves any
     * number of probe calls, mirroring how a persisted 100 TB IVF index
-    * is probed without rebuilding (see [[writeIndex]]/[[searchIndexed]]
-    * for the on-disk variant). */
+    * is probed without rebuilding. */
   def searchFlat(
-      cents: DataFrame, assigned: DataFrame,
-      queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int): DataFrame =
-    searchWithCentroids(cents, assigned, queries, idCol, vecCol, k, nProbe)
-
-  private def searchWithCentroids(
       cents: DataFrame, assigned: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nProbe: Int): DataFrame = {
@@ -163,12 +107,10 @@ object Ivf {
     * integer (`round(x·1e6)`), summed exactly (order-independent, no
     * float drift), and divided once — so a SQL oracle unrolling the same
     * iterations rebuilds bit-identical centroids and the full k-means
-    * IVF path sits under the hash gate (the MLlib `build` remains the
-    * off-gate production quantizer; same machinery, opaque seeding).
-    * Empty cells keep their previous centroid (both engines). Per-round
-    * cost: one broadcast-assign pass + one (cell,dim)-keyed partial agg
-    * — no corpus shuffle; `localCheckpoint` keeps the centroid plan flat
-    * across rounds. */
+    * IVF path sits under the hash gate. Empty cells keep their previous
+    * centroid (both engines). Per-round cost: one broadcast-assign pass
+    * + one (cell,dim)-keyed partial agg — no corpus shuffle;
+    * `localCheckpoint` keeps the centroid plan flat across rounds. */
   def buildLloydFlat(
       corpus: DataFrame, idCol: String, vecCol: String,
       nCells: Int, iters: Int = 2): (DataFrame, DataFrame) = {
@@ -207,7 +149,7 @@ object Ivf {
       corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
       k: Int, nCells: Int, nProbe: Int): DataFrame = {
     val (cents, assigned) = buildSeededFlat(corpus, idCol, vecCol, nCells)
-    searchWithCentroids(cents, assigned, queries, idCol, vecCol, k, nProbe)
+    searchFlat(cents, assigned, queries, idCol, vecCol, k, nProbe)
   }
 
   /** PRESCRIPTIVE selection over an IVF probe-plan table (VERDICT r11
@@ -226,60 +168,5 @@ object Ivf {
     val within = rows.filter(_.getAs[Long]("recall_micro") >= floorMicro)
     if (within.nonEmpty) within.map(_.getAs[Int]("n_probe")).min
     else rows.map(_.getAs[Int]("n_probe")).max
-  }
-
-  /** One-shot convenience: build + search. */
-  def topK(
-      corpus: DataFrame, queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nCells: Int, nProbe: Int, seed: Long = 42L): DataFrame =
-    search(build(corpus, idCol, vecCol, nCells, seed), queries, idCol, vecCol, k, nProbe)
-
-  /** Persist the inverted lists partitioned by cell: at corpus scale the
-    * index is built once and probed many times, and a `cell=<c>/`
-    * directory layout lets every probe skip (nCells - nProbe)/nCells of
-    * the data via partition pruning — the scan never touches unprobed
-    * cells' files. */
-  def writeIndex(index: Index, path: String): Unit =
-    index.assigned.write.mode("overwrite").partitionBy("cell").parquet(path)
-
-  /** Search against a persisted index: ranks centroids per query, takes
-    * the union of probed cells (bounded by nCells — a driver-side
-    * constant, not data-sized), and scans the index with a `cell IN`
-    * partition filter so pruning applies before any file is opened.
-    * Result is identical to `search` with the same parameters
-    * (spec-asserted along with the PartitionFilters plan shape). */
-  def searchIndexed(
-      spark: SparkSession, indexPath: String, model: KMeansModel,
-      queries: DataFrame, idCol: String, vecCol: String,
-      k: Int, nProbe: Int): DataFrame = {
-    val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qvec"))
-    val cents = centroidsDf(spark, model)
-    val cellRank = Window.partitionBy(col("query_id")).orderBy(col("d2"), col("cell"))
-    // ONE probe execution (r15 review): the probe plan used to run
-    // twice — once collected for the partition filter, once re-executed
-    // inside the candidate join. Collect the (query-set x nProbe)-sized
-    // probe ONCE and feed the join from the local relation (size stats
-    // known, so the probe side broadcasts).
-    val probedRows = q.crossJoin(broadcast(cents))
-      .withColumn("d2", dist2(col("qvec"), col("centroid")))
-      .withColumn("__r", row_number().over(cellRank))
-      .filter(col("__r") <= nProbe)
-      .select(col("query_id"), col("qvec"), col("cell"))
-    val collected = probedRows.collect()
-    import scala.jdk.CollectionConverters._
-    val probed = spark.createDataFrame(collected.toSeq.asJava, probedRows.schema)
-    val probedCells = collected.map(_.getAs[Int]("cell")).distinct.sorted
-    val lists = graft.sources.Tables.parquet(spark, indexPath)
-      .filter(col("cell").isin(probedCells.toIndexedSeq.map(Integer.valueOf): _*))
-      .select(col("cell"), col(idCol).as("neighbor_id"), col(vecCol).as("nvec"))
-    val cands = lists.join(probed, Seq("cell"))
-      .filter(col("neighbor_id") =!= col("query_id"))
-      .withColumn("sim", round(VectorFunctions.cosine(col("qvec"), col("nvec")), 9))
-    cands
-      .groupBy(col("query_id"))
-      .agg(graft.expressions.TopKByScore.topk(col("sim"), col("neighbor_id"), k).as("top"))
-      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "t")))
-      .select(col("query_id"), (col("pos") + 1).cast("int").as("rank"),
-        col("t.id").as("neighbor_id"), col("t.score").as("sim"))
   }
 }

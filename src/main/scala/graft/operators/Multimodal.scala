@@ -224,18 +224,6 @@ object Multimodal {
     } else fallback
   }
 
-  /** Scan-side meta correction: replace fixture/declared meta with the
-    * sniffed truth wherever the payload is a recognizable container —
-    * same pipeline position (and shuffle-free contract) as
-    * `extractFeatures`. */
-  def withSniffedMeta(media: DataFrame): Dataset[MediaRow] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("payload"), col("meta"))
-      .as[MediaRow]
-      .mapPartitions(rows => rows.map(r => r.copy(meta = sniffMeta(r.payload, r.meta))))
-  }
-
   /** Declarative feature projection (the codegen path for everything that
     * doesn't need the codec): byte length + md5, no UDF. */
   def payloadStats(media: DataFrame): DataFrame =

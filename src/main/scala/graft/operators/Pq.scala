@@ -139,39 +139,21 @@ object Pq {
         sum(col("qd2")).as("qerr"))
   }
 
-  /** ADC shortlist + exact rerank: each query's (blk, code) →
-    * sub-distance lookup table joins the codes table (raw vectors
-    * never move); the `shortlist` best ADC candidates then rerank by
-    * the exact integer d2 over the full vector. */
-  def adcTopK(emb: DataFrame, queries: DataFrame, idCol: String,
-      vecCol: String, dim: Int, m: Int, k: Int, topK: Int,
-      shortlist: Int, iters: Int = 1): DataFrame =
-    adcTopKWith(codebook(emb, idCol, vecCol, dim, m, k, iters),
-      emb, queries, idCol, vecCol, dim, m, topK, shortlist)
-
-  /** [[adcTopK]] against a prebuilt (e.g. memoized/persisted)
-    * codebook — the production shape, where the codebook is trained
-    * once and every query wave reuses it.
+  /** ADC shortlist + exact rerank over a prebuilt codebook and an
+    * ALREADY-ENCODED codes table (the [[encode]] output shape): each
+    * query's (blk, code) → sub-distance lookup table joins the codes
+    * table (raw vectors never move); the `shortlist` best ADC candidates
+    * then rerank by the exact integer d2 over the full vector. Codebook
+    * AND codes are built once at ingest, so a query wave pays only the
+    * LUT + shortlist + rerank.
     *
-    * Shared-id-space assumption (also [[ivfPqTopK]]): candidates where
-    * `neighbor_id == query_id` are unconditionally dropped, treating
-    * queries as drawn from the corpus id space (self-match exclusion —
-    * the fixture/benchmark convention). With an EXTERNAL query table
-    * whose ids can collide with corpus ids, disjoint the id spaces
-    * first (e.g. negate or offset query ids) or a true neighbor at a
-    * colliding id is silently excluded. */
-  def adcTopKWith(cb: DataFrame, emb: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, dim: Int, m: Int, topK: Int,
-      shortlist: Int): DataFrame =
-    adcTopKWithCodes(cb, encode(emb, cb, idCol, vecCol, dim, m),
-      emb, queries, idCol, vecCol, dim, m, topK, shortlist)
-
-  /** [[adcTopKWith]] over an ALREADY-ENCODED codes table (the
-    * [[encode]] output shape) — the true production call: codebook AND
-    * codes are built once at ingest, so a query wave pays only the
-    * LUT + shortlist + rerank. The sibling overload re-encoded the
-    * whole corpus (a full scan + corpus-wide groupBy shuffle) on every
-    * search call (r15 review). */
+    * Shared-id-space assumption (also [[ivfPqSearchWith]]): candidates
+    * where `neighbor_id == query_id` are unconditionally dropped,
+    * treating queries as drawn from the corpus id space (self-match
+    * exclusion — the fixture/benchmark convention). With an EXTERNAL
+    * query table whose ids can collide with corpus ids, disjoint the id
+    * spaces first (e.g. negate or offset query ids) or a true neighbor
+    * at a colliding id is silently excluded. */
   def adcTopKWithCodes(cb: DataFrame, encoded: DataFrame, emb: DataFrame,
       queries: DataFrame, idCol: String, vecCol: String, dim: Int, m: Int,
       topK: Int, shortlist: Int): DataFrame = {
@@ -346,13 +328,5 @@ object Pq {
       .withColumn("rank", row_number().over(exactRank))
       .filter(col("rank") <= topK)
       .select(col("query_id"), col("rank"), col("neighbor_id"), col("qd2"))
-  }
-
-  def ivfPqTopK(cents: DataFrame, assigned: DataFrame, queries: DataFrame,
-      idCol: String, vecCol: String, dim: Int, m: Int, k: Int,
-      topK: Int, shortlist: Int, nProbe: Int, iters: Int = 1): DataFrame = {
-    val (cb, codes) = ivfPqIndex(cents, assigned, idCol, vecCol, dim, m, k, iters)
-    ivfPqSearchWith(cents, cb, codes, assigned, queries,
-      idCol, vecCol, dim, m, topK, shortlist, nProbe)
   }
 }

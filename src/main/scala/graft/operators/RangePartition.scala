@@ -41,19 +41,6 @@ object RangePartition {
       aggregate(bs, lit(0), (acc, b) => acc + when(col(valueCol) > b, 1).otherwise(0)))
   }
 
-  /** Per-partition occupancy report for a planned layout: row count and
-    * value bounds per partition id — the receipt that the layout is
-    * balanced (max/mean occupancy ≈ 1 + 2*err*numParts). */
-  def balanceReport(df: DataFrame, valueCol: String, numParts: Int,
-      err: Double = 0.001): DataFrame = {
-    val bounds = planBoundaries(df, valueCol, numParts, err)
-    assign(df, valueCol, bounds)
-      .groupBy(col("part_id"))
-      .agg(count(lit(1)).as("n"),
-        min(col(valueCol)).as("lo"), max(col(valueCol)).as("hi"))
-      .orderBy(col("part_id"))
-  }
-
   /** Physically range-partition `df` for a sorted write:
     * `repartitionByRange` (Spark samples boundaries internally with the
     * same sketch family) + intra-partition sort so every output file

@@ -64,18 +64,6 @@ object Salting {
     SkewAdvice(n, hot, share, salts)
   }
 
-  /** [[saltedJoin]] with the salt factor chosen by [[advise]] from the
-    * big side's observed key histogram; skips salting entirely when no
-    * key is hot enough to matter (advice = 1 → plain join, letting
-    * Catalyst/AQE pick the strategy). */
-  def adaptiveSaltedJoin(
-      big: DataFrame, small: DataFrame, key: String, shufflePartitions: Int,
-      joinType: String = "inner"): DataFrame = {
-    val a = advise(big, key, shufflePartitions)
-    if (a.salts <= 1) big.join(small, Seq(key), joinType)
-    else saltedJoin(big, small, key, a.salts, joinType)
-  }
-
   /** Per-key top-k smallest values, as exploded (key, rank, value)
     * rows, via a TWO-LEVEL SALTED aggregate — the payload-aggregation
     * skew mitigation the probe receipts (`SCALE_r13_skew.json`,
@@ -151,8 +139,8 @@ object Salting {
 
   /** [[topKPerKey]] with the salt factor chosen by [[advise]] from the
     * observed key histogram — the prescriptive advise→execute path for
-    * payload aggregates, mirroring [[adaptiveSaltedJoin]], so a
-    * deployment never hand-picks salts for "top examples per key".
+    * payload aggregates, so a deployment never hand-picks salts for
+    * "top examples per key".
     * advice = 1 short-circuits to [[directTopKPerKey]]; output-equal
     * either way (min-k is a semilattice under any partition). Like
     * `advise`, this runs two sketch jobs at construction time. */

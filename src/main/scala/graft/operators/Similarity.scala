@@ -230,69 +230,29 @@ object Similarity {
         (coalesce(col("cp"), lit(0L)) <= budget).as("within_budget"))
   }
 
-  /** PRESCRIPTIVE selection over [[bucketPlan]] (VERDICT r11 ask #3 —
-    * the planning table consumed, not just published): among the
-    * candidate configs, pick the one a budget-bound deployment should
-    * run. Policy, deterministic and mirrored verbatim by the
-    * `sim_autoband_choice` DuckDB oracle: within-budget configs first,
-    * then LARGEST measured candidate mass (candidate volume is the
-    * recall knob — buy as much recall as the budget affords), ties to
-    * fewer bands then fewer bits. If NO config fits the budget the
-    * same ordering applies over the infeasible set (max mass first —
-    * kept identical to the oracle-pinned policy), and [[autoBandPairs]]
-    * ARMS the maxCandidatePairs guard so the run fails loudly with the
-    * re-banding suggestion instead of silently going quadratic. Cost:
-    * one shared signature pass ([[bucketPlan]]); the |configs|-row
-    * collect is a driver-side planning decision, not data movement. */
-  def autoBand(df: DataFrame, idCol: String, vecCol: String,
-      configs: Seq[(Int, Int)], budget: Long,
-      maxBucket: Int = 10000, md5Planes: Boolean = true): (Int, Int) =
-    autoBandFrom(bucketPlan(df, idCol, vecCol, configs, budget, maxBucket, md5Planes))
-
-  /** The [[autoBand]] selection over an ALREADY-MEASURED plan table
-    * (the [[bucketPlan]] shape) — callers holding a memoized/persisted
-    * plan (SignalMemo's `lsh_bucket_plan`) pick without re-sweeping the
-    * corpus. The |configs|-row collect is a driver-side planning
-    * decision, not data movement. */
+  /** PRESCRIPTIVE selection over an already-measured [[bucketPlan]]
+    * table (VERDICT r11 ask #3 — the planning table consumed, not just
+    * published): among the candidate configs, pick the one a
+    * budget-bound deployment should run. Policy, deterministic and
+    * mirrored verbatim by the `sim_autoband_choice` DuckDB oracle:
+    * within-budget configs first, then LARGEST measured candidate mass
+    * (candidate volume is the recall knob — buy as much recall as the
+    * budget affords), ties to fewer bands then fewer bits. If NO config
+    * fits the budget the same ordering applies over the infeasible set
+    * (max mass first — kept identical to the oracle-pinned policy).
+    * Callers holding a memoized/persisted plan (SignalMemo's
+    * `lsh_bucket_plan`) pick without re-sweeping the corpus; the
+    * |configs|-row collect is a driver-side planning decision, not data
+    * movement. */
   def autoBandFrom(plan: DataFrame): (Int, Int) = {
     val rows = plan.collect()
-    require(rows.nonEmpty, "autoBand: empty bucket-plan table")
-    autoBandFromRows(rows)
-  }
-
-  private def autoBandFromRows(rows: Array[org.apache.spark.sql.Row]): (Int, Int) = {
+    require(rows.nonEmpty, "autoBandFrom: empty bucket-plan table")
     val best = rows.minBy(r => (
       !r.getAs[Boolean]("within_budget"),
       -r.getAs[Long]("candidate_pairs"),
       r.getAs[Int]("bands"),
       r.getAs[Int]("bits_per_band")))
     (best.getAs[Int]("bands"), best.getAs[Int]("bits_per_band"))
-  }
-
-  /** [[nearDupPairsLsh]] under the [[autoBand]]-chosen banding: the
-    * closed planner loop — measure the design table on THIS corpus,
-    * pick the budget-feasible recall-maximal config, run it. Output is
-    * spec-pinned identical to running `nearDupPairsLsh` with the chosen
-    * config spelled out (the auto path changes WHICH config runs, never
-    * what a config computes). */
-  def autoBandPairs(df: DataFrame, idCol: String, vecCol: String,
-      threshold: Double, configs: Seq[(Int, Int)], budget: Long,
-      maxBucket: Int = 10000, md5Planes: Boolean = false): DataFrame = {
-    // the plan is measured with the SAME plane family that executes
-    // (r15 review: bucketPlan used to hardcode md5 while the default
-    // execution banded with xxhash planes — the budget decision was
-    // made on buckets that never ran)
-    val plan = bucketPlan(df, idCol, vecCol, configs, budget, maxBucket, md5Planes)
-    val rows = plan.collect()
-    require(rows.nonEmpty, "autoBand: empty bucket-plan table")
-    val feasible = rows.exists(_.getAs[Boolean]("within_budget"))
-    val (bands, bits) = autoBandFromRows(rows)
-    // nothing fit => the planner could NOT make the budget decision:
-    // arm the loud envelope so the run fails with the re-banding
-    // suggestion instead of silently enumerating an over-budget
-    // candidate mass (r15 review — the doc promised this guard)
-    nearDupPairsLsh(df, idCol, vecCol, threshold, bands, bits, maxBucket,
-      md5Planes, maxCandidatePairs = if (feasible) None else Some(budget))
   }
 
   /** The candidate-pair mass a banding would enumerate: Σ over buckets
@@ -403,8 +363,8 @@ object Similarity {
     * with its strongest earlier duplicate: (id, cell, dup_of, sim)
     * where dup_of is the max-sim (tie → lowest-id) lower-id neighbor.
     *
-    * Clustering = [[Ivf.buildLloydFlat]] (md5-seeded init + exact
-    * integer-quantized Lloyd rounds), so a SQL oracle rebuilds
+    * Clustering = [[Ivf.buildLloydFlat]]'s assignments (md5-seeded init
+    * + exact integer-quantized Lloyd rounds), so a SQL oracle rebuilds
     * bit-identical cells and the whole path sits under the hash gate.
     *
     * `maxIntraCellPairs`: the same loud envelope as the LSH banding
@@ -414,19 +374,12 @@ object Similarity {
     * the operator counts Σ C(n_c, 2) in an ids-only pass before any
     * vector pair materializes, failing with the [[autoNCells]]
     * suggestion when exceeded. Production callers should size
-    * `nCells = autoNCells(n)` instead and skip the guard. */
-  def semDedupDropped(
-      corpus: DataFrame, idCol: String, vecCol: String,
-      nCells: Int, iters: Int, threshold: Double,
-      maxIntraCellPairs: Option[Long] = None): DataFrame = {
-    val (_, assigned) = Ivf.buildLloydFlat(corpus, idCol, vecCol, nCells, iters)
-    semDedupFromCells(assigned, idCol, vecCol, nCells, threshold, maxIntraCellPairs)
-  }
-
-  /** The sweep half of [[semDedupDropped]] over prebuilt cell
-    * assignments — lets a session reuse one clustering across SemDeDup,
-    * IVF search, and cluster-map queries instead of re-running Lloyd
-    * per query (at 100 TB the assignments ARE the persisted index). */
+    * `nCells = autoNCells(n)` instead and skip the guard.
+    *
+    * Takes prebuilt cell assignments, so a session reuses one
+    * clustering across SemDeDup, IVF search, and cluster-map queries
+    * instead of re-running Lloyd per query (at 100 TB the assignments
+    * ARE the persisted index). */
   def semDedupFromCells(
       assigned: DataFrame, idCol: String, vecCol: String,
       nCells: Int, threshold: Double,

@@ -68,31 +68,4 @@ object SortedNeighborhood {
       .filter((col("_sn_rn_b") - col("_sn_rn_a")).between(1, window))
       .select(col("a"), col("b"))
   }
-
-  /** PRESCRIPTIVE selection over an SNM window-plan table (VERDICT r11
-    * ask #3 generalized to the fourth planning table): given measured
-    * (win, candidates, survivors) rows, return the SMALLEST window
-    * whose survivors reach `coverageMicro` (micro-fraction) of the
-    * widest window's survivor count. Candidates grow linearly with the
-    * window while survivors saturate (close names sort close), so the
-    * cheapest window capturing ~all the matches is the one to run.
-    * Survivors are monotone in the window (wider windows see a
-    * superset of candidate pairs), so the max-survivor row is the
-    * widest window and the selection is always non-empty. Mirrored
-    * verbatim by the `dedup_snm_autowindow` DuckDB oracle. */
-  def autoWindow(plan: DataFrame, coverageMicro: Long): Int = {
-    // micro-fractions live in [0, 1e6]; above 1e6 no window can ever
-    // qualify and .min would throw an opaque empty-collection error
-    require(coverageMicro >= 0L && coverageMicro <= 1000000L,
-      s"coverageMicro must be a micro-fraction in [0, 1000000], got $coverageMicro")
-    val rows = plan.collect()
-    require(rows.nonEmpty, "autoWindow needs a non-empty window-plan table")
-    val maxSurv = rows.map(_.getAs[Long]("survivors")).max
-    // BigInt: survivors*1e6 overflows Long past ~9.2e12 survivors, a
-    // count a 100 TB corpus plan can reach
-    rows.filter(r =>
-        BigInt(r.getAs[Long]("survivors")) * 1000000 >=
-          BigInt(coverageMicro) * BigInt(maxSurv))
-      .map(_.getAs[Int]("win")).min
-  }
 }

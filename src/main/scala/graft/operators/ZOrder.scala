@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Z-order (Morton-curve) data-layout clustering: interleave the bits of
@@ -46,16 +46,4 @@ object ZOrder {
     when(hi <= lo, lit(0L)).otherwise(
       least(floor((c - lo) * lit(buckets) / (hi - lo)), lit((buckets - 1).toLong)))
       .cast("long")
-
-  /** Rewrite `df` into `nFiles` z-ordered parquet files: range-partition
-    * on the z-value (so files tile the curve in disjoint z-ranges), sort
-    * within each partition, drop the helper column. One shuffle — the
-    * same cost as any global sort layout, but clustering two dimensions
-    * at once. */
-  def clusteredWrite(df: DataFrame, zval: Column, nFiles: Int, path: String): Unit =
-    df.withColumn("_z", zval)
-      .repartitionByRange(nFiles, col("_z"))
-      .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
 }

@@ -823,13 +823,13 @@ object DedupQueries {
   private[graft] val AutoWindowCoverageMicro = 950000L
 
   /** THE PRESCRIPTIVE WINDOW CHOICE for sorted-neighborhood blocking
-    * (VERDICT r11 ask #3): the window-plan row
-    * [[graft.operators.SortedNeighborhood.autoWindow]] selects —
-    * smallest window whose survivors reach 95% of the widest window's
-    * (survivors are monotone in the window, so the widest row always
-    * qualifies and the choice is total). Candidates grow linearly with
-    * the window while survivors saturate; this is that trade, decided
-    * from the measured table. */
+    * (VERDICT r11 ask #3): the window-plan row with the smallest window
+    * whose survivors reach 95% of the widest window's (survivors are
+    * monotone in the window — wider windows see a superset of candidate
+    * pairs — so the widest row always qualifies and the choice is
+    * total). Candidates grow linearly with the window while survivors
+    * saturate; this is that trade, decided from the measured table.
+    * Mirrored verbatim by the `dedup_snm_autowindow` DuckDB oracle. */
   def dedupSnmAutowindow(spark: SparkSession, dir: String): DataFrame = {
     val plan = snmWindowPlanTable(spark, dir)
     val mx = plan.agg(max(col("survivors")).as("ms"))
@@ -1040,7 +1040,7 @@ object DedupQueries {
     // candidates/survivors are exact integers so the hash gate needs
     // no float discipline
     "dedup_snm_window_plan" -> (snmWindowPlanOracleUnion + "\nORDER BY win"),
-    // the autoWindow policy, verbatim: smallest window keeping >= 95%
+    // the dedupSnmAutowindow policy, verbatim: smallest window keeping >= 95%
     // of the widest window's survivors (monotone, so always non-empty)
     "dedup_snm_autowindow" ->
       s"""WITH plan AS (

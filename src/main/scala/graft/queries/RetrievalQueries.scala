@@ -445,18 +445,16 @@ object RetrievalQueries {
     * stays current without a rebuild, the retrieval counterpart of
     * `sim_assign_streamed`. The stream stays STATELESS: tf and dl are
     * per-document facts, computed with list HOFs inside the row (no
-    * cross-row aggregation, no watermark, no state store); the
-    * downstream index merge is an idempotent partition overwrite keyed
-    * by doc_id. */
+    * cross-row aggregation, no watermark, no state store). */
   /** Stateless per-row posting emission over a documents frame
     * (streaming OR batch — the same expressions serve both, which is
-    * what makes the stream==batch oracle possible): (doc_id [,carry…],
-    * t, tf, dl). Per-token counts come from ONE pass per row (sort +
+    * what makes the stream==batch oracle possible): (doc_id, t, tf,
+    * dl). Per-token counts come from ONE pass per row (sort +
     * run-length over the sorted token array), not one filter scan per
     * distinct token — the latter is O(distinct_tokens × doc_length)
     * per document, quadratic for long documents and at odds with
     * scan-speed index maintenance. */
-  private[graft] def postingRows(docs: DataFrame, carry: Seq[String] = Nil): DataFrame = {
+  private[graft] def postingRows(docs: DataFrame): DataFrame = {
     // ws is materialized as its OWN projection attribute: an inline
     // array_sort expression referenced from the lambdas below would be
     // re-evaluated per lambda invocation (no CSE inside interpreted
@@ -477,10 +475,8 @@ object RetrievalQueries {
       // has ≥1 element), but guard the sequence like shinglesHof does
       .withColumn("starts",
         when(size(col("w")) >= 1, starts).otherwise(array().cast("array<int>")))
-      .select(col("doc_id") +: carry.map(col) :+
-        size(col("w")).as("dl") :+ explode(runs).as("r"): _*)
-      .select(col("doc_id") +: carry.map(col) :+
-        col("r.t").as("t") :+ col("r.tf").as("tf") :+ col("dl"): _*)
+      .select(col("doc_id"), size(col("w")).as("dl"), explode(runs).as("r"))
+      .select(col("doc_id"), col("r.t").as("t"), col("r.tf").as("tf"), col("dl"))
   }
 
   private[graft] def documentsSchema: org.apache.spark.sql.types.StructType = {
@@ -531,57 +527,6 @@ object RetrievalQueries {
       .select(col("query_id"), col("rank"), col("id"), col("sim"),
         col("score_q").as("bm25_q"))
       .orderBy(col("query_id"), col("rank"))
-  }
-
-  /** The consumer of the streamed postings: merge a crawl batch into a
-    * partitioned on-disk posting index via IDEMPOTENT dynamic partition
-    * overwrite keyed by the batch's partition column (`source` here —
-    * at 100 TB, a crawl/batch id) — re-delivery of a batch rewrites
-    * exactly its own partitions, so at-least-once stream delivery still
-    * yields exactly-once index contents (spec-asserted: running the
-    * stream twice leaves the index equal to the one-shot batch rebuild,
-    * and BM25 scores over the merged index match it). Runs to
-    * completion (AvailableNow). */
-  def mergePostingsStream(spark: SparkSession, dir: String, indexDir: String,
-      checkpoint: String, sourceId: String,
-      glob: String = "documents.parquet",
-      maxFilesPerTrigger: Option[Int] = None): Unit = {
-    val reader = spark.readStream.schema(documentsSchema)
-      .option("pathGlobFilter", glob)
-    maxFilesPerTrigger.foreach(n => reader.option("maxFilesPerTrigger", n.toString))
-    val fresh = postingRows(
-      reader.parquet(dir).filter(col("source") === sourceId),
-      carry = Seq("source"))
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      fresh.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          // doc-keyed UPSERT of this micro-batch into the source
-          // partition: re-delivered docs replace their old rows, and
-          // rows of OTHER docs already in the partition survive — so a
-          // source split across micro-batches (maxFilesPerTrigger)
-          // accumulates instead of each batch clobbering the partition,
-          // and whole-run re-delivery stays exactly-once per doc
-          val sp = batch.sparkSession
-          val part = new org.apache.hadoop.fs.Path(indexDir, s"source=$sourceId")
-          val fs = part.getFileSystem(sp.sparkContext.hadoopConfiguration)
-          val (merged, mergedRdds) =
-            if (fs.exists(part)) {
-              // the checkpoint materializes before the write overwrites
-              // the files being read; its blocks die with the batch
-              graft.operators.LocalCheckpoints.tracked(
-                Tables.parquet(sp, indexDir).filter(col("source") === sourceId)
-                  .join(batch.select(col("doc_id")).distinct(), Seq("doc_id"), "left_anti")
-                  .unionByName(batch))
-            } else (batch, Seq.empty[org.apache.spark.rdd.RDD[_]])
-          merged.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("source").parquet(indexDir)
-          graft.operators.LocalCheckpoints.free(mergedRdds)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

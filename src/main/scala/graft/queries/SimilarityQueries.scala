@@ -91,8 +91,7 @@ object SimilarityQueries {
     * md5-seeded init; integer-quantized exact centroid means) — fully
     * oracle-checked: the DuckDB oracle unrolls the same two iterations
     * and rebuilds bit-identical centroids, cells, probes, and rerank
-    * (r3 "shrink rows-only" item; the MLlib quantizer stays spec-tested
-    * for recall). */
+    * (r3 "shrink rows-only" item). */
   def simTopKIvf(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
     val (cents, assigned) = lloydCells(spark, dir)
@@ -369,82 +368,19 @@ object SimilarityQueries {
       StructField("label", IntegerType)))
   }
 
-  /** The streaming "fresh crawl batch" of embeddings (every `mod`th
-    * vec_id) with its argmin-d2 cell — the stateless assignment used by
-    * both the registered emission query and the index merge. Same
-    * argmin semantics as the batch `Ivf.assignTo` (ties to the lowest
-    * cell id — array_position returns the FIRST minimal index). */
-  private def assignedStream(spark: SparkSession, dir: String, mod: Int): DataFrame = {
-    val (cents, _) = lloydCells(spark, dir)
-    spark.readStream.schema(embeddingsStreamSchema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
-      .filter(col("vec_id") % mod === 0)
-      .withColumn("d2s", centroidD2s(cents))
-  }
-
   def simAssignStreamed(spark: SparkSession, dir: String): DataFrame = {
-    val assigned = assignedStream(spark, dir, mod = 5)
+    val (cents, _) = lloydCells(spark, dir)
+    // the streaming "fresh crawl batch" (every 5th vec_id) with its
+    // argmin-d2 cell: ties to the lowest cell id, as in the batch
+    // `Ivf.assignTo` (array_position returns the FIRST minimal index)
+    val assigned = spark.readStream.schema(embeddingsStreamSchema)
+      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+      .filter(col("vec_id") % 5 === 0)
+      .withColumn("d2s", centroidD2s(cents))
       .select(col("vec_id"),
         (array_position(col("d2s"), array_min(col("d2s"))) - 1).cast("int").as("cell"),
         round(array_min(col("d2s")), 9).as("d2"))
     graft.streaming.StreamGate.collect("sim_assign", assigned).orderBy(col("vec_id"))
-  }
-
-  /** The consumer of the streamed assignments — the vector-side
-    * counterpart of `RetrievalQueries.mergePostingsStream`: merge a
-    * fresh embedding batch into the PERSISTED cell-partitioned IVF
-    * index (`Ivf.writeIndex` layout: `cell=<c>/` directories pruned at
-    * probe time) via an id-keyed upsert. Unlike the lexical side —
-    * where a crawl batch owns its whole `source=` partition — a vector
-    * batch scatters across cells, so the upsert reads ONLY the touched
-    * cells (bounded: ≤ nCells, the same probe-list class of driver
-    * value as `Ivf.searchIndexed`), anti-joins out re-delivered
-    * vec_ids, unions the batch, and dynamically overwrites exactly
-    * those cell partitions. Re-delivery of a batch rewrites its own
-    * rows to identical contents — at-least-once stream delivery,
-    * exactly-once index contents (spec-asserted: stream-merged index
-    * == batch-rebuilt index, probe results equal). */
-  def mergeAssignmentsStream(spark: SparkSession, dir: String, indexDir: String,
-      checkpoint: String, mod: Int = 5): Unit = {
-    val fresh = assignedStream(spark, dir, mod)
-      .select(col("vec_id"), col("embedding"),
-        (array_position(col("d2s"), array_min(col("d2s"))) - 1).cast("int").as("cell"))
-    graft.streaming.StreamGate.runToCompletion(spark) {
-      fresh.writeStream
-        .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-          import graft.operators.LocalCheckpoints
-          val sp = batch.sparkSession
-          val (b, bRdds) = LocalCheckpoints.tracked(batch)
-          val touched = b.select(col("cell")).distinct()
-            .collect().map(_.getInt(0)).sorted
-          if (touched.nonEmpty) {
-            val root = new org.apache.hadoop.fs.Path(indexDir)
-            val fs = root.getFileSystem(sp.sparkContext.hadoopConfiguration)
-            val (merged, mergedRdds) =
-              if (fs.exists(root)) {
-                // only the touched cells are read and rewritten; rows of
-                // OTHER ids in those cells survive the anti-join, so a
-                // batch split across triggers accumulates instead of
-                // clobbering, and whole-run re-delivery is idempotent
-                LocalCheckpoints.tracked(Tables.parquet(sp, indexDir)
-                  .filter(col("cell").isin(touched.toIndexedSeq.map(Integer.valueOf): _*))
-                  .join(b.select(col("vec_id")).distinct(), Seq("vec_id"), "left_anti")
-                  .unionByName(b))
-                  // (the checkpoint materializes before the write
-                  // overwrites the files being read)
-              } else (b, Seq.empty[org.apache.spark.rdd.RDD[_]])
-            merged.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("cell").parquet(indexDir)
-            LocalCheckpoints.free(mergedRdds)
-          }
-          // per-batch checkpoints die with the batch, not the session
-          LocalCheckpoints.free(bRdds)
-        }
-        .option("checkpointLocation", checkpoint)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-    }
   }
 
   /** Corpus cartography: join the document metadata onto the Lloyd-IVF
@@ -583,8 +519,8 @@ object SimilarityQueries {
 
   /** The EXECUTED auto-probe path: seeded-IVF top-k at the depth
     * [[graft.operators.Ivf.autoProbe]] selects from the measured table
-    * — the probe-depth analog of [[graft.operators.Dedup.autoBandedNearDups]]
-    * (the choice row says WHAT the planner picked; this runs it).
+    * — the probe-depth analog of `sim_neardup_autoband` (the choice row
+    * says WHAT the planner picked; this runs it).
     * Oracle-gated end to end: the DuckDB side recomputes the recall
     * table, applies the same selection as a scalar subquery, and
     * probes `r <= (SELECT n_probe FROM choice)` — so a drifting choice
@@ -600,7 +536,7 @@ object SimilarityQueries {
 
   /** THE PRESCRIPTIVE BANDING CHOICE (VERDICT r11 ask #3): the row of
     * the measured bucket-plan table that
-    * [[graft.operators.Similarity.autoBand]] selects — within-budget
+    * [[graft.operators.Similarity.autoBandFrom]] selects — within-budget
     * first, then largest candidate mass (candidate volume is the
     * recall knob: buy as much recall as the budget affords), ties to
     * fewer bands then fewer bits. Oracle-gated through the same plane
@@ -784,7 +720,7 @@ object SimilarityQueries {
     // md5-parity buckets through the SAME plane CTE the near-dup
     // oracles use — occupancy → C(n,2) mass → budget verdict
     "sim_lsh_bucket_plan" -> (bucketPlanOracleUnion + "\nORDER BY bands, bits_per_band"),
-    // the autoBand policy, verbatim: within-budget first, then largest
+    // the autoBandFrom policy, verbatim: within-budget first, then largest
     // candidate mass (the recall knob), ties to fewer bands/bits
     "sim_autoband_choice" ->
       s"""SELECT * FROM (

@@ -741,11 +741,6 @@ object KafkaReplay {
       maxPerTrigger: Option[Long], startingOffsets: String = "earliest")
       extends MicroBatchStream with SupportsTriggerAvailableNow {
     @volatile private var availableNowEnd: Option[SortedMap[Int, Long]] = None
-    @volatile private var committed: Option[ReplayOffset] = None
-
-    /** Committed high-water mark (test observability; the checkpoint is
-      * authoritative across restarts). */
-    def lastCommitted: Option[ReplayOffset] = committed
 
     private def currentEnd: SortedMap[Int, Long] =
       availableNowEnd.getOrElse(endOffsets(path))
@@ -805,8 +800,8 @@ object KafkaReplay {
 
     override def createReaderFactory(): PartitionReaderFactory = ReplayReaderFactory
     override def deserializeOffset(json: String): Offset = ReplayOffset.fromJson(json)
-    override def commit(end: Offset): Unit =
-      committed = Some(end.asInstanceOf[ReplayOffset])
+    // the checkpoint is authoritative: nothing to release on commit
+    override def commit(end: Offset): Unit = ()
     override def stop(): Unit = ()
   }
 

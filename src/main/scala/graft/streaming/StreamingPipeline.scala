@@ -7,16 +7,11 @@ import org.apache.spark.sql.types.StructType
 
 import graft.ops.ProfileTransform
 
-case class UserEvent(user_id: Long, value: Double)
-case class UserTotal(user_id: Long, n_events: Long, total_value: Double)
 case class VersionEvent(user_id: Long, event_id: Long,
     ts: java.sql.Timestamp, value: Double)
 case class Scd2Out(user_id: Long, event_id: Long,
     valid_from: java.sql.Timestamp, valid_to: Option[java.sql.Timestamp],
     value: Double, is_current: Boolean)
-case class LshBandRow(id: Long, band: Int, bh: String)
-case class LshBucketState(ids: List[Long], saturated: Boolean)
-case class LshPair(id_a: Long, id_b: Long)
 /** Sessionization input: `ts` (timestamp) carries the watermark; all
   * session arithmetic runs on `ts_us` (exact event micros — Timestamp
   * round-trips through the encoder at millis precision). */
@@ -256,20 +251,6 @@ object StreamingPipeline {
       col("timestamp").as("kafka_ts"), col("v.*")))
   }
 
-  /** The DEAD-LETTER branch of the permissive decode policy (r15
-    * review): records whose value is PRESENT but undecodable against
-    * `schemaJson`. [[enforceAvro]]+[[transformed]] drop BOTH tombstones
-    * (null value — the sink's behavior.on.null.values=ignore policy)
-    * and malformed payloads (permissive decode nulls them) through the
-    * same `v.isNull` filter, which makes producer corruption
-    * indistinguishable from deletes. A deployment routes THIS frame to
-    * its DLQ topic/bucket; the registered malformed-skip queries pin
-    * the drop semantic itself. */
-  def avroDeadLetters(kafkaShaped: DataFrame, schemaJson: String): DataFrame =
-    kafkaShaped.filter(col("value").isNotNull &&
-      graft.avro.functions.from_avro_confluent(
-        col("value"), schemaJson, permissive = true).isNull)
-
   /** S7-S9: partitioned JSON sink with checkpointing. `partitionBy` on the
     * Kafka partition column reproduces the DefaultPartitioner's
     * `partition=<p>/` object layout (s3-sink.json:20). */
@@ -342,137 +323,29 @@ object StreamingPipeline {
     * checkpoint guarantees this run never committed those batches, so
     * they are a dead run's leftovers (a rerun over a lost checkpoint
     * restarts at batch 0), and readers globbing the root would count
-    * them twice. Two live queries must not share one `outPath`. */
+    * them twice; a non-numeric `batch=` name (a foreign directory) is
+    * left alone, never a per-batch crash. Two live queries must not
+    * share one `outPath`. */
   private def batchObjects(
       df: DataFrame, format: String, options: Map[String, String],
       outPath: String, checkpoint: String,
       trigger: Trigger): DataStreamWriter[org.apache.spark.sql.Row] =
     df.writeStream
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        deleteNumberedDirs(batch.sparkSession, outPath, "batch=")(_ > batchId)
+        val root = new org.apache.hadoop.fs.Path(outPath)
+        val fs = root.getFileSystem(batch.sparkSession.sparkContext.hadoopConfiguration)
+        if (fs.exists(root))
+          fs.listStatus(root).filter(_.isDirectory).map(_.getPath)
+            .filter { d =>
+              val n = d.getName
+              n.startsWith("batch=") && n.drop("batch=".length).toLongOption.exists(_ > batchId)
+            }
+            .foreach(d => fs.delete(d, true))
         batch.write.format(format).options(options).mode("overwrite")
           .save(s"$outPath/batch=$batchId")
       }
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
-
-  /** Delete the `<prefix><n>` directories directly under `root` whose
-    * `n` satisfies `doomed`. A non-numeric suffix (a foreign directory)
-    * is left alone, never a per-batch crash. */
-  private def deleteNumberedDirs(spark: SparkSession, root: String,
-      prefix: String)(doomed: Long => Boolean): Unit = {
-    val p = new org.apache.hadoop.fs.Path(root)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p))
-      fs.listStatus(p).filter(_.isDirectory).map(_.getPath)
-        .filter { d =>
-          val n = d.getName
-          n.startsWith(prefix) && n.drop(prefix.length).toLongOption.exists(doomed)
-        }
-        .foreach(d => fs.delete(d, true))
-  }
-
-  /** The highest committed state version strictly below `before` (a
-    * replayed batch must fold from its ORIGINAL predecessor, never from
-    * its own possibly-half-written output). */
-  private def latestStateVersion(spark: SparkSession, stateDir: String,
-      before: Long): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(stateDir)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      // only COMMITTED versions qualify: a v=<id> directory exists from
-      // the first task file of an in-flight (or crashed) overwrite, and
-      // reading it would violate the snapshot-isolation contract —
-      // _SUCCESS is the FileOutputCommitter's commit marker
-      // toLongOption, not toLong (r17 review, as in deleteNumberedDirs):
-      // a foreign `v=<non-numeric>` dir under stateDir would otherwise
-      // throw inside EVERY read and commit — a permanently wedged sink
-      val versions = fs.listStatus(p).filter(_.isDirectory)
-        .map(_.getPath)
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d, "_SUCCESS")))
-        .map(_.getName)
-        .collect { case n if n.startsWith("v=") => n.drop(2).toLongOption }
-        .flatten
-        .filter(_ < before)
-      if (versions.isEmpty) None
-      else Some(graft.sources.Tables.parquet(spark, s"$stateDir/v=${versions.max}"))
-    }
-  }
-
-  /** Incremental materialized aggregate — the CDC upsert-merge pattern
-    * without a table format: each micro-batch folds its partial
-    * aggregate into a versioned keyed state table. `stateDir/v=<id>` is
-    * computed deterministically from `v=<previous id>` plus this batch,
-    * so a replayed batch overwrites its OWN version (exactly-once), and
-    * readers take the highest committed version (manifest-free snapshot
-    * isolation; a production deployment swaps the parquet dirs for a
-    * table format's transactional commit). The merge shuffles on the
-    * grouping key only — state size tracks distinct keys, never stream
-    * length, which is what makes the materialized view viable at
-    * 100 TB of history. */
-  def incrementalTotals(
-      df: DataFrame, keyCol: String, valueCol: String,
-      stateDir: String, checkpoint: String,
-      trigger: Trigger = Trigger.AvailableNow()): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val spark = batch.sparkSession
-        // incarnation sweep, as in [[batchObjects]]: a v= above this
-        // batch id is a dead run's (a rerun whose checkpoint was lost
-        // restarts at 0), and currentTotals' max-version read would
-        // otherwise serve its stale snapshot forever
-        deleteNumberedDirs(spark, stateDir, "v=")(_ > batchId)
-        val agg = batch.groupBy(col(keyCol))
-          .agg(sum(col(valueCol)).as("total"), count(lit(1)).as("n_events"))
-        val merged = latestStateVersion(spark, stateDir, before = batchId) match {
-          case Some(prev) =>
-            prev.unionByName(agg).groupBy(col(keyCol))
-              .agg(sum(col("total")).as("total"), sum(col("n_events")).as("n_events"))
-          case None => agg
-        }
-        merged.write.mode("overwrite").parquet(s"$stateDir/v=$batchId")
-        // bounded version tail (r15 review): a replayed batch B reads
-        // v=B-1, so committed versions older than two back are dead
-        // weight — without this sweep a continuous deployment wrote one
-        // full snapshot of the aggregate per micro-batch FOREVER.
-        // Keeping two (not one) also gives a concurrent currentTotals
-        // reader that just resolved v=B-1 a grace window; as with the
-        // signal sweeps, cross-process readers racing a regeneration
-        // are out of scope (single estate per stateDir).
-        deleteNumberedDirs(spark, stateDir, "v=")(_ < batchId - 2)
-      }
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-
-  /** Read the current snapshot of an [[incrementalTotals]] state table. */
-  def currentTotals(spark: SparkSession, stateDir: String): Option[DataFrame] =
-    latestStateVersion(spark, stateDir, before = Long.MaxValue)
-
-  // ---- ST3/ST4 gap: event-time semantics --------------------------------
-
-  /** Tumbling or sliding windowed aggregation with a watermark. */
-  def windowedCounts(
-      events: DataFrame, tsCol: String, delay: String,
-      width: String, slide: Option[String] = None): DataFrame = {
-    val w = slide.fold(window(col(tsCol), width))(s => window(col(tsCol), width, s))
-    events
-      .withWatermark(tsCol, delay)
-      .groupBy(w.as("w"), col("event_type"))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("w.start").as("window_start"), col("w.end").as("window_end"),
-        col("event_type"), col("n"), col("sum_value"))
-  }
-
-  /** Session windows (gap-based) per user. */
-  def sessionCounts(
-      events: DataFrame, tsCol: String, delay: String, gap: String): DataFrame =
-    events
-      .withWatermark(tsCol, delay)
-      .groupBy(session_window(col(tsCol), gap).as("sw"), col("user_id"))
-      .agg(count(lit(1)).as("n_events"))
-      .select(col("sw.start").as("session_start"), col("sw.end").as("session_end"),
-        col("user_id"), col("n_events"))
 
   /** Stream-stream interval join: purchases matched to the same user's
     * signups within `horizon` before them. Watermarks on BOTH sides plus
@@ -495,43 +368,6 @@ object StreamingPipeline {
         col(s"r.$rightTs") <= col(s"l.$leftTs") &&
         col(s"r.$rightTs") >= col(s"l.$leftTs") - expr(s"INTERVAL $horizon"),
       joinType)
-  }
-
-  /** Custom keyed state (the `flatMapGroupsWithState` escape hatch,
-    * SURVEY.md §2.9 ST4): per-key running aggregates that survive across
-    * micro-batches. Used here for running per-user event counts + value
-    * totals; the same shape carries any incremental per-key model. */
-  /** `idleTimeout` bounds state at stream scale: a key idle past the
-    * horizon has its running total evicted (the next event starts a
-    * fresh count — the documented trade for per-key state that would
-    * otherwise grow with lifetime key cardinality forever). */
-  def runningUserTotals(
-      events: org.apache.spark.sql.Dataset[UserEvent],
-      idleTimeout: Option[String] = None): org.apache.spark.sql.Dataset[UserTotal] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    import events.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    events
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState[UserTotal, UserTotal](
-        OutputMode.Append, timeoutConf) {
-        (userId: Long, rows: Iterator[UserEvent], state: GroupState[UserTotal]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(UserTotal(userId, 0L, 0.0))
-            var n = prev.n_events
-            var total = prev.total_value
-            rows.foreach { e => n += 1; total += e.value }
-            val next = UserTotal(userId, n, total)
-            state.update(next)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            Iterator.single(next)
-          }
-      }
   }
 
   /** Streaming SCD2: the stateful twin of the batch `scd2_history`
@@ -594,99 +430,6 @@ object StreamingPipeline {
           }
       }
   }
-
-  /** Streaming MinHash-LSH near-dup candidates: documents arrive as a
-    * stream, signatures are computed scan-side (the same fused
-    * MinHashSignatureMd5 kernel as the batch path), banded rows group by
-    * (band, bucket-hash), and per-bucket keyed state holds the member id
-    * list — each new doc emits one candidate pair per existing member.
-    *
-    * Semantics vs the batch `Dedup.lshCandidates`: identical pair set on
-    * any prefix where no bucket exceeds `maxBucket` (spec-asserted), with
-    * two documented stream-shaped deltas: (a) pairs that collide in
-    * several bands are emitted once PER band (batch dedups globally —
-    * consumers `dropDuplicates` downstream; retraction-free sinks can't
-    * dedup retroactively), and (b) the bucket cap is prospective — a
-    * bucket saturates once it holds `maxBucket` members and stops
-    * emitting, while batch drops the whole oversized bucket
-    * retroactively. State is bounded: ≤ maxBucket ids per live bucket.
-    */
-  def streamingLshCandidates(
-      docs: DataFrame, idCol: String, textCol: String,
-      k: Int = 3, numHashes: Int = 16, bands: Int = 4,
-      maxBucket: Int = 1000,
-      bucketTtl: Option[String] = None): org.apache.spark.sql.Dataset[LshPair] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val timeoutConf =
-      if (bucketTtl.isDefined) GroupStateTimeout.ProcessingTimeTimeout
-      else GroupStateTimeout.NoTimeout
-    val rowsPerBand = numHashes / bands
-    val withSig = docs
-      .select(col(idCol).cast("long").as("id"),
-        graft.functions.TextFunctions.shingles(col(textCol), k).as("sh"))
-      .filter(size(col("sh")) > 0)
-      .withColumn("sig", graft.operators.Dedup.minhashSignatureMd5(col("sh"), numHashes))
-    // SHARED banding kernel (r15 review): the batch path and this
-    // incremental twin must be encoding-identical by construction —
-    // an inline copy of the band hash would silently diverge the
-    // spec-pinned pair-set equality if the batch encoding ever moved
-    val banded = graft.operators.Dedup
-      .bandedRows(withSig, "id", "sig", bands, rowsPerBand)
-      .as[LshBandRow]
-    banded
-      .groupByKey(r => (r.band, r.bh))
-      .flatMapGroupsWithState[LshBucketState, LshPair](
-        OutputMode.Append, timeoutConf) {
-        (_: (Int, String), rows: Iterator[LshBandRow],
-         state: GroupState[LshBucketState]) =>
-          if (state.hasTimedOut) {
-            // bucketTtl eviction: idle buckets are dropped; later docs in
-            // that bucket miss pairs against pre-TTL members (the
-            // documented recall trade that keeps total state ∝ the
-            // active working set, not corpus lifetime)
-            state.remove()
-            Iterator.empty
-          } else {
-            val prior = state.getOption.getOrElse(LshBucketState(Nil, saturated = false))
-            var members = prior.ids
-            // O(1) membership (r15 review): a near-dup flood landing
-            // maxBucket docs in one bucket in one batch made the
-            // List.contains fold O(rows x maxBucket) on the state-store
-            // hot path
-            val seen = scala.collection.mutable.HashSet.from(prior.ids)
-            var saturated = prior.saturated
-            val out = scala.collection.mutable.ListBuffer.empty[LshPair]
-            rows.foreach { r =>
-              if (!saturated && !seen.contains(r.id)) {
-                members.foreach { m =>
-                  out += LshPair(math.min(m, r.id), math.max(m, r.id))
-                }
-                members = r.id :: members
-                seen += r.id
-                // seen.size, not members.length (r17): the list scan is
-                // O(members) per appended id — the same flood hot path
-                // the r15 HashSet fix de-quadratified; the set mirrors
-                // the member list exactly, so its size is the bucket size
-                if (seen.size >= maxBucket) saturated = true
-              }
-            }
-            state.update(LshBucketState(members, saturated))
-            bucketTtl.foreach(state.setTimeoutDuration)
-            out.iterator
-          }
-      }
-  }
-
-  /** ST4: streaming dedup with bounded state — duplicates arriving within
-    * the watermark horizon are dropped; state for keys older than the
-    * watermark is evicted (the unbounded-state hazard of plain
-    * `dropDuplicates` at 100 TB). */
-  def dedupWithinWatermark(
-      df: DataFrame, keyCols: Seq[String], tsCol: String, delay: String): DataFrame =
-    df.withWatermark(tsCol, delay)
-      .dropDuplicatesWithinWatermark(keyCols.head, keyCols.tail: _*)
 
   /** ST4 custom keyed state: gap sessionization through
     * `flatMapGroupsWithState` with EVENT-TIME timeout — the state-store

@@ -29,27 +29,17 @@ case class TypeCount(user_id: Long, event_type: String, n: Long)
   * receives later input emits a superseding snapshot, and downstream
   * settles by max(n) per (user, type) — counts are monotone, so the
   * max IS the latest snapshot regardless of how many flushes happened.
-  *
-  * State lifetime: entries carry a processing-time TTL (the production
-  * bound on abandoned keys); under the gate nothing lives long enough
-  * to expire, which the TTL receipt in TwsCountsSpec pins from the
-  * other side (counts survive a multi-batch run with a generous TTL).
   */
 object TwsCounts {
 
-  class TypeCountProcessor(ttl: TTLConfig)
+  class TypeCountProcessor
       extends StatefulProcessor[Long, TypedEvent, TypeCount] {
 
     @transient private var counts: MapState[String, Long] = _
-    @transient private var eventTime: Boolean = _
 
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit = {
-      // state TTL is wall-clock and the engine only allows it in
-      // ProcessingTime mode; emission adapts to the mode below
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
       counts = getHandle.getMapState[String, Long](
-        "counts", Encoders.STRING, Encoders.scalaLong, ttl)
-      eventTime = timeMode == TimeMode.EventTime()
-    }
+        "counts", Encoders.STRING, Encoders.scalaLong, TTLConfig.NONE)
 
     override def handleInputRows(key: Long, rows: Iterator[TypedEvent],
         timers: TimerValues): Iterator[TypeCount] = {
@@ -61,26 +51,15 @@ object TwsCounts {
       val deltas = scala.collection.mutable.LinkedHashMap.empty[String, Long]
       rows.foreach(e => deltas.update(e.event_type,
         deltas.getOrElse(e.event_type, 0L) + 1L))
-      val touched = deltas.keySet
       deltas.foreach { case (tpe, d) =>
         val cur = if (counts.containsKey(tpe)) counts.getValue(tpe) else 0L
         counts.updateValue(tpe, cur + d)
       }
-      if (eventTime) {
-        // quiet-period emission: re-arm to watermark+1; only a batch
-        // with no input for this key lets the timer survive to fire
-        getHandle.listTimers().foreach(getHandle.deleteTimer)
-        getHandle.registerTimer(timers.getCurrentWatermarkInMs() + 1L)
-        Iterator.empty
-      } else {
-        // ProcessingTime (the TTL-capable mode) has no watermark to
-        // define a quiet period — emit superseding snapshots of the
-        // types touched this batch instead; downstream settles by
-        // LATEST emission per (user, type) — NOT max(n), which TTL'd
-        // non-monotone counts break (see the scaladoc on
-        // [[typeCountsProcessingTime]])
-        touched.iterator.map(t => TypeCount(key, t, counts.getValue(t)))
-      }
+      // quiet-period emission: re-arm to watermark+1; only a batch
+      // with no input for this key lets the timer survive to fire
+      getHandle.listTimers().foreach(getHandle.deleteTimer)
+      getHandle.registerTimer(timers.getCurrentWatermarkInMs() + 1L)
+      Iterator.empty
     }
 
     override def handleExpiredTimer(key: Long, timers: TimerValues,
@@ -89,36 +68,12 @@ object TwsCounts {
   }
 
   /** Declare the running counts over a watermarked typed-event stream
-    * (event-time quiet-period emission; TTL not permitted here). */
+    * (event-time quiet-period emission). */
   def typeCounts(events: Dataset[TypedEvent]): Dataset[TypeCount] = {
     import events.sparkSession.implicits._
     events
       .groupByKey(_.user_id)
-      .transformWithState(new TypeCountProcessor(TTLConfig.NONE),
+      .transformWithState(new TypeCountProcessor,
         TimeMode.EventTime(), OutputMode.Append())
-  }
-
-  /** Processing-time variant — the mode that legalizes state TTL (the
-    * production bound on abandoned keys): emits superseding snapshots of
-    * the types touched each batch. Settle downstream by LATEST emission
-    * per (user, type) — e.g. pair each snapshot with its batch id and
-    * keep max-by-batch — NOT by max(n): TTL eviction makes counts
-    * non-monotone (a key expires at n=40, new events restart it at
-    * 1, 2, ...), so max(n) would resurrect the stale pre-expiry count
-    * forever. max(n) settling is sound only for the no-TTL
-    * [[typeCounts]] variant, whose counts are monotone by construction.
-    *
-    * Engine caveat (Spark 4.1): while TTL'd state exists, ProcessingTime
-    * mode reports "another batch needed" indefinitely, so
-    * `processAllAvailable`/AvailableNow never see a terminal quiescent
-    * point — run this under a periodic trigger (the production shape for
-    * an unbounded stream) and gate tests by polling the sink, not by a
-    * barrier call (see TwsCountsSpec). */
-  def typeCountsWithTtl(events: Dataset[TypedEvent], ttl: TTLConfig): Dataset[TypeCount] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.user_id)
-      .transformWithState(new TypeCountProcessor(ttl),
-        TimeMode.ProcessingTime(), OutputMode.Append())
   }
 }

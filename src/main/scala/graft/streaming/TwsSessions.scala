@@ -7,8 +7,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
 
 /** Gap sessionization on Spark 4's `transformWithState` — the third
   * keyed-state streaming API surface beside
-  * [[StreamingPipeline.dedupWithinWatermark]]
-  * (`dropDuplicatesWithinWatermark`) and [[StreamingPipeline.gapSessions]]
+  * `dropDuplicatesWithinWatermark` and [[StreamingPipeline.gapSessions]]
   * (`flatMapGroupsWithState`), carrying the SAME session semantics so the
   * two custom-state implementations are mutually provable: same compressed
   * gap-disjoint interval state, same watermark late-drop, same

@@ -250,7 +250,7 @@ class AvroSpec extends SparkSpec {
         |    {"name": "years", "aliases": ["age"], "type": "int"}
         |  ]
         |}""".stripMargin
-    assert(graft.avro.SchemaCompat.canRead(renamed, schema),
+    assert(graft.avro.SchemaCompat.incompatibilities(renamed, schema).isEmpty,
       "aliased rename must be read-compatible")
     val out = usersDf(Seq(userRow(6, Some("Ali"))))
       .select(to_avro_confluent(col("user"), schema).as("b"))
@@ -357,9 +357,7 @@ class AvroSpec extends SparkSpec {
     // data), forward-INcompatible (int reader cannot read long data)
     assert(SchemaCompat.checkBackward(widened, base).isEmpty)
     assert(SchemaCompat.checkForward(widened, base).nonEmpty)
-    val msg = intercept[IllegalArgumentException] {
-      SchemaCompat.requireCanRead(addRequired, base)
-    }.getMessage
+    val msg = SchemaCompat.incompatibilities(addRequired, base).mkString("\n")
     assert(msg.contains("READER_FIELD_MISSING_DEFAULT_VALUE") && msg.contains("b"))
   }
 

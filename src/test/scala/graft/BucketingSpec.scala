@@ -43,7 +43,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes partitions on a partition-column filter") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_part").toString
+    val dir = suiteTempDir("graft_part")
     Tables.events(spark, sf).write.mode("overwrite")
       .partitionBy("event_type").parquet(dir)
     val q = spark.read.parquet(dir).filter(col("event_type") === "signup")
@@ -55,7 +55,7 @@ class BucketingSpec extends SparkSpec {
   }
 
   test("dynamic partition pruning kicks in for a filtered dim join") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_dpp").toString
+    val dir = suiteTempDir("graft_dpp")
     Tables.lineitem(spark, sf).write.mode("overwrite")
       .partitionBy("l_suppkey").parquet(dir)
     val fact = spark.read.parquet(dir)

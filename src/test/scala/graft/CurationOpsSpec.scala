@@ -117,7 +117,7 @@ class CurationOpsSpec extends SparkSpec {
   test("written signal tables: curation_decisions in a second session reuses " +
       "the first session's files byte-identically") {
     import graft.queries.SignalMemo
-    val root = java.nio.file.Files.createTempDirectory("graft_signals").toString
+    val root = suiteTempDir("graft_signals")
     def signalFiles(): Map[String, (Long, Long)] = {
       import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(java.nio.file.Paths.get(root)).iterator().asScala
@@ -144,7 +144,7 @@ class CurationOpsSpec extends SparkSpec {
   test("signal builds sweep stale-fingerprint generations of the same corpus " +
       "(r15 review: regeneration must not grow the signal root unboundedly)") {
     import graft.queries.SignalMemo
-    val root = java.nio.file.Files.createTempDirectory("graft_sweep").toString
+    val root = suiteTempDir("graft_sweep")
     // a dead generation of THIS corpus (same slug, different fingerprint)
     // and a sibling corpus's generation (different slug) — only the
     // former may be swept

@@ -362,19 +362,13 @@ class DedupSpec extends SparkSpec {
       Seq(("m-a", 0L), ("m-b", 1L)))
   }
 
-  test("autoBandedNearDups rejects off-grid thresholds instead of silently rounding (r15)") {
-    val docs = graft.sources.Tables.documents(spark, sf)
-    val plan = graft.queries.DedupQueries.dedupLshBandPlan(spark, sf)
-    val ex = intercept[IllegalArgumentException] {
-      Dedup.autoBandedNearDups(plan, docs, "doc_id", "text",
-        threshold = 0.75, floorMicro = 500000L)
-    }
-    assert(ex.getMessage.contains("tenth grid"))
-  }
-
   test("winnowing near-dups find the true J>=0.8 pairs on real docs") {
     val docs = graft.sources.Tables.documents(spark, sf)
-    val viaWinnowing = Dedup.winnowingNearDups(docs, "doc_id", "text")
+    val cands = Dedup.winnowingCandidates(docs, "doc_id", "text",
+      k = 3, window = 4, minShared = 5, maxBucket = 100).select("id_a", "id_b")
+    val shingled = docs.select($"doc_id", TextFunctions.shingles($"text", 3).as("sh"))
+      .filter(size($"sh") > 0)
+    val viaWinnowing = Dedup.jaccardVerify(cands, shingled, "doc_id", "sh", 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // ground truth: blocked exact jaccard (oracle-verified elsewhere)
     val viaBlocked = Dedup.ngramJaccardFingerprintBlocked(docs, "doc_id", "text", 3, 0.8)
@@ -489,22 +483,6 @@ class DedupSpec extends SparkSpec {
       graft.operators.Dedup.autoBanding(plan,
         graft.queries.DedupQueries.AutoBandingTargetTenths,
         graft.queries.DedupQueries.AutoBandingRecallFloorMicro))
-  }
-
-  test("autoBandedNearDups output-equals the explicitly-banded run") {
-    val plan = graft.queries.DedupQueries.dedupLshBandPlan(spark, sf)
-    val docs = graft.sources.Tables.documents(spark, sf)
-    def pairs(df: org.apache.spark.sql.DataFrame) =
-      df.select("id_a", "id_b").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val auto = pairs(graft.operators.Dedup.autoBandedNearDups(
-      plan, docs, "doc_id", "text", threshold = 0.8, floorMicro = 850000L))
-    // the chosen banding at (0.8, 0.85) is the registered 4x4 — the
-    // auto path must reproduce the registered pipeline exactly
-    val explicit = pairs(graft.operators.Dedup.minhashNearDups(
-      docs, "doc_id", "text", k = 3, numHashes = 16, bands = 4,
-      threshold = 0.8, useMd5 = true))
-    assert(auto === explicit)
   }
 
   test("leakage-safe split: no near-dup group straddles train/eval; singletons covered") {
@@ -697,7 +675,7 @@ class DedupSpec extends SparkSpec {
           concat(lit(s"zq${j}w"), col("doc_id").cast("string"))): _*))
       .withColumn("n_chars", length(col("text")).cast("long"))
     val extraIds = extras.select("doc_id").collect().map(_.getLong(0))
-    val aug = java.nio.file.Files.createTempDirectory("graft_split_aug").toString
+    val aug = suiteTempDir("graft_split_aug")
     docs.unionByName(extras).coalesce(1)
       .write.mode("overwrite").parquet(s"$aug/documents.parquet")
     val after = graft.queries.DedupQueries.dedupLeakageSplit(spark, aug)
@@ -756,33 +734,6 @@ class DedupSpec extends SparkSpec {
         // totality: max-recall fallback
         assert(at((b, rp)) === at.values.max)
       }
-    }
-    import spark.implicits._
-    val winPlan = Seq((2, 100L, 40L), (5, 250L, 80L), (10, 500L, 95L), (20, 1000L, 100L))
-      .toDF("win", "candidates", "survivors")
-    for (cov <- Seq(100000L, 400000L, 800000L, 950000L, 1000000L)) {
-      val w = graft.operators.SortedNeighborhood.autoWindow(winPlan, cov)
-      val rows = Seq((2, 40L), (5, 80L), (10, 95L), (20, 100L))
-      val qualifies = rows.filter(_._2 * 1000000L >= cov * 100L).map(_._1)
-      assert(qualifies.contains(w) && w === qualifies.min,
-        s"cov=$cov: $w is not the smallest qualifying window of $qualifies")
-    }
-  }
-
-  test("autoWindow: bounds enforced; no Long overflow at 100TB-scale survivor counts") {
-    import spark.implicits._
-    // ADVICE r12: survivors * 1e6 overflows Long above ~9.2e12; BigInt
-    // keeps the comparison exact at deployment-scale counts
-    val plan = Seq((2, 100L, 5000000000000L), (20, 1000L, 9300000000000L))
-      .toDF("win", "candidates", "survivors")
-    assert(graft.operators.SortedNeighborhood.autoWindow(plan, 1000000L) === 20)
-    assert(graft.operators.SortedNeighborhood.autoWindow(plan, 500000L) === 2)
-    // out-of-range micro-fractions fail loudly, not with an empty .min
-    intercept[IllegalArgumentException] {
-      graft.operators.SortedNeighborhood.autoWindow(plan, 1000001L)
-    }
-    intercept[IllegalArgumentException] {
-      graft.operators.SortedNeighborhood.autoWindow(plan, -1L)
     }
   }
 
@@ -996,20 +947,17 @@ class DedupSpec extends SparkSpec {
   }
 
   test("autoWindow: smallest window at 95% survivor coverage; query agrees") {
-    import spark.implicits._
-    // synthetic law check: coverage floor slides the choice
-    val plan = Seq((2, 100L, 50L), (5, 250L, 90L), (10, 500L, 99L), (20, 1000L, 100L))
-      .toDF("win", "candidates", "survivors")
-    assert(graft.operators.SortedNeighborhood.autoWindow(plan, 950000L) === 10)
-    assert(graft.operators.SortedNeighborhood.autoWindow(plan, 900000L) === 5)
-    assert(graft.operators.SortedNeighborhood.autoWindow(plan, 1000000L) === 20)
-    // real table: the emitted row is the operator's own choice
-    val real = graft.queries.DedupQueries.dedupSnmWindowPlan(spark, sf)
-    val chosen = graft.operators.SortedNeighborhood.autoWindow(real,
-      graft.queries.DedupQueries.AutoWindowCoverageMicro)
+    // the policy, recomputed from the measured table: the smallest
+    // window whose survivors reach 95% of the widest window's
+    val real = graft.queries.DedupQueries.dedupSnmWindowPlan(spark, sf).collect()
+      .map(r => (r.getAs[Int]("win"), r.getAs[Long]("survivors")))
+    val maxSurv = real.map(_._2).max
+    val chosen = real.filter(_._2 * 1000000L >=
+        graft.queries.DedupQueries.AutoWindowCoverageMicro * maxSurv)
+      .map(_._1).min
     val emitted = graft.queries.DedupQueries.dedupSnmAutowindow(spark, sf).collect()
     assert(emitted.length === 1)
     assert(emitted.head.getInt(0) === chosen,
-      "dedup_snm_autowindow must emit the autoWindow-selected window")
+      "dedup_snm_autowindow must emit the policy-selected window")
   }
 }

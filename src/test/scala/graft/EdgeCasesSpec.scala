@@ -126,7 +126,7 @@ class EdgeCasesSpec extends SparkSpec {
   }
 
   test("OCF split reader: empty dir reads empty; zero-length files planned away") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ocf_empty").toString
+    val dir = suiteTempDir("graft_ocf_empty")
     val conf = spark.sparkContext.hadoopConfiguration
     assert(graft.avro.AvroFiles.planSplits(conf, dir, 1 << 20).isEmpty)
     assert(graft.avro.AvroFiles.read(spark, dir,
@@ -141,12 +141,12 @@ class EdgeCasesSpec extends SparkSpec {
     val e = intercept[Exception] {
       val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[Int]
       mem.addData(1)
-      val dir = java.nio.file.Files.createTempDirectory("graft_sink_bad").toString
+      val dir = suiteTempDir("graft_sink_bad")
       val q = mem.toDF().writeStream
         .format(graft.sources.KafkaReplay.ShortName)
         .option("path", dir)
         .option("checkpointLocation",
-          java.nio.file.Files.createTempDirectory("graft_sink_bad_ckpt").toString)
+          suiteTempDir("graft_sink_bad_ckpt"))
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
     }
@@ -156,7 +156,7 @@ class EdgeCasesSpec extends SparkSpec {
 
   test("ensureFixture: self-repairs a partial fixture dir and is idempotent once committed") {
     import java.nio.file.{Files, Paths}
-    val root = Files.createTempDirectory("graft_fixture_spec")
+    val root = Paths.get(suiteTempDir("graft_fixture_spec"))
     val dir = root.resolve("fixture_v1")
     // a crashed legacy write: part file present, NO _SUCCESS marker
     Files.createDirectories(dir)

@@ -19,13 +19,16 @@ object ForkedJvm {
   ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
 
   /** Exit code and the child's stdout and stderr, interleaved. `env`
-    * entries override the inherited environment. */
+    * entries override the inherited environment. The child's
+    * `java.io.tmpdir` is `cwd`, so what it leaves there (e.g. Hive's
+    * per-session `<uuid>_resources` dir) goes with the caller's dir. */
   def run(heap: String, cwd: File, env: Seq[(String, String)],
       mainClass: String, args: String*): (Int, String) = {
     import scala.sys.process._
     val javaBin = new File(new File(System.getProperty("java.home"), "bin"), "java").getAbsolutePath
     val cmd = Seq(javaBin) ++ addOpens ++ Seq(
       s"-Xmx$heap", "-Dspark.ui.enabled=false", "-Dspark.sql.session.timeZone=UTC",
+      s"-Djava.io.tmpdir=${cwd.getAbsolutePath}",
       "-cp", System.getProperty("java.class.path"), mainClass) ++ args
     val out = new StringBuilder
     val logger = ProcessLogger(l => out.synchronized { out.append(l).append('\n') },

@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.sources.Tables
@@ -10,26 +8,8 @@ import graft.sources.Tables
   * CSV writes read back losslessly with explicit schemas. */
 class FormatsSpec extends SparkSpec {
 
-  test("compaction rewrites a small-file directory into sized files, content intact") {
-    val smallDir = Files.createTempDirectory("graft_small").toString
-    val outDir = Files.createTempDirectory("graft_compact").toString
-    val src = Tables.customer(spark, sf).repartition(8)
-    src.write.mode("overwrite").parquet(smallDir)
-    val before = new java.io.File(smallDir).listFiles()
-      .count(f => f.getName.endsWith(".parquet"))
-    assert(before === 8)
-    val n = src.count()
-    val (rows, files) = graft.operators.Maintenance.compact(
-      spark, smallDir, outDir, "parquet", targetRowsPerFile = (n + 1) / 2)
-    assert(rows === n)
-    assert(files === 2)
-    val a = spark.read.parquet(smallDir).orderBy("c_custkey").collect()
-    val b = spark.read.parquet(outDir).orderBy("c_custkey").collect()
-    assert(a.toSeq === b.toSeq)
-  }
-
   test("JSONL round-trip preserves rows including nested structs") {
-    val dir = Files.createTempDirectory("graft_jsonl").toString
+    val dir = suiteTempDir("graft_jsonl")
     val src = Tables.customer(spark, sf)
       .withColumn("addr", struct(lit("1 st").as("street"), lit("City").as("city")))
     src.write.mode("overwrite").json(dir)
@@ -42,7 +22,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("CSV round-trip with explicit schema preserves values") {
-    val dir = Files.createTempDirectory("graft_csv").toString
+    val dir = suiteTempDir("graft_csv")
     val src = Tables.nation(spark, sf)
     src.write.mode("overwrite").option("header", "true").csv(dir)
     val back = spark.read.schema(src.schema).option("header", "true").csv(dir)
@@ -51,7 +31,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("ORC round-trip preserves values (columnar alternative to parquet)") {
-    val dir = Files.createTempDirectory("graft_orc").toString
+    val dir = suiteTempDir("graft_orc")
     val src = Tables.orders(spark, sf)
     src.write.mode("overwrite").orc(dir)
     val back = spark.read.orc(dir)
@@ -61,7 +41,7 @@ class FormatsSpec extends SparkSpec {
   }
 
   test("malformed JSON lines drop under DROPMALFORMED, parse as null via from_json") {
-    val dir = Files.createTempDirectory("graft_badjson").toString
+    val dir = suiteTempDir("graft_badjson")
     // note: trailing garbage ({"a":2}x) would still parse — Spark's
     // Jackson parser stops at the end of the first complete value
     val lines = Seq("""{"a": 1}""", """x{"a": 2}""", """not json""", """{"a": 3}""")

@@ -191,8 +191,8 @@ class LayoutSpec extends SparkSpec {
     assert(const == Seq(0L), s"zero-span domain must not NaN/throw: $const")
   }
 
-  test("clusteredWrite produces disjoint z-ranges across files") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_zw").toString
+  test("a z-value range layout produces disjoint z-ranges across files") {
+    val dir = suiteTempDir("graft_zw")
     val ev = graft.sources.Tables.events(spark, sf)
       .select(col("event_id"), col("user_id"), unix_micros(col("ts")).as("us"))
     val bounds = ev.agg(min($"user_id").as("lo_u"), max($"user_id").as("hi_u"),
@@ -201,8 +201,9 @@ class LayoutSpec extends SparkSpec {
       .withColumn("z", ZOrder.interleaveBits(
         ZOrder.quantize($"user_id", $"lo_u", $"hi_u", 256),
         ZOrder.quantize($"us", $"lo_t", $"hi_t", 256), 8))
-    ZOrder.clusteredWrite(withZ.select($"event_id", $"user_id", $"us", $"z"),
-      col("z"), nFiles = 4, path = dir)
+    graft.operators.RangePartition.layout(
+        withZ.select($"event_id", $"user_id", $"us", $"z"), 4, col("z"))
+      .write.mode("overwrite").parquet(dir)
     // read back with file name; z-ranges per file must not overlap
     val back = spark.read.parquet(dir)
       .select(col("z"), input_file_name().as("f"))

@@ -52,19 +52,6 @@ class MaintenanceOpsSpec extends SparkSpec {
     }
   }
 
-  test("compactBytes sizes from listing metadata: one data scan, expected file count") {
-    val in = java.nio.file.Files.createTempDirectory("graft_cb_in").toString
-    val out = java.nio.file.Files.createTempDirectory("graft_cb_out").toString
-    spark.range(0, 1000).repartition(8).write.mode("overwrite").parquet(in)
-    val (bytes, files) = graft.operators.Maintenance.compactBytes(
-      spark, in, out, "parquet", targetBytesPerFile = 1L << 30)
-    assert(bytes > 0L && files === 1, s"expected one compacted file: ($bytes, $files)")
-    assert(spark.read.parquet(out).count() === 1000L)
-    val (_, files2) = graft.operators.Maintenance.compactBytes(
-      spark, in, out, "parquet", targetBytesPerFile = math.max(1L, bytes / 4))
-    assert(files2 >= 2, s"byte-sized split must grow the file count: $files2")
-  }
-
   test("CdcMerge plan has no window sort: latest-per-key is a hash aggregate") {
     val plan = MaintenanceQueries.cdcMergeSnapshot(spark, sf)
       .queryExecution.executedPlan.toString
@@ -84,7 +71,10 @@ class MaintenanceOpsSpec extends SparkSpec {
   test("RangePartition.planBoundaries + assign: near-balanced occupancy within sketch error") {
     val orders = Tables.orders(spark, sf)
     val parts = 8
-    val report = RangePartition.balanceReport(orders, "o_totalprice", parts, err = 0.01)
+    val bounds = RangePartition.planBoundaries(orders, "o_totalprice", parts, err = 0.01)
+    val report = RangePartition.assign(orders, "o_totalprice", bounds)
+      .groupBy($"part_id")
+      .agg(count(lit(1)), min($"o_totalprice"), max($"o_totalprice"))
       .as[(Int, Long, Double, Double)].collect().toSeq
     assert(report.map(_._1).toSet === (0 until parts).toSet, "every partition id occupied")
     val total = report.map(_._2).sum
@@ -104,7 +94,7 @@ class MaintenanceOpsSpec extends SparkSpec {
 
   test("sorted range layout prunes files under a pushed selective filter; arrival order reads everything") {
     val orders = Tables.orders(spark, sf).select($"o_orderkey", $"o_totalprice")
-    val base = java.nio.file.Files.createTempDirectory("graft_zonemap").toString
+    val base = suiteTempDir("graft_zonemap")
     orders.repartition(8).write.parquet(s"$base/unsorted")
     RangePartition.layout(orders, 8, $"o_totalprice")
       .write.parquet(s"$base/sorted")

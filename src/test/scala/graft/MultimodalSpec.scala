@@ -139,23 +139,6 @@ class MultimodalSpec extends SparkSpec {
     assert(got === fallback) // no fmt chunk reachable -> fallback, no hang
   }
 
-  test("withSniffedMeta corrects recognizable payloads, keeps the rest") {
-    // fixture payloads are UTF-8 text -> every row falls back unchanged
-    val before = media.select($"media_id", $"meta").collect().toSet
-    val after = Multimodal.withSniffedMeta(media).toDF()
-      .select($"media_id", $"meta").collect().toSet
-    assert(after === before)
-    // a real PNG row gets its true dimensions through the same operator
-    val img = new java.awt.image.BufferedImage(64, 48,
-      java.awt.image.BufferedImage.TYPE_INT_RGB)
-    val baos = new java.io.ByteArrayOutputStream()
-    javax.imageio.ImageIO.write(img, "png", baos)
-    val one = Seq(Multimodal.MediaRow(1L, "image", baos.toByteArray,
-      Multimodal.MediaMeta(9, 9, 0, 0, "stub"))).toDS().toDF()
-    val sniffed = Multimodal.withSniffedMeta(one).collect().head.meta
-    assert(sniffed.width === 64 && sniffed.height === 48 && sniffed.format === "png")
-  }
-
   test("frame sampling emits one task per 250ms step, video only") {
     val frames = Multimodal.frameSample(media, everyMs = 250)
     val perVideo = frames.groupBy("media_id").count()

@@ -20,7 +20,8 @@ class NoForkLocalFsSpec extends SparkSpec {
   private def fresh(fs: FileSystem): FileSystem = {
     fs.initialize(URI.create("file:///"), new Configuration()); fs
   }
-  private def tmp(tag: String): java.nio.file.Path = Files.createTempDirectory(s"graft_nofork_$tag")
+  private def tmp(tag: String): java.nio.file.Path =
+    java.nio.file.Paths.get(suiteTempDir(s"graft_nofork_$tag"))
 
   /** Relative name -> full unix mode (sticky bit included) of everything under `root`. */
   private def tree(root: java.nio.file.Path): Map[String, Int] = {

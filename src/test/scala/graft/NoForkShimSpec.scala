@@ -9,7 +9,6 @@ import org.apache.avro.generic.{GenericData, GenericDatumWriter, GenericRecord}
 import org.apache.avro.io.EncoderFactory
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
-import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ops.ProfileTransform
 import graft.queries.AvroQueries
@@ -23,10 +22,10 @@ import graft.streaming.StreamingPipeline
   * a restart), the OCF streaming sink and a parquet write must all
   * succeed, read back the right rows, and leave the log empty. The stock
   * local filesystem fails here on its first forked `chmod`. */
-class NoForkShimSpec extends AnyFunSuite {
+class NoForkShimSpec extends SuiteTempDirs {
 
   test("the ingest pipeline, the OCF sink and a parquet write fork no chmod/readlink/ls/stat") {
-    val root = Files.createTempDirectory("graft_nofork_shim").toFile
+    val root = new File(suiteTempDir("graft_nofork_shim"))
     val bin = new File(root, "bin"); bin.mkdirs()
     val log = new File(root, "forks.log"); log.createNewFile()
     for (name <- NoForkShimChild.Shimmed) {

@@ -1,7 +1,5 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
-
 /** The two-PROCESS durable-index receipt (VERDICT r6 next-round 1):
   * the bucketed posting table's "write once EVER" claim depends on
   * bucket metadata surviving the JVM, which an in-memory catalog
@@ -16,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   *    file byte-untouched (same (path, size, mtime) listing), i.e.
   *    no rebuild, no rewrite.
   */
-class PostingIndexCrossJvmSpec extends AnyFunSuite {
+class PostingIndexCrossJvmSpec extends SuiteTempDirs {
 
   private val sf = "/root/testdata/sf0.001"
 
@@ -32,7 +30,7 @@ class PostingIndexCrossJvmSpec extends AnyFunSuite {
     "rows=(\\d+)".r.findFirstMatchIn(line).map(_.group(1).toLong).getOrElse(-1L)
 
   test("a second JVM probes the first JVM's bucketed posting index without a rebuild") {
-    val root = java.nio.file.Files.createTempDirectory("graft_xjvm").toFile
+    val root = new java.io.File(suiteTempDir("graft_xjvm"))
     val wh = new java.io.File(root, "warehouse").getAbsolutePath
     val ms = new java.io.File(root, "metastore").getAbsolutePath
 

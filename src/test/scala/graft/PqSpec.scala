@@ -37,8 +37,9 @@ class PqSpec extends SparkSpec {
 
   test("ADC shortlist + exact rerank reaches recall@10 >= 0.6 vs brute") {
     val queries = emb.filter(col("vec_id") % 50 === 0)
-    val pq = Pq.adcTopK(emb, queries, "vec_id", "embedding",
-        dim = 64, m = 8, k = 16, topK = 10, shortlist = 100)
+    val cb = Pq.codebook(emb, "vec_id", "embedding", dim = 64, m = 8, k = 16)
+    val pq = Pq.adcTopKWithCodes(cb, Pq.encode(emb, cb, "vec_id", "embedding", 64, 8),
+        emb, queries, "vec_id", "embedding", dim = 64, m = 8, topK = 10, shortlist = 100)
       .select(col("query_id"), col("neighbor_id")).collect()
       .groupBy(_.getLong(0)).view.mapValues(_.map(_.getLong(1)).toSet).toMap
     // brute: exact integer-quantized L2 over the full corpus

@@ -121,7 +121,7 @@ class RetrievalSpec extends SparkSpec {
     // suite's shared sf index table. UPPERCASE in the path on purpose:
     // the catalog stores identifiers lowercased, so a case-sensitive
     // sweep prefix would match nothing and silently never sweep
-    val tmp = java.nio.file.Files.createTempDirectory("graft_PIDX_Upper")
+    val tmp = java.nio.file.Paths.get(suiteTempDir("graft_PIDX_Upper"))
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(sf, "documents.parquet"),
       tmp.resolve("documents.parquet"))
@@ -175,39 +175,6 @@ class RetrievalSpec extends SparkSpec {
     assert(got === expected)
   }
 
-  test("streamed posting maintenance: base index + streamed batch (delivered twice) " +
-      "equals the batch rebuild, scores included") {
-    import graft.sources.Tables
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    val idx = tmp("graft_postidx")
-    val docs = Tables.documents(spark, sf)
-    // base index: the historical corpus, partitioned by source
-    RetrievalQueries.postingRows(docs.filter(col("source") =!= "src0"), Seq("source"))
-      .write.mode("overwrite").partitionBy("source").parquet(idx)
-    // stream the fresh crawl batch in TWICE (fresh checkpoints = a full
-    // re-delivery): the dynamic partition overwrite must be idempotent
-    RetrievalQueries.mergePostingsStream(spark, sf, idx, tmp("graft_ck1"), "src0")
-    RetrievalQueries.mergePostingsStream(spark, sf, idx, tmp("graft_ck2"), "src0")
-    val mergedOcc = spark.read.parquet(idx)
-      .select(col("doc_id"), col("t"), col("tf").cast("long").as("tf"))
-    val rebuiltOcc = RetrievalQueries.occOf(docs)
-    assert(mergedOcc.exceptAll(rebuiltOcc).count() === 0 &&
-      rebuiltOcc.exceptAll(mergedOcc).count() === 0,
-      "merged index contents diverged from the batch rebuild")
-    // BM25 scores probed off the merged index == the batch rebuild's
-    val queries = docs.filter(col("doc_id") % 37 === 0)
-      .select(col("doc_id").as("query_id"),
-        explode(array_distinct(graft.functions.TextFunctions.tokens(col("text")))).as("t"))
-    val dlM = RetrievalQueries.dlOf(mergedOcc)
-    val merged = RetrievalQueries.bm25Probe(queries,
-        mergedOcc.filter(col("doc_id") % 37 =!= 0),
-        RetrievalQueries.idfOf(mergedOcc, dlM), RetrievalQueries.dnormOf(dlM), k = 10)
-      .orderBy(col("query_id"), col("rank")).collect().toSeq
-    val rebuilt = RetrievalQueries.bm25TopKOf(docs, col("doc_id") % 37 === 0, k = 10)
-      .orderBy(col("query_id"), col("rank")).collect().toSeq
-    assert(merged === rebuilt, "scores over the merged index diverged from the batch rebuild")
-  }
-
   test("retrieve-and-rerank: output ids come from the lexical candidates, " +
       "reordered by cosine") {
     val cands = RetrievalQueries.bm25TopKOf(
@@ -227,36 +194,6 @@ class RetrievalSpec extends SparkSpec {
       val sims = rs.sortBy(_.getAs[Int]("rank")).map(_.getAs[Double]("sim"))
       assert(sims === sims.sorted.reverse, s"query $q: not ordered by cosine")
     }
-  }
-
-  test("streamed posting maintenance: a source split across micro-batches " +
-      "accumulates (doc-keyed upsert, not partition clobber)") {
-    import graft.sources.Tables
-    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
-    // two single-file parquets of the src0 docs -> maxFilesPerTrigger=1
-    // forces TWO micro-batches over one source partition
-    val flat = tmp("graft_split_docs")
-    val src0 = Tables.documents(spark, sf).filter(col("source") === "src0")
-    Seq(0, 1).foreach { half =>
-      val stage = tmp(s"graft_half$half")
-      src0.filter(col("doc_id") % 2 === half).coalesce(1)
-        .write.mode("overwrite").parquet(stage)
-      val part = java.nio.file.Files.list(java.nio.file.Paths.get(stage))
-        .filter(p => p.getFileName.toString.startsWith("part-") &&
-          p.getFileName.toString.endsWith(".parquet"))
-        .findFirst().get()
-      java.nio.file.Files.move(part,
-        java.nio.file.Paths.get(flat, s"docs$half.parquet"))
-    }
-    val idx = tmp("graft_postidx_split")
-    RetrievalQueries.mergePostingsStream(spark, flat, idx, tmp("graft_cks"), "src0",
-      glob = "docs*.parquet", maxFilesPerTrigger = Some(1))
-    val merged = spark.read.parquet(idx)
-      .select(col("doc_id"), col("t"), col("tf").cast("long").as("tf"))
-    val expected = RetrievalQueries.occOf(src0)
-    assert(merged.exceptAll(expected).count() === 0 &&
-      expected.exceptAll(merged).count() === 0,
-      "a micro-batch clobbered its predecessor's docs in the same partition")
   }
 
   test("mined training pairs: negatives are lexically close but semantically far") {

@@ -121,7 +121,7 @@ class S3IntegrationSpec extends SparkSpec {
     // a bounded file stream of kafka-shaped rows, partitioned like the
     // reference sink's partition=<p>/ layout — checkpoint AND data both
     // on the object store, the production wiring
-    val staged = java.nio.file.Files.createTempDirectory("graft_s3_stage").toString
+    val staged = suiteTempDir("graft_s3_stage")
     val rows = spark.range(0, 20)
       .select(col("id").cast("string").as("key"),
         concat(lit("""{"n":"""), col("id"), lit("}")).as("value"),
@@ -156,7 +156,7 @@ class S3IntegrationSpec extends SparkSpec {
       """{"type":"record","name":"Sunk","namespace":"graft.it","fields":[
         |{"name":"id","type":"long"},{"name":"v","type":"string"}]}"""
         .stripMargin
-    val staged = java.nio.file.Files.createTempDirectory("graft_s3_avro").toString
+    val staged = suiteTempDir("graft_s3_avro")
     val rows = spark.range(0, 50)
       .select(col("id"), concat(lit("v_"), col("id")).as("v"))
     rows.write.mode("overwrite").parquet(staged)

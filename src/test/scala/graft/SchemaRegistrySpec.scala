@@ -358,7 +358,7 @@ class SchemaRegistrySpec extends SparkSpec {
           StructType(Seq(StructField("user", sparkUserType))))
         .select(to_avro_confluent(col("user"), reg.schemaJson, schemaId = reg.id).as("b"))
         .collect().map(_.getAs[Array[Byte]](0))
-      val dir = Files.createTempDirectory("graft_registry_replay").toString
+      val dir = suiteTempDir("graft_registry_replay")
       val tsMicros = Instant.parse("2024-01-01T00:00:00Z").toEpochMilli * 1000L
       KafkaReplay.append(dir, wire.zipWithIndex.map { case (b, i) =>
         KafkaReplay.Record(i % 2, s"id_$i".getBytes, b, tsMicros)

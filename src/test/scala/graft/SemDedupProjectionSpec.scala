@@ -15,10 +15,18 @@ import graft.sources.Tables
 class SemDedupProjectionSpec extends SparkSpec {
   import spark.implicits._
 
+  /** SemDeDup over fresh Lloyd cells of the embeddings fixture. */
+  private def semDedup(nCells: Int, iters: Int, threshold: Double,
+      maxIntraCellPairs: Option[Long] = None): org.apache.spark.sql.DataFrame = {
+    val (_, assigned) = Ivf.buildLloydFlat(
+      Tables.embeddings(spark, sf), "vec_id", "embedding", nCells, iters)
+    Similarity.semDedupFromCells(assigned, "vec_id", "embedding", nCells,
+      threshold, maxIntraCellPairs)
+  }
+
   test("semDedup: dropped rows keep-first invariants and exact dropped set") {
     val emb = Tables.embeddings(spark, sf)
-    val dropped = Similarity.semDedupDropped(emb, "vec_id", "embedding",
-      nCells = 8, iters = 2, threshold = 0.4)
+    val dropped = semDedup(nCells = 8, iters = 2, threshold = 0.4)
       .select($"vec_id", $"cell", $"dup_of", $"sim")
       .as[(Long, Int, Long, Double)].collect()
 
@@ -40,26 +48,21 @@ class SemDedupProjectionSpec extends SparkSpec {
   }
 
   test("semDedup: dup_of is the max-sim (tie lowest-id) earlier neighbor") {
-    val emb = Tables.embeddings(spark, sf)
-    val out = Similarity.semDedupDropped(emb, "vec_id", "embedding",
-      nCells = 8, iters = 2, threshold = 0.4)
+    val out = semDedup(nCells = 8, iters = 2, threshold = 0.4)
     // exactly one row per dropped id
     val perId = out.groupBy($"vec_id").count().filter($"count" > 1).count()
     assert(perId === 0)
   }
 
   test("semDedup: intra-cell pair budget fails loudly with the autoNCells hint") {
-    val emb = Tables.embeddings(spark, sf)
     val e = intercept[IllegalStateException] {
-      Similarity.semDedupDropped(emb, "vec_id", "embedding",
-        nCells = 4, iters = 1, threshold = 0.4,
+      semDedup(nCells = 4, iters = 1, threshold = 0.4,
         maxIntraCellPairs = Some(10L)).count()
     }
     assert(e.getMessage.contains("autoNCells"))
     assert(e.getMessage.contains("budget"))
     // within budget: runs fine
-    val ok = Similarity.semDedupDropped(emb, "vec_id", "embedding",
-      nCells = 4, iters = 1, threshold = 0.4,
+    val ok = semDedup(nCells = 4, iters = 1, threshold = 0.4,
       maxIntraCellPairs = Some(100000L)).count()
     assert(ok >= 0)
   }

@@ -133,28 +133,13 @@ class SimilaritySpec extends SparkSpec {
     val qs = emb.filter($"vec_id" % 50 === 0)
     val brute = Similarity.bruteForceTopK(emb, qs, "vec_id", "embedding", 10)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
-    val ivf = graft.operators.Ivf.topK(emb, qs, "vec_id", "embedding",
-      k = 10, nCells = 16, nProbe = 4)
+    val (cents, assigned) = graft.operators.Ivf.buildLloydFlat(
+      emb, "vec_id", "embedding", nCells = 16)
+    val ivf = graft.operators.Ivf.searchFlat(cents, assigned, qs, "vec_id", "embedding",
+      k = 10, nProbe = 4)
       .select("query_id", "neighbor_id").as[(Long, Long)].collect().toSet
     val recall = (brute & ivf).size.toDouble / brute.size
     assert(recall > 0.2, s"IVF recall@10 too low: $recall")
-  }
-
-  test("IVF persisted index: partition-pruned probe matches in-memory search") {
-    val emb = Tables.embeddings(spark, sf)
-    val qs = emb.filter($"vec_id" % 100 === 0)
-    val index = graft.operators.Ivf.build(emb, "vec_id", "embedding", nCells = 8)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
-    graft.operators.Ivf.writeIndex(index, dir)
-    val mem = graft.operators.Ivf.search(index, qs, "vec_id", "embedding", k = 5, nProbe = 2)
-      .select("query_id", "rank", "neighbor_id").as[(Long, Int, Long)].collect().toSet
-    val idx = graft.operators.Ivf.searchIndexed(spark, dir, index.model, qs,
-      "vec_id", "embedding", k = 5, nProbe = 2)
-    val plan = idx.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"expected partition pruning on cell, plan:\n${plan.take(2000)}")
-    val got = idx.select("query_id", "rank", "neighbor_id").as[(Long, Int, Long)].collect().toSet
-    assert(got === mem)
   }
 
   test("LSH-blocked near-dup recovers most brute-force pairs, no false positives") {
@@ -252,49 +237,6 @@ class SimilaritySpec extends SparkSpec {
     assert(streamed === batch, "stream and batch assignments diverged")
   }
 
-  test("streamed IVF merge: stream-merged index == batch rebuild, probes equal, idempotent") {
-    // the vector-side counterpart of the postings merge spec: a base
-    // index over the existing corpus, a streamed fresh batch merged in
-    // via the cell-partitioned id-keyed upsert, and the result must be
-    // indistinguishable — contents AND ANN probe results — from
-    // rebuilding the whole index in batch; re-delivering the stream
-    // must change nothing (at-least-once delivery, exactly-once index)
-    import org.apache.spark.sql.functions.col
-    val Q = graft.queries.SimilarityQueries
-    val (cents, _) = Q.lloydCellsForTest(spark, sf)
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-    val root = java.nio.file.Files.createTempDirectory("graft_ivf_merge")
-    val indexDir = s"$root/idx"
-    graft.operators.Ivf.assignWithCells(
-        cents, emb.filter(col("vec_id") % 5 =!= 0), "vec_id", "embedding")
-      .write.mode("overwrite").partitionBy("cell").parquet(indexDir)
-    Q.mergeAssignmentsStream(spark, sf, indexDir, s"$root/ck1", mod = 5)
-
-    val rebuilt = graft.operators.Ivf.assignWithCells(cents, emb, "vec_id", "embedding")
-    def cellsOf(df: org.apache.spark.sql.DataFrame): Seq[(Long, Int)] =
-      df.select(col("vec_id"), col("cell")).orderBy(col("vec_id"))
-        .collect().toSeq.map(r => (r.getAs[Long]("vec_id"), r.getAs[Int]("cell")))
-    val want = cellsOf(rebuilt)
-    assert(cellsOf(spark.read.parquet(indexDir)) === want,
-      "stream-merged index contents must equal the batch rebuild")
-
-    // re-delivery: a fresh checkpoint replays the whole batch
-    Q.mergeAssignmentsStream(spark, sf, indexDir, s"$root/ck2", mod = 5)
-    assert(cellsOf(spark.read.parquet(indexDir)) === want,
-      "re-delivered stream must leave the index unchanged")
-
-    // probe equality over the merged on-disk index vs the rebuild
-    def probe(index: org.apache.spark.sql.DataFrame): Seq[(Long, Int, Long)] =
-      graft.operators.Ivf.searchFlat(cents, index,
-          emb.filter(col("vec_id") % 50 === 0), "vec_id", "embedding",
-          k = 10, nProbe = 4)
-        .select(col("query_id"), col("rank"), col("neighbor_id"))
-        .orderBy(col("query_id"), col("rank"))
-        .collect().toSeq.map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    assert(probe(spark.read.parquet(indexDir)) === probe(rebuilt),
-      "ANN results over the stream-merged index must equal the batch-rebuilt index")
-  }
-
   test("lsh bucket plan: occupancy laws + the registered banding's envelope verdict") {
     val plan = graft.queries.SimilarityQueries.simLshBucketPlan(spark, sf)
       .collect().map(r => ((r.getInt(0), r.getInt(1)),
@@ -321,31 +263,19 @@ class SimilaritySpec extends SparkSpec {
       "bucketPlan and candidatePairCount must agree on the same banding")
   }
 
-  test("autoBand: policy law pinned; autoBandPairs output-equals the explicit config") {
+  test("autoBandFrom: policy law pinned over the measured bucket plan") {
     import graft.queries.SimilarityQueries.bucketPlanConfigs
     val emb = graft.sources.Tables.embeddings(spark, sf)
-    val budget = 4000000L
-    val choice = graft.operators.Similarity.autoBand(
-      emb, "vec_id", "embedding", bucketPlanConfigs, budget)
+    val plan = graft.operators.Similarity.bucketPlan(
+      emb, "vec_id", "embedding", bucketPlanConfigs, budget = 4000000L)
+    val choice = graft.operators.Similarity.autoBandFrom(plan)
     // the policy, recomputed from the measured table: within-budget
     // first, then max mass, ties to fewer bands/bits
-    val rows = graft.operators.Similarity.bucketPlan(
-      emb, "vec_id", "embedding", bucketPlanConfigs, budget)
-      .collect().map(r => ((r.getInt(0), r.getInt(1)), (r.getLong(2), r.getBoolean(3))))
+    val rows = plan.collect()
+      .map(r => ((r.getInt(0), r.getInt(1)), (r.getLong(2), r.getBoolean(3))))
     val expected = rows.minBy { case ((b, bits), (mass, ok)) => (!ok, -mass, b, bits) }._1
-    assert(choice === expected, "autoBand must implement the documented policy")
+    assert(choice === expected, "autoBandFrom must implement the documented policy")
     assert(rows.toMap.apply(choice)._2, "fixture choice must be within budget")
-    // the auto path changes WHICH config runs, never what a config
-    // computes: pair set identical to spelling the chosen config out
-    val auto = graft.operators.Similarity.autoBandPairs(
-      emb, "vec_id", "embedding", threshold = 0.4, bucketPlanConfigs, budget,
-      md5Planes = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val explicit = graft.operators.Similarity.nearDupPairsLsh(
-      emb, "vec_id", "embedding", threshold = 0.4,
-      bands = choice._1, bitsPerBand = choice._2, md5Planes = true)
-      .select("id_a", "id_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(auto === explicit, "autoBandPairs must equal the explicit chosen config")
   }
 
   test("autoBand: the choice MOVES when the corpus grows against a fixed budget") {
@@ -366,15 +296,16 @@ class SimilaritySpec extends SparkSpec {
     // budget = the 1x table's max mass: every config feasible at 1x, so
     // the 1x choice is the global recall-max config...
     val budget = m1.values.max
-    val choice1 = graft.operators.Similarity.autoBand(
-      emb1, "vec_id", "embedding", bucketPlanConfigs, budget)
+    def choice(df: org.apache.spark.sql.DataFrame): (Int, Int) =
+      graft.operators.Similarity.autoBandFrom(graft.operators.Similarity.bucketPlan(
+        df, "vec_id", "embedding", bucketPlanConfigs, budget))
+    val choice1 = choice(emb1)
     assert(m1(choice1) === budget, "1x choice must be the max-mass config")
     // ...and the 2x corpus must price that config out while leaving a
     // finer config affordable (fixture sanity, then the move itself)
     assert(mK(choice1) > budget, s"2x mass of $choice1 should exceed $budget")
     assert(mK.values.min <= budget, "some finer config must stay affordable at 2x")
-    val choiceK = graft.operators.Similarity.autoBand(
-      embK, "vec_id", "embedding", bucketPlanConfigs, budget)
+    val choiceK = choice(embK)
     assert(choiceK !== choice1,
       s"choice must move under corpus growth: still $choice1 (mass ${mK(choice1)} > $budget)")
     assert(mK(choiceK) <= budget, "moved choice must be within budget on the 2x corpus")
@@ -391,9 +322,9 @@ class SimilaritySpec extends SparkSpec {
         maxCandidatePairs = Some(budget)).count()
     }
     assert(e.getMessage.contains("candidate budget exceeded"))
-    val autoPairs = graft.operators.Similarity.autoBandPairs(
-      embK, "vec_id", "embedding", threshold = 0.4, bucketPlanConfigs, budget,
-      md5Planes = true)
+    val autoPairs = graft.operators.Similarity.nearDupPairsLsh(
+      embK, "vec_id", "embedding", threshold = 0.4,
+      bands = choiceK._1, bitsPerBand = choiceK._2, md5Planes = true)
     val mass = graft.operators.Similarity.candidatePairCount(
       embK, "vec_id", "embedding", choiceK._1, choiceK._2, md5Planes = true)
     assert(mass <= budget, "auto-chosen banding must enumerate within budget at 2x")
@@ -404,31 +335,15 @@ class SimilaritySpec extends SparkSpec {
     val table = graft.queries.SimilarityQueries.queries("sim_neardup_autoband")(spark, sf)
     val emb = graft.sources.Tables.embeddings(spark, sf)
     import graft.queries.SimilarityQueries.bucketPlanConfigs
-    val (b, bits) = graft.operators.Similarity.autoBand(
-      emb, "vec_id", "embedding", bucketPlanConfigs, budget = 4000000L)
+    val (b, bits) = graft.operators.Similarity.autoBandFrom(
+      graft.operators.Similarity.bucketPlan(
+        emb, "vec_id", "embedding", bucketPlanConfigs, budget = 4000000L))
     val explicit = graft.operators.Similarity.nearDupPairsLsh(
       emb, "vec_id", "embedding", threshold = 0.4,
       bands = b, bitsPerBand = bits, md5Planes = true)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val auto = table.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(auto === explicit)
-  }
-
-  test("autoBandPairs arms the budget guard when NO config fits (r15)") {
-    import graft.operators.Similarity
-    val emb = graft.sources.Tables.embeddings(spark, sf)
-    // budget 1: every config's measured mass exceeds it, so the planner
-    // cannot make the budget decision — the run must fail with the
-    // re-banding suggestion instead of silently enumerating over-budget
-    val ex = intercept[IllegalStateException] {
-      Similarity.autoBandPairs(emb, "vec_id", "embedding", threshold = 0.4,
-        configs = Seq((6, 3), (8, 4)), budget = 1L, md5Planes = true).count()
-    }
-    assert(ex.getMessage.contains("budget"))
-    // with a workable budget the same call runs clean
-    assert(Similarity.autoBandPairs(emb, "vec_id", "embedding", threshold = 0.4,
-      configs = Seq((6, 3), (8, 4)), budget = 4000000L, md5Planes = true)
-      .count() > 0L)
   }
 
   test("null embedding vectors produce no candidates, not a shared junk bucket (r15)") {

@@ -92,7 +92,7 @@ class SortedNeighborhoodSpec extends SparkSpec {
     // The multipass query's defining case.
     def pairs(q: (org.apache.spark.sql.SparkSession, String) =>
         org.apache.spark.sql.DataFrame): Set[(Long, Long)] = {
-      val dir = java.nio.file.Files.createTempDirectory("snm_mp").toString
+      val dir = suiteTempDir("snm_mp")
       val parts = names(80, seed = 5) :+ (900L, "blue bolt") :+ (901L, "zlue bolt")
       parts.toDF("p_partkey", "p_name").write.mode("overwrite")
         .parquet(s"$dir/part.parquet")

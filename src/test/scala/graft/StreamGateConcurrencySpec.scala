@@ -17,7 +17,7 @@ class StreamGateConcurrencySpec extends SparkSpec {
 
   test("concurrent gate streams never cross checkpoints and all complete") {
     val n = 6
-    val src = java.nio.file.Files.createTempDirectory("gate_conc_src").toString
+    val src = suiteTempDir("gate_conc_src")
     spark.range(0, 1000).select(
       col("id"), (col("id") % 7).as("k"),
       // event-time column so each stream is STATEFUL (watermark + window

@@ -314,72 +314,18 @@ class StreamingSpec extends SparkSpec {
     assert(settled()(1L) === ((4L, true)), "late row must not refold")
   }
 
-  test("incremental materialized aggregate: versioned folds, snapshot = global agg") {
-    val stateDir = suiteTempDir("graft_incr")
-    val ckpt = suiteTempDir("graft_incr_ck")
-    val stream = MemoryStream[Ev]
-    def run(): Unit = {
-      val q = StreamingPipeline.incrementalTotals(stream.toDF(), "user_id", "value",
-        stateDir, ckpt).start()
-      q.awaitTermination()
-    }
-    stream.addData(ev(0, "a", 1.0, 1L), ev(1, "a", 2.0, 1L), ev(2, "b", 3.0, 2L))
-    run()
-    stream.addData(ev(3, "a", 4.0, 1L), ev(4, "c", 5.0, 3L))
-    run()
-    val dirs = new java.io.File(stateDir).listFiles().filter(_.isDirectory)
-      .map(_.getName).sorted
-    assert(dirs.toSeq === Seq("v=0", "v=1"))
-    val snap = StreamingPipeline.currentTotals(spark, stateDir).get
-      .orderBy("user_id").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Double]("total"),
-        r.getAs[Long]("n_events")))
-    assert(snap.toSeq === Seq((1L, 7.0, 3L), (2L, 3.0, 1L), (3L, 5.0, 1L)))
-    // v=0 still holds the first snapshot untouched (version isolation)
-    val v0 = spark.read.parquet(s"$stateDir/v=0")
-      .orderBy("user_id").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Double]("total")))
-    assert(v0.toSeq === Seq((1L, 3.0), (2L, 3.0)))
-    // bounded version tail (r15): replay of batch B only ever reads
-    // v=B-1, so older committed versions are swept — a continuous
-    // deployment must not write one full snapshot per micro-batch forever
-    stream.addData(ev(5, "a", 1.0, 1L)); run() // batch 2
-    stream.addData(ev(6, "a", 1.0, 1L)); run() // batch 3
-    stream.addData(ev(7, "a", 1.0, 1L)); run() // batch 4
-    val dirs2 = new java.io.File(stateDir).listFiles().filter(_.isDirectory)
-      .map(_.getName).sorted
-    assert(dirs2.toSeq === Seq("v=2", "v=3", "v=4"),
-      s"expected a bounded version tail, got ${dirs2.toSeq}")
-    val snap2 = StreamingPipeline.currentTotals(spark, stateDir).get
-      .orderBy("user_id").collect()
-      .map(r => (r.getAs[Long]("user_id"), r.getAs[Double]("total"),
-        r.getAs[Long]("n_events")))
-    assert(snap2.toSeq === Seq((1L, 10.0, 6L), (2L, 3.0, 1L), (3L, 5.0, 1L)),
-      "the swept tail must not change the current snapshot")
-    // a FOREIGN non-numeric v= dir (user artifact) must not wedge the
-    // sink or the reader — toLongOption in every v= parse (r17 review):
-    // the incarnation sweep, the retention sweep, and the version scan
-    // all skip it rather than throw, and it is left untouched
-    val foreign = new java.io.File(stateDir, "v=backup")
-    assert(foreign.mkdir())
-    stream.addData(ev(8, "a", 1.0, 1L)); run() // batch 5 commits fine
-    val snap3 = StreamingPipeline.currentTotals(spark, stateDir).get
-      .filter(col("user_id") === 1L).collect()
-      .map(r => (r.getAs[Double]("total"), r.getAs[Long]("n_events")))
-    assert(snap3.toSeq === Seq((11.0, 7L)))
-    assert(foreign.isDirectory, "the foreign dir must be left alone")
-  }
-
   test("watermarked tumbling window matches batch aggregation") {
     val stream = MemoryStream[Ev]
     val data = Seq(ev(1, "a", 1.0), ev(5, "a", 2.0), ev(61, "a", 4.0), ev(62, "b", 8.0))
     stream.addData(data: _*)
-    val agg = StreamingPipeline.windowedCounts(stream.toDF(), "ts", "10 minutes", "1 hour")
+    val agg = stream.toDF().withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "1 hour").as("w"), $"event_type")
+      .agg(count(lit(1)).as("n"), sum($"value").as("sum_value"))
     val q = agg.writeStream.format("memory").queryName("win_out")
       .outputMode("complete").start()
     q.processAllAvailable(); q.stop()
     val got = spark.table("win_out")
-      .select("window_start", "event_type", "n", "sum_value")
+      .select("w.start", "event_type", "n", "sum_value")
       .as[(Timestamp, String, Long, Double)].collect().toSet
     val h0 = Timestamp.from(Instant.parse("2024-01-01T00:00:00Z"))
     val h1 = Timestamp.from(Instant.parse("2024-01-01T01:00:00Z"))
@@ -389,8 +335,8 @@ class StreamingSpec extends SparkSpec {
   test("sliding windows assign events to every overlapping window") {
     val stream = MemoryStream[Ev]
     stream.addData(ev(10, "a", 1.0)) // 00:10 → windows [23:20-00:20]...[00:00-01:00] at 20m slide
-    val agg = StreamingPipeline.windowedCounts(stream.toDF(), "ts", "10 minutes",
-      "1 hour", slide = Some("20 minutes"))
+    val agg = stream.toDF().withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "1 hour", "20 minutes"), $"event_type").count()
     val q = agg.writeStream.format("memory").queryName("slide_out")
       .outputMode("complete").start()
     q.processAllAvailable(); q.stop()
@@ -402,18 +348,20 @@ class StreamingSpec extends SparkSpec {
     val stream = MemoryStream[Ev]
     // user 1: events at 0,10,20 (one session), then 60 (new session)
     stream.addData(ev(0, "a", 1.0), ev(10, "a", 1.0), ev(20, "a", 1.0), ev(60, "a", 1.0))
-    val agg = StreamingPipeline.sessionCounts(stream.toDF(), "ts", "10 minutes", "30 minutes")
+    val agg = stream.toDF().withWatermark("ts", "10 minutes")
+      .groupBy(session_window($"ts", "30 minutes"), $"user_id").count()
     val q = agg.writeStream.format("memory").queryName("sess_out")
       .outputMode("complete").start()
     q.processAllAvailable(); q.stop()
-    val got = spark.table("sess_out").select("user_id", "n_events")
+    val got = spark.table("sess_out").select("user_id", "count")
       .as[(Long, Long)].collect().sorted
     assert(got === Array((1L, 1L), (1L, 3L)))
   }
 
   test("late data beyond the watermark horizon is dropped (ST3)") {
     val stream = MemoryStream[Ev]
-    val agg = StreamingPipeline.windowedCounts(stream.toDF(), "ts", "10 minutes", "1 hour")
+    val agg = stream.toDF().withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "1 hour"), $"event_type").count()
     val q = agg.writeStream.format("memory").queryName("late_out")
       .outputMode("append").start()
     // batch 1 advances the watermark to 03:00 - 10m = 02:50
@@ -432,7 +380,8 @@ class StreamingSpec extends SparkSpec {
 
   test("append-mode window state is evicted by the watermark (bounded state)") {
     val stream = MemoryStream[Ev]
-    val agg = StreamingPipeline.windowedCounts(stream.toDF(), "ts", "10 minutes", "1 hour")
+    val agg = stream.toDF().withWatermark("ts", "10 minutes")
+      .groupBy(window($"ts", "1 hour"), $"event_type").count()
     val q = agg.writeStream.format("memory").queryName("evict_out")
       .outputMode("append").start()
     val stateSizes = scala.collection.mutable.ArrayBuffer[Long]()
@@ -459,7 +408,7 @@ class StreamingSpec extends SparkSpec {
   test("dropDuplicatesWithinWatermark removes in-horizon duplicates") {
     val stream = MemoryStream[Ev]
     stream.addData(ev(1, "dup", 1.0, 7L), ev(2, "dup", 2.0, 7L), ev(3, "uniq", 3.0, 8L))
-    val dd = StreamingPipeline.dedupWithinWatermark(stream.toDF(), Seq("user_id"), "ts", "1 hour")
+    val dd = stream.toDF().withWatermark("ts", "1 hour").dropDuplicatesWithinWatermark("user_id")
     val q = dd.writeStream.format("memory").queryName("dd_out")
       .outputMode("append").start()
     q.processAllAvailable(); q.stop()
@@ -694,99 +643,6 @@ class StreamingSpec extends SparkSpec {
     stream.addData(ev(3, "c", 3.0))
     val q3 = mk(); q3.processAllAvailable(); q3.stop()
     assert(spark.read.json(out).count() === 3)
-  }
-
-  test("flatMapGroupsWithState carries per-user totals across micro-batches") {
-    import graft.streaming.{UserEvent, UserTotal}
-    val stream = MemoryStream[UserEvent]
-    val totals = StreamingPipeline.runningUserTotals(stream.toDS())
-    val q = totals.writeStream.format("memory").queryName("state_out")
-      .outputMode("append").start()
-    stream.addData(UserEvent(1L, 1.0), UserEvent(1L, 2.0), UserEvent(2L, 5.0))
-    q.processAllAvailable()
-    stream.addData(UserEvent(1L, 4.0)) // second batch: state must carry over
-    q.processAllAvailable(); q.stop()
-    val byUser = spark.table("state_out").as[UserTotal].collect()
-      .groupBy(_.user_id).map { case (k, vs) => k -> vs.maxBy(_.n_events) }
-    assert(byUser(1L).n_events === 3L && byUser(1L).total_value === 7.0)
-    assert(byUser(2L).n_events === 1L && byUser(2L).total_value === 5.0)
-  }
-
-  test("streaming LSH candidates match batch candidates across micro-batches") {
-    import graft.functions.TextFunctions
-    import graft.operators.Dedup
-    val docs = graft.sources.Tables.documents(spark, sf)
-      .select($"doc_id", $"text").limit(200).as[(Long, String)].collect()
-
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.streamingLshCandidates(
-        stream.toDF().toDF("doc_id", "text"), "doc_id", "text")
-      .writeStream.format("memory").queryName("slsh_out")
-      .outputMode("append").start()
-    stream.addData(docs.take(100).toSeq: _*); q.processAllAvailable()
-    stream.addData(docs.drop(100).toSeq: _*); q.processAllAvailable(); q.stop()
-    val streamed = spark.table("slsh_out")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-
-    val df = docs.toSeq.toDF("doc_id", "text")
-    val withSig = df
-      .select($"doc_id".as("id"), TextFunctions.shingles($"text", 3).as("sh"))
-      .filter(size($"sh") > 0)
-      .withColumn("sig", Dedup.minhashSignatureMd5($"sh", 16))
-    val batch = Dedup.lshCandidates(withSig, "id", "sig",
-        bands = 4, rowsPerBand = 4, useMd5 = true)
-      .as[(Long, Long)].collect().toSet
-    assert(streamed === batch)
-    assert(streamed.nonEmpty, "fixture produced no candidate pairs")
-  }
-
-  test("idle-timeout evicts per-user running totals (bounded keyed state)") {
-    import graft.streaming.{UserEvent, UserTotal}
-    // NOTE: with ProcessingTimeTimeout the engine keeps scheduling
-    // timer-check batches, so the query is never "idle" and
-    // processAllAvailable would block forever — poll the sink with a
-    // deadline instead.
-    def await(cond: () => Boolean, what: String, timeoutMs: Long = 60000): Unit = {
-      val deadline = System.currentTimeMillis + timeoutMs
-      while (!cond() && System.currentTimeMillis < deadline) Thread.sleep(100)
-      assert(cond(), s"timed out waiting for $what")
-    }
-    def rows(): Seq[UserTotal] = spark.table("ttl_evict_out").as[UserTotal].collect().toSeq
-    val stream = MemoryStream[UserEvent]
-    val totals = StreamingPipeline.runningUserTotals(
-      stream.toDS(), idleTimeout = Some("50 milliseconds"))
-    val q = totals.writeStream.format("memory").queryName("ttl_evict_out")
-      .outputMode("append").start()
-    try {
-      stream.addData(UserEvent(1L, 1.0), UserEvent(1L, 2.0))
-      await(() => rows().exists(t => t.user_id == 1L && t.n_events == 2L), "u1 total")
-      Thread.sleep(500) // let the timeout mature; timer batches fire it
-      stream.addData(UserEvent(2L, 9.0))
-      await(() => rows().exists(_.user_id == 2L), "u2 total")
-      stream.addData(UserEvent(1L, 4.0)) // user 1 returns after eviction
-      await(() => rows().exists(t => t.user_id == 1L && t.total_value == 4.0), "fresh u1")
-    } finally q.stop()
-    val u1 = rows().filter(_.user_id == 1L).map(t => (t.n_events, t.total_value)).toSet
-    // first lifetime: (2, 3.0); fresh state after eviction: (1, 4.0) —
-    // (3, 7.0) would mean state survived the timeout
-    assert(u1 === Set((2L, 3.0), (1L, 4.0)), s"got $u1")
-  }
-
-  test("streaming LSH bucket state saturates at maxBucket (bounded state)") {
-    val stream = MemoryStream[(Long, String)]
-    val q = StreamingPipeline.streamingLshCandidates(
-        stream.toDF().toDF("doc_id", "text"), "doc_id", "text", maxBucket = 5)
-      .writeStream.format("memory").queryName("slsh_cap_out")
-      .outputMode("append").start()
-    // 20 identical docs -> one bucket per band; only the first 5 members
-    // may emit, later arrivals find the bucket saturated
-    stream.addData((1L to 20L).map(i => (i, "the same boilerplate text repeated verbatim every time")): _*)
-    q.processAllAvailable(); q.stop()
-    val pairs = spark.table("slsh_cap_out")
-      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-    assert(pairs.size === 10, s"expected C(5,2)=10 distinct pairs, got ${pairs.size}")
-    val ids = pairs.flatMap(p => Set(p._1, p._2))
-    assert(ids.size <= 5, s"more than maxBucket ids emitted: $ids")
   }
 
   test("tombstone passthrough keeps null-value records alongside live ones (T1)") {

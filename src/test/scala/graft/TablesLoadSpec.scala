@@ -1,6 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.{Files, Path => JPath, Paths}
 import java.util.concurrent.atomic.AtomicInteger
 
 import org.apache.spark.GraftListenerFlush
@@ -71,7 +71,7 @@ class TablesLoadSpec extends SparkSpec {
     assert(fingerprint(loaded) === fingerprint(inferred), path)
   }
 
-  private def tempDir(prefix: String): JPath = Files.createTempDirectory(prefix)
+  private def tempDir(prefix: String): JPath = Paths.get(suiteTempDir(prefix))
 
   /** A Spark-written directory: several part files, `_SUCCESS`, and a
     * non-nullable column carrying field metadata. A hidden file and a

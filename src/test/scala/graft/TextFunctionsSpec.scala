@@ -119,7 +119,8 @@ class TextFunctionsSpec extends SparkSpec {
     // step 2: pairs (aa,a)=1 (a,b)=1 (aa,b)=1 -> tie, 'a b' < 'aa a' asc
     // step 3: [aa,ab] / [aa,b] -> (aa,ab)=1 (aa,b)=1 -> 'aa ab' wins
     val docs = Seq((1L, "aaab"), (2L, "aab")).toDF("doc_id", "text")
-    val m = graft.operators.Bpe.learnMerges(docs, "text", steps = 3)
+    val m = graft.operators.Bpe.mergesDf(spark,
+      graft.operators.Bpe.learn(docs, "text", steps = 3))
       .orderBy("step").collect()
       .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
     assert(m.toSeq === Seq(
@@ -150,7 +151,8 @@ class TextFunctionsSpec extends SparkSpec {
 
   test("BPE merge learning: single-char words contribute no pairs but stay counted") {
     val docs = Seq((1L, "x y x y xy")).toDF("doc_id", "text")
-    val m = graft.operators.Bpe.learnMerges(docs, "text", steps = 1)
+    val m = graft.operators.Bpe.mergesDf(spark,
+      graft.operators.Bpe.learn(docs, "text", steps = 1))
       .collect().map(r => (r.getString(1), r.getLong(3)))
     // only the two-char word 'xy' has a pair
     assert(m.toSeq === Seq(("x y", 1L)))
